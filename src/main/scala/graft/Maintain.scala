@@ -16,8 +16,8 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   *      `.tmp-*` stagings — swept BEFORE the layout vacuum so version
   *      GC never races the reclamation of its own parent directory.
   *      Under `--compact-ivf` a fragmented store republishes coalesced
-  *      as v+1, and a fragmented pre-versioned FLAT home (the r12
-  *      shape) MIGRATES: rows republished as v1, flat dirs reclaimed;
+  *      as v+1. Only `v<N>` versions are read: any other directory
+  *      under a home is left alone and ages out with the home;
   *   2. '''serving layouts''' ([[ServingLayouts.vacuum]]): dedup/ANN
   *      layout homes no process has served from within the retention
   *      window, plus crashed builders' `.stage-*`/`.debris-*` dirs;
@@ -42,7 +42,7 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   *     [--cache-ttl-ms N]
   *     [--scratch-age-ms N]    retention for dead scratch roots (default 7d)
   *     [--compact-ivf]         compact fragmented serving stores (ivf/sq8/pq)
-  *                             before their vacuum; migrates legacy flat homes
+  *                             before their vacuum
   * }}}
   *
   * Prints ONE JSON line of reclaimed counts. Liveness contract: every
@@ -58,8 +58,7 @@ object Maintain {
                     scratchRoots: Int = 0,
                     ivfFragmentation: Option[(Long, Long, Boolean)] = None,
                     sq8Fragmentation: Option[(Long, Long, Boolean)] = None,
-                    pqFragmentation: Option[(Long, Long, Boolean)] = None,
-                    legacyFlatReclaimed: Int = 0) {
+                    pqFragmentation: Option[(Long, Long, Boolean)] = None) {
     def json(corpusDir: String): String = {
       val drift = geometryDrift match {
         case Some((stored, derived, rec)) =>
@@ -74,7 +73,6 @@ object Maintain {
       s"""{"metric":"maintain","corpus":"$corpusDir","ivf_versions_reclaimed":$ivfVersions,""" +
         s""""layouts_reclaimed":$layouts,"snapshot_files_reclaimed":$snapshots,""" +
         s""""cache_dirs_reclaimed":$cacheDirs,"scratch_roots_reclaimed":$scratchRoots,""" +
-        s""""legacy_flat_reclaimed":$legacyFlatReclaimed,""" +
         s""""ivf_geometry":$drift,"ivf_fragmentation":${fragJson(ivfFragmentation)},""" +
         s""""sq8_fragmentation":${fragJson(sq8Fragmentation)},""" +
         s""""pq_fragmentation":${fragJson(pqFragmentation)}}"""
@@ -124,77 +122,33 @@ object Maintain {
 
     // Probe + (under --compact-ivf, when fragmented) compact + version
     // vacuum, PER SERVING STORE — all three families (float ivf, sq8,
-    // pq) carry versioned stores since r16. A pre-versioned FLAT home
-    // (the r12 shape: data dirs at the home top level) is probed the
-    // same way and, when --compact-ivf finds it fragmented, MIGRATED:
-    // its rows republish coalesced as v1 of the versioned store and
-    // the superseded flat dirs are reclaimed. The migration trade is
-    // the vacuum's own: a concurrent server still holding the flat
-    // reader loses its files and rebuilds on its next serve — run on
-    // the owner's cadence. Compaction stays GATED on the probe (r15
-    // review: an unconditional republish would full-rewrite the corpus
-    // per cron tick forever); with the default keepIvfVersions=2 the
+    // pq) carry versioned stores. Compaction stays GATED on the probe
+    // (an unconditional republish would full-rewrite the corpus per
+    // cron tick forever); with the default keepIvfVersions=2 the
     // fragmented version survives one extra cycle for pinned readers —
-    // pass --keep-ivf 1 to reclaim it in the same run.
-    case class StoreSweep(frag: Option[(Long, Long, Boolean)],
-                          versionsReclaimed: Int, legacyReclaimed: Int)
+    // pass --keep-ivf 1 to reclaim it in the same run. A store with no
+    // versions reports no fragmentation; its vacuum still reclaims
+    // crashed-publish `.tmp-*` stagings.
+    case class StoreSweep(frag: Option[(Long, Long, Boolean)], versionsReclaimed: Int)
     def sweepStore(kind: String, storeSub: String, dataSub: String,
-                   legacyDirs: Seq[String],
-                   compact: String => Long,
-                   migrate: (String, String) => Long): StoreSweep =
+                   compact: String => Long): StoreSweep =
       ServingLayouts.existingDirFor(kind, corpusDir) match {
-        case None => StoreSweep(None, 0, 0)
+        case None => StoreSweep(None, 0)
         case Some(home) =>
           val store = s"$home/$storeSub"
-          val versions = graft.ops.Similarity.ivfVersions(spark, store)
-          if (versions.nonEmpty) {
-            val frag = fragOf(countCellFiles(
-              Paths.get(store, f"v${versions.last}%08d", dataSub)))
-            if (compactIvfStore && frag._3) compact(store)
-            StoreSweep(Some(frag),
-              graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions), 0)
-          } else if (Files.isDirectory(Paths.get(home, dataSub))) {
-            val frag = fragOf(countCellFiles(Paths.get(home, dataSub)))
-            var legacy = 0
-            if (compactIvfStore && frag._3) {
-              migrate(home, store)
-              legacyDirs.foreach { d =>
-                val p = Paths.get(home, d)
-                if (Files.exists(p)) {
-                  graft.sources.ServingLayouts.deleteTree(p)
-                  legacy += 1
-                }
-              }
-            }
-            StoreSweep(Some(frag),
-              if (graft.ops.Similarity.ivfVersions(spark, store).nonEmpty)
-                graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions)
-              else 0,
-              legacy)
-          } else if (Files.isDirectory(Paths.get(store))) {
-            // empty versioned store dir: reclaim crashed-publish stagings
-            StoreSweep(None,
-              graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions), 0)
-          } else StoreSweep(None, 0, 0)
+          val frag = graft.ops.Similarity.ivfVersions(spark, store).lastOption
+            .map(v => fragOf(countCellFiles(Paths.get(store, f"v$v%08d", dataSub))))
+          if (compactIvfStore && frag.exists(_._3)) compact(store)
+          StoreSweep(frag,
+            graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions))
       }
 
-    val ivfSweep = sweepStore("ivf", "ivf", "assigned", Nil,
-      s => graft.ops.Similarity.compactIvf(spark, s),
-      (_, _) => 0L) // the float store predates flat layouts — no migration source
+    val ivfSweep = sweepStore("ivf", "ivf", "assigned",
+      s => graft.ops.Similarity.compactIvf(spark, s))
     val sq8Sweep = sweepStore("sq8", "ivf", "assigned",
-      Seq("assigned", "centroids", "_index_version"),
-      s => graft.ops.Similarity.compactIvf(spark, s),
-      (home, store) => graft.ops.Similarity.writeIvfVersioned(
-        graft.ops.Similarity.IvfIndex(
-          spark.read.parquet(s"$home/centroids"),
-          spark.read.parquet(s"$home/assigned")), store))
+      s => graft.ops.Similarity.compactIvf(spark, s))
     val pqSweep = sweepStore("ivfpq", "pq", "codes",
-      Seq("codes", "codebooks", "centroids"),
-      s => graft.ops.Similarity.compactIvfPq(spark, s),
-      (home, store) => {
-        val (c, p, cd) = graft.ops.Similarity.loadIvfPq(spark, home)
-        graft.ops.Similarity.writeIvfPqVersioned(c, p.codebooks, cd, store)
-      })
+      s => graft.ops.Similarity.compactIvfPq(spark, s))
     val frag = ivfSweep.frag
     val ivfReclaimed =
       ivfSweep.versionsReclaimed + sq8Sweep.versionsReclaimed + pqSweep.versionsReclaimed
@@ -229,8 +183,7 @@ object Maintain {
     // The report carries the PRE-sweep fragmentation (the condition
     // that was found and, under --compact-ivf, acted on in this run).
     Report(ivfReclaimed, layoutsReclaimed, snapReclaimed, cacheReclaimed, drift,
-      scratchReclaimed, frag, sq8Sweep.frag, pqSweep.frag,
-      sq8Sweep.legacyReclaimed + pqSweep.legacyReclaimed)
+      scratchReclaimed, frag, sq8Sweep.frag, pqSweep.frag)
   }
 
   def main(args: Array[String]): Unit = {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions.col
   * (one JVM per seed — both knobs are env-scoped by design, see
   * [[graft.ops.Similarity.baseSeed]] and ServingLayouts.root) and print
   * ONE JSON line with the family recall@5 against exact brute force.
-  * tools/r12_sf100.sh loops this across seeds so the sf1 floor margin
-  * rests on a measured distribution, not a single draw.
+  * Loop it across seeds (one JVM each) so the sf1 floor margin rests
+  * on a measured distribution, not a single draw.
   *
   * Usage: runMain graft.SeedCheck <sfDir> [nQueries]
   */

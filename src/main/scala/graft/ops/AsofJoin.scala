@@ -59,7 +59,7 @@ object AsofJoin {
     // Each transformation below is ONE select: a withColumn/foldLeft
     // chain re-runs the analyzer once per column on a growing plan,
     // which made this operator's CONSTRUCTION cost ~100 ms steady-state
-    // (5× the per-query norm — measured by ProfileFixedCost, r17). The
+    // (5× the per-query norm — the build split of graft.Explain). The
     // produced logical plan is expression-identical; only the number of
     // analysis passes changes.
     // align schemas: left gets null payload slots, right gets null left-only slots

@@ -348,15 +348,14 @@ object Similarity {
     *
     * The size signal is the logical plan's sizeInBytes — pure metadata
     * (same statistic the broadcast threshold reads), no job; the
-    * threshold is `spark.graft.lsh.broadcastVerifyMaxBytes`. Strategy
-    * choice never changes the row set — the oracle pins both shapes.
+    * threshold is 128 MB. Strategy choice never changes the row set —
+    * the oracle pins both shapes.
     */
   private def verifyCandidates(base: DataFrame, pairs: DataFrame,
                                threshold: Double): DataFrame = {
-    val maxBytes = base.sparkSession.conf
-      .get("spark.graft.lsh.broadcastVerifyMaxBytes", (128L << 20).toString).toLong
+    val broadcastMaxBytes = 128L << 20
     val small = org.apache.spark.sql.graft.Shims.logicalPlan(base)
-      .stats.sizeInBytes <= maxBytes
+      .stats.sizeInBytes <= broadcastMaxBytes
     def side(df: DataFrame) = if (small) broadcast(df) else df.hint("shuffle_hash")
     pairs
       .join(side(base.select(col("vec_id").as("a_id"), col("v").as("va"),
@@ -1001,7 +1000,7 @@ object Similarity {
     * store-level marker written after the rename could be lost on a
     * crash between publish and marker, or torn by concurrent rebuilds).
     * None writes no marker — readers fall back to the newest version
-    * that carries one (or the legacy store-level file).
+    * that carries one.
     */
   def writeIvfVersioned(index: IvfIndex, path: String,
                         geometryIntent: Option[Boolean] = None): Long = {
@@ -1331,7 +1330,7 @@ object Similarity {
   }
 
   /** Query phase of IVF-PQ, shared by the in-memory composition
-    * ([[knnIvfPq]]) and the persisted layout ([[loadIvfPq]]): coarse
+    * ([[knnIvfPq]]) and the persisted layout ([[loadIvfPqVersioned]]): coarse
     * probe on `centroids`, ADC scoring of `codes` (vec_id, cell,
     * codes), exact rerank of the shortlist against `rerankCorpus` (a
     * [[prepared]] frame — at scale, a point-lookup of the rerank-sized
@@ -1396,13 +1395,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Persist the IVF-PQ serving artifact: coarse centroids + PQ
-    * codebooks (model metadata, tiny) and the code table partitioned by
-    * cell — the layout where a probe reads m BYTES per candidate from
-    * only its probed cells' files. This is the configuration in which
-    * the float corpus is cold storage touched only by the rerank
-    * point-lookup; everything the hot path scans is codes.
-    */
   /** The (vec_id, codes, cell) frame a PQ layout stores — encode every
     * vector against the codebooks and tag it with its coarse cell.
     */
@@ -1410,103 +1402,19 @@ object Similarity {
     encodePq(pq, ivf.assigned)
       .join(ivf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
 
-  def writeIvfPq(ivf: IvfIndex, pq: PqModel, path: String): Unit = {
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    pq.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-    pqCodesOf(ivf, pq)
-      // one file per cell — same fragmentation fix as writeIvfPartitioned
-      // (unshuffled partitionBy writes one sliver per task × cell, and
-      // serving latency becomes file-open overhead)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-  }
-
-  /** Load a [[writeIvfPq]] layout: (centroids, model, codes reader) —
+  /** Read one PQ version directory: (centroids, model, codes reader) —
     * geometry (mSubs, subDim) restored from the codebooks themselves.
     * Compose with [[queryIvfPq]]; the codes reader partition-prunes on
     * cell.
     */
-  def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
-                path: String): (DataFrame, PqModel, DataFrame) = {
+  private def loadIvfPq(spark: SparkSession,
+                        path: String): (DataFrame, PqModel, DataFrame) = {
     val codebooks = spark.read.parquet(s"$path/codebooks")
     val mSubs = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
     val subDim = codebooks.select(size(col("centroid"))).head().getInt(0)
     (spark.read.parquet(s"$path/centroids"),
       PqModel(codebooks, mSubs, subDim),
       spark.read.parquet(s"$path/codes"))
-  }
-
-  /** Append a new embedding batch to a persisted IVF-PQ layout
-    * ([[writeIvfPq]]): assign cells against the STORED coarse
-    * centroids, encode with the STORED codebooks (both are fixed model
-    * metadata — no refit, no touch of existing code files), and append
-    * new code files into only the affected `cell=` directories. The
-    * continuous-ingest shape for the quantized index, symmetric to
-    * [[appendToIvfPartitioned]] — including the redelivery guard: under
-    * `monotoneIds` it is one filter against the layout's stamped
-    * high-water mark (zero stored-id scan, the pending two-phase mark
-    * closing the append/promote crash window with a stats-bounded
-    * narrow anti-join); without the contract it stays the exact
-    * anti-join against the stored vec_id column — a replayed batch
-    * would duplicate code rows, and duplicate candidates can displace
-    * true neighbors in the ADC rerank shortlist. The hwm is MAINTAINED
-    * on every append (one-time stored-max scan for a legacy layout),
-    * so a caller can adopt the contract later without a migration.
-    */
-  def appendToIvfPq(path: String, newEmbeddings: DataFrame,
-                    monotoneIds: Boolean = false): Unit = {
-    val spark = newEmbeddings.sparkSession
-    val (centroids, pq, codes) = loadIvfPq(spark, path)
-    val meta = readIvfMeta(spark, path)
-    val preparedB = prepared(newEmbeddings)
-    val guarded = (if (monotoneIds) meta.hwm else None) match {
-      case Some(h) if straddlesHwm(preparedB, h, path) =>
-        // contract violated — exact anti-join instead of silent row loss
-        preparedB.join(codes.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      case Some(h) =>
-        meta.pending match {
-          case Some(p) if p > h =>
-            // crash window: a prior append may have committed code rows
-            // for ids in (h, p] without promoting hwm — verify exactly
-            // that window (parquet stats prune files whose vec_id range
-            // lies wholly below h); rows ≤ h are provably old
-            preparedB.filter(col("vec_id") > h)
-              .join(codes.select(col("vec_id")).filter(col("vec_id") > h),
-                Seq("vec_id"), "left_anti")
-          case _ => preparedB.filter(col("vec_id") > h)
-        }
-      case None =>
-        preparedB.join(codes.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    }
-    val assigned = assignCells(centroids, guarded, spreadKernel = true).persist()
-    try {
-      val st = assigned.agg(max(col("vec_id")), count(lit(1))).head()
-      if (st.getLong(1) == 0L) {
-        // full redelivery (or empty batch): nothing lands; a pending
-        // mark this guard just verified resolves to its promoted hwm
-        meta.pending match {
-          case Some(p) if meta.hwm.exists(p > _) =>
-            writeIvfMeta(spark, path, meta.copy(hwm = Some(p), pending = None))
-          case _ => ()
-        }
-      } else {
-        val batchMax = st.getLong(0)
-        val storedMax = meta.hwm.orElse(meta.pending).getOrElse {
-          val r = codes.agg(max(col("vec_id"))).head()
-          if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        }
-        val newHwm = math.max(batchMax, storedMax)
-        writeIvfMeta(spark, path, meta.copy(pending = Some(newHwm)))
-        encodePq(pq, assigned)
-          .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-          // one new file per affected cell per batch (see appendToIvfPartitioned)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-        writeIvfMeta(spark, path, meta.copy(
-          version = math.max(0L, meta.version) + 1,
-          hwm = Some(newHwm), pending = None))
-      }
-    } finally assigned.unpersist()
   }
 
   /** Publish a PQ layout (centroids + codebooks + cell-partitioned
@@ -1612,10 +1520,10 @@ object Similarity {
 
 /** Session-scoped ANN SERVING layer — the build-once/serve-many split the
   * FAISS deployment pattern means (train/encode offline, serve online):
-  * the FIRST call per sf-dir builds the index family, persists each in
-  * its cell-partitioned serving layout ([[Similarity.writeIvfPartitioned]]
-  * / [[Similarity.writeIvfPq]] — the same layouts the equivalence specs
-  * prove ≡ in-memory), and caches the loaders; every subsequent call
+  * the FIRST call per sf-dir builds the index family, publishes each as
+  * v1 of its versioned store ([[Similarity.writeIvfVersioned]] /
+  * [[Similarity.writeIvfPqVersioned]] — the same layouts the equivalence
+  * specs prove ≡ in-memory), and caches the loaders; every subsequent call
   * (bench rep, query endpoint hit) runs ONLY the query phase against the
   * stored layout. What gets timed repeatedly is therefore the serving
   * latency — the thing the whole IVF/PQ design argument is about — not a
@@ -1666,39 +1574,22 @@ object AnnServing {
     }
   }
 
-  // ALL THREE serving families serve from a VERSIONED store so the
-  // offline rebuild/compact ops compose with live serving (publish
-  // v+1, flip the cache; pinned readers keep their version directory).
-  // sq8/pq joined float-IVF in r16: their r12 flat layouts could not
-  // be compacted atomically, and the sf100 stores fossilized at 46 k /
-  // 22 k sliver files — the compressed forms served 4-10× SLOWER than
-  // the uncompressed one they exist to beat, pure file-open overhead.
+  // ALL THREE serving families serve from a VERSIONED store — the one
+  // served on-disk format — so the offline rebuild/compact ops compose
+  // with live serving (publish v+1, flip the cache; pinned readers keep
+  // their version directory). Anything else under a home is not read:
+  // a home without versions builds v1 from the corpus.
   private def ivfStore(sfDir: String): String =
     ServingLayouts.dirFor("ivf", sfDir) + "/ivf"
 
-  /** Whether a pre-versioned FLAT layout (the r12 store shape) sits at
-    * `home` with data under `sub` — the migration trigger below.
+  /** Cold-start a versioned store: publish v1 via `build` if no
+    * version exists. Tolerates losing a concurrent cold-start's publish
+    * race: if versions exist after the failure, serve those.
     */
-  private def legacyFlatExists(spark: SparkSession, home: String,
-                               sub: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(home, sub)
-    scala.util.Try(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    ).getOrElse(false)
-  }
-
-  /** Cold-start a versioned store: publish v1 if none exists — from the
-    * home's legacy flat layout when one is present (a pure
-    * cell-coalescing republish of the same rows: migration IS the
-    * compaction, no model refit), else via `build`. Tolerates losing a
-    * concurrent cold-start's publish race the same way servedIvf
-    * always has: if versions exist after the failure, serve those.
-    */
-  private def ensureVersioned(spark: SparkSession, store: String,
-                              publishLegacy: Option[() => Long],
-                              build: () => Long): Unit =
+  private def ensureVersioned(spark: SparkSession, store: String)
+                             (build: => Long): Unit =
     if (Similarity.ivfVersions(spark, store).isEmpty)
-      try publishLegacy.map(_.apply()).getOrElse(build())
+      try build
       catch {
         case NonFatal(e) if Similarity.ivfVersions(spark, store).isEmpty => throw e
         case NonFatal(_) => ()
@@ -1712,8 +1603,8 @@ object AnnServing {
     * today's derivation (r12 advisor). The marker lives INSIDE each
     * version directory (published atomically with it — r13 advisor);
     * versions without one (generic [[rebuildIvf]] publishes) inherit
-    * from the newest older version that has one, then from the legacy
-    * store-level file, then default to derived-intent.
+    * from the newest older version that has one, else default to
+    * derived-intent.
     */
   private[graft] def geometryIntentExplicit(spark: SparkSession,
                                             store: String): Boolean = {
@@ -1729,11 +1620,9 @@ object AnnServing {
         }
       } catch { case _: java.io.IOException => None }
     }
-    val perVersion = Similarity.ivfVersions(spark, store).reverseIterator
+    Similarity.ivfVersions(spark, store).reverseIterator
       .map(v => readMarker(new org.apache.hadoop.fs.Path(store, f"v$v%08d/_geometry_intent")))
       .collectFirst { case Some(b) => b }
-    perVersion.orElse(
-      readMarker(new org.apache.hadoop.fs.Path(store, "_geometry_intent")))
       .getOrElse(false)
   }
 
@@ -1759,20 +1648,13 @@ object AnnServing {
     servedValidated(ivfCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivf", sfDir)
       val store = home + "/ivf"
-      if (Similarity.ivfVersions(spark, store).isEmpty)
-        try
-          // intent is staged inside the version dir → atomic with the
-          // publish; a marker failure now fails the publish instead of
-          // leaving a published version with swallowed intent
-          Similarity.writeIvfVersioned(
-            Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
-              cellsForBuild(spark, sfDir, nCells)), store,
-            geometryIntent = Some(nCells > 0))
-        catch {
-          // a concurrent cold-start won the version-1 publish: serve its index
-          case NonFatal(e) if Similarity.ivfVersions(spark, store).isEmpty => throw e
-          case NonFatal(_) => ()
-        }
+      // intent is staged inside the version dir → atomic with the
+      // publish; a marker failure fails the publish instead of leaving
+      // a published version with swallowed intent
+      ensureVersioned(spark, store)(Similarity.writeIvfVersioned(
+        Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
+          cellsForBuild(spark, sfDir, nCells)), store,
+        geometryIntent = Some(nCells > 0)))
       ServingLayouts.markComplete(home)
       (home, Similarity.loadIvfVersioned(spark, store))
     }
@@ -1830,28 +1712,19 @@ object AnnServing {
 
   /** IVF-SQ8 served from the persisted index over the int8-dequantized
     * corpus; queries keep full float precision (see [[Similarity.knnIvfSq8]]).
-    * Serves the latest version of the versioned store at
-    * `<home>/ivf`; a pre-versioned flat home (the r12 shape) migrates
-    * on first serve — its rows republished coalesced as v1.
+    * Serves the latest version of the versioned store at `<home>/ivf`.
     */
   def knnIvfSq8(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
                 nCells: Int = -1, nProbe: Int = -1): DataFrame = {
     val index = servedValidated(sq8Cache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("sq8", sfDir)
       val store = home + "/ivf"
-      ensureVersioned(spark, store,
-        publishLegacy =
-          if (legacyFlatExists(spark, home, "assigned"))
-            Some(() => Similarity.writeIvfVersioned(IvfIndex(
-              spark.read.parquet(s"$home/centroids"),
-              spark.read.parquet(s"$home/assigned")), store))
-          else None,
-        build = () => {
-          val deq = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
-            .select(col("vec_id"), expr("transform(codes, c -> c * scale)").as("embedding"))
-          Similarity.writeIvfVersioned(
-            Similarity.buildIvf(deq, cellsForBuild(spark, sfDir, nCells)), store)
-        })
+      ensureVersioned(spark, store) {
+        val deq = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
+          .select(col("vec_id"), expr("transform(codes, c -> c * scale)").as("embedding"))
+        Similarity.writeIvfVersioned(
+          Similarity.buildIvf(deq, cellsForBuild(spark, sfDir, nCells)), store)
+      }
       ServingLayouts.markComplete(home)
       (home, Similarity.loadIvfVersioned(spark, store))
     }
@@ -1873,29 +1746,21 @@ object AnnServing {
     val layout = servedValidated(pqCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivfpq", sfDir)
       val store = home + "/pq"
-      ensureVersioned(spark, store,
-        publishLegacy =
-          if (legacyFlatExists(spark, home, "codes"))
-            Some(() => {
-              val (c, p, cd) = Similarity.loadIvfPq(spark, home)
-              Similarity.writeIvfPqVersioned(c, p.codebooks, cd, store)
-            })
-          else None,
-        build = () => {
-          val emb = graft.Tables.embeddings(spark, sfDir)
-          // one count() pays for all build-time derivations (cells +
-          // codebook width + sub-quantizer count); serving reads geometry
-          // back from the layout
-          val n = emb.count()
-          val cells = if (nCells > 0) nCells else graft.ops.LshGeometry.ivf(n)._1
-          val kc = if (kCentroids > 0) kCentroids else graft.ops.LshGeometry.pq(n)
-          val dim = Similarity.prepared(emb).select(size(col("v"))).head().getInt(0)
-          val m = if (mSubs > 0) mSubs else graft.ops.LshGeometry.pqSubs(dim, n)
-          val index = Similarity.buildIvf(emb, cells)
-          val pq = Similarity.trainPq(emb, m, kc)
-          Similarity.writeIvfPqVersioned(index.centroids, pq.codebooks,
-            Similarity.pqCodesOf(index, pq), store)
-        })
+      ensureVersioned(spark, store) {
+        val emb = graft.Tables.embeddings(spark, sfDir)
+        // one count() pays for all build-time derivations (cells +
+        // codebook width + sub-quantizer count); serving reads geometry
+        // back from the layout
+        val n = emb.count()
+        val cells = if (nCells > 0) nCells else graft.ops.LshGeometry.ivf(n)._1
+        val kc = if (kCentroids > 0) kCentroids else graft.ops.LshGeometry.pq(n)
+        val dim = Similarity.prepared(emb).select(size(col("v"))).head().getInt(0)
+        val m = if (mSubs > 0) mSubs else graft.ops.LshGeometry.pqSubs(dim, n)
+        val index = Similarity.buildIvf(emb, cells)
+        val pq = Similarity.trainPq(emb, m, kc)
+        Similarity.writeIvfPqVersioned(index.centroids, pq.codebooks,
+          Similarity.pqCodesOf(index, pq), store)
+      }
       ServingLayouts.markComplete(home)
       (home, {
         val (c, p, cd) = Similarity.loadIvfPqVersioned(spark, store)

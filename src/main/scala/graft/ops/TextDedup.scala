@@ -630,9 +630,10 @@ object TextDedup {
       spark.read.parquet(s"$path/meta").head().getAs[Int]("span_words"))
 
   /** Append a batch's span digests to a persisted [[SpanIndex]] —
-    * the continuous-ingest growth path, symmetric to [[appendToIvfPq]]:
-    * only digests NOT already present are written (anti-join idempotence
-    * guard, so a replayed batch is a no-op), and the append goes through
+    * the continuous-ingest growth path, symmetric to
+    * [[Similarity.appendToIvfPartitioned]]: only digests NOT already
+    * present are written (anti-join idempotence guard, so a replayed
+    * batch is a no-op), and the append goes through
     * the catalog with the SAME bucketing spec, so the no-Exchange join
     * property of the index side survives growth. Cost ∝ batch's distinct
     * new spans.

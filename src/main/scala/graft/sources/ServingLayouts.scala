@@ -342,11 +342,6 @@ object ServingLayouts {
     deleted
   }
 
-  /** Recursive delete, shared with [[graft.Maintain]]'s legacy-flat
-    * reclamation (same local-FS tree-walk the vacuum uses).
-    */
-  private[graft] def deleteTree(p: Path): Unit = deleteRecursively(p)
-
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)

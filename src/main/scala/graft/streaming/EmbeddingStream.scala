@@ -89,10 +89,7 @@ object EmbeddingStream {
         }
         if (autoCompactFilesPerCell > 0) {
           val meta = Similarity.readIvfMeta(spark, indexPath)
-          // files < 0 = legacy layout without a counter: the trigger
-          // stays quiet until a write/compact initializes it
-          if (meta.files >= 0 && nCells > 0 &&
-              meta.files > autoCompactFilesPerCell * nCells)
+          if (nCells > 0 && meta.files > autoCompactFilesPerCell * nCells)
             staged("auto_compact") {
               Similarity.compactIvfFlat(spark, indexPath)
             }

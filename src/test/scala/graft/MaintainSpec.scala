@@ -131,91 +131,76 @@ class MaintainSpec extends SparkSpec {
 
   test("ivf fragmentation signal: a slivered store recommends compaction, a compact one is quiet") {
     val corpus = Files.createTempDirectory("graft_mt_frag").toString
-    val home = ServingLayouts.dirFor("ivf", corpus)
+    // all three serving families: (layout kind, store dir, cell-partitioned data dir)
+    val stores = Seq(("ivf", "ivf", "assigned"), ("sq8", "ivf", "assigned"),
+      ("ivfpq", "pq", "codes"))
+    def writeVersion(kind: String, store: String, data: String, v: Int,
+                     filesPerCell: Int): Unit = {
+      val d = Paths.get(ServingLayouts.dirFor(kind, corpus), store, f"v$v%08d", data)
+      for (c <- 0 until 4) {
+        Files.createDirectories(d.resolve(s"cell=$c"))
+        for (f <- 0 until filesPerCell)
+          Files.write(d.resolve(s"cell=$c/part-$f.parquet"), Array[Byte](1))
+      }
+    }
     // a fragmented latest version: 4 cells x 12 sliver files (the shape
     // continuous ingest leaves without the cell-coalescing write)
-    val v1 = Paths.get(home, "ivf", "v00000001", "assigned")
-    for (c <- 0 until 4) {
-      Files.createDirectories(v1.resolve(s"cell=$c"))
-      for (f <- 0 until 12)
-        Files.write(v1.resolve(s"cell=$c/part-$f.parquet"), Array[Byte](1))
-    }
+    stores.foreach { case (k, st, d) => writeVersion(k, st, d, 1, 12) }
     val r = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue)
-    assert(r.ivfFragmentation === Some((48L, 4L, true)),
-      s"slivered store must recommend compaction, got ${r.ivfFragmentation}")
+    for ((name, f) <- Seq("ivf" -> r.ivfFragmentation, "sq8" -> r.sq8Fragmentation,
+                          "pq" -> r.pqFragmentation))
+      assert(f === Some((48L, 4L, true)),
+        s"slivered $name store must recommend compaction, got $f")
     // a compacted NEWER version (one file per cell) clears the signal —
     // the probe reads the latest version, which is what serving loads
-    val v2 = Paths.get(home, "ivf", "v00000002", "assigned")
-    for (c <- 0 until 4) {
-      Files.createDirectories(v2.resolve(s"cell=$c"))
-      Files.write(v2.resolve(s"cell=$c/part-0.parquet"), Array[Byte](1))
-    }
+    stores.foreach { case (k, st, d) => writeVersion(k, st, d, 2, 1) }
     // --compact-ivf on an already-compact store must SKIP the
-    // republish (r15 review: an ungated compact would full-rewrite the
-    // corpus on every cron tick): these fixture files are not real
-    // parquet, so an attempted compactIvf here would throw — the gate
-    // not throwing IS the assertion, plus no new version appearing
+    // republish (an ungated compact would full-rewrite the corpus on
+    // every cron tick): these fixture files are not real parquet, so
+    // an attempted compaction here would throw — the gate not throwing
+    // IS the assertion, plus no new version appearing
     val r2 = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue,
       compactIvfStore = true)
-    assert(r2.ivfFragmentation === Some((4L, 4L, false)),
-      s"compact latest version must be quiet, got ${r2.ivfFragmentation}")
-    assert(graft.ops.Similarity.ivfVersions(spark,
-        ServingLayouts.dirFor("ivf", corpus) + "/ivf") === Seq(1L, 2L),
-      "an already-compact store must not gain a version from --compact-ivf")
+    for ((name, f) <- Seq("ivf" -> r2.ivfFragmentation, "sq8" -> r2.sq8Fragmentation,
+                          "pq" -> r2.pqFragmentation))
+      assert(f === Some((4L, 4L, false)), s"compact latest $name version must be quiet, got $f")
+    stores.foreach { case (k, st, _) =>
+      assert(Similarity.ivfVersions(spark, ServingLayouts.dirFor(k, corpus) + "/" + st)
+        === Seq(1L, 2L),
+        s"an already-compact $k store must not gain a version from --compact-ivf")
+    }
   }
 
-  test("--compact-ivf migrates fragmented legacy flat sq8/pq homes and reclaims the flat dirs") {
-    // r16 (r15 verdict item 1): the compressed serving stores kept
-    // their pre-versioned FLAT layouts, which nothing could compact —
-    // the sf100 sq8/pq stores fossilized at 46k/22k slivers and served
-    // 4-10× slower than float IVF. Maintain now migrates a fragmented
-    // flat home: republish its rows coalesced as v1 of the versioned
-    // store (no model refit), reclaim the superseded flat dirs.
-    val corpus = Files.createTempDirectory("graft_mt_legacy").toString
-    val emb = Tables.embeddings(spark, sfDir)
-    val index = Similarity.buildIvf(emb, 4)
-    // fragmented flat sq8 home: unshuffled partitionBy sprays one
-    // sliver per (task × cell) — the exact r12 build defect
-    val sq8Home = ServingLayouts.dirFor("sq8", corpus)
-    index.assigned.repartition(16).write.partitionBy("cell").parquet(s"$sq8Home/assigned")
-    index.centroids.write.parquet(s"$sq8Home/centroids")
-    ServingLayouts.markComplete(sq8Home)
-    // fragmented flat pq home over the codes layout
-    val pqHome = ServingLayouts.dirFor("ivfpq", corpus)
-    val pq = Similarity.trainPq(emb, 4, 8)
-    val codes = Similarity.pqCodesOf(index, pq)
-    codes.repartition(16).write.partitionBy("cell").parquet(s"$pqHome/codes")
-    pq.codebooks.write.parquet(s"$pqHome/codebooks")
-    index.centroids.write.parquet(s"$pqHome/centroids")
-    ServingLayouts.markComplete(pqHome)
-    val sq8Rows = spark.read.parquet(s"$sq8Home/assigned").count()
-    val pqRows = spark.read.parquet(s"$pqHome/codes").count()
-
+  test("Maintain leaves a home holding only flat directories alone") {
+    // Only versioned stores are maintained. Data dirs at a home's top
+    // level (the older flat shape) are neither probed, compacted nor
+    // reclaimed: they age out with the home under ServingLayouts.vacuum.
+    // The fixture files are not real parquet, so any read would throw.
+    val corpus = Files.createTempDirectory("graft_mt_flat").toString
+    val flat = Seq(("sq8", Seq("assigned", "centroids")),
+      ("ivfpq", Seq("codes", "codebooks", "centroids")))
+    val written = flat.flatMap { case (kind, dirs) =>
+      val home = ServingLayouts.dirFor(kind, corpus)
+      ServingLayouts.markComplete(home)
+      dirs.flatMap { d =>
+        (0 until 4).flatMap { c =>
+          (0 until 12).map { f =>
+            val p = Paths.get(home, d, s"cell=$c", s"part-$f.parquet")
+            Files.createDirectories(p.getParent)
+            Files.write(p, Array[Byte](1))
+          }
+        }
+      }
+    }
     val r = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue,
       compactIvfStore = true)
-    assert(r.sq8Fragmentation.exists(_._3),
-      s"slivered legacy sq8 home must read as fragmented: ${r.sq8Fragmentation}")
-    assert(r.pqFragmentation.exists(_._3),
-      s"slivered legacy pq home must read as fragmented: ${r.pqFragmentation}")
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
-      "migration publishes the flat rows as v1")
-    assert(Similarity.ivfVersions(spark, s"$pqHome/pq") === Seq(1L))
-    assert(!Files.exists(Paths.get(sq8Home, "assigned")) &&
-      !Files.exists(Paths.get(sq8Home, "centroids")) &&
-      !Files.exists(Paths.get(pqHome, "codes")),
-      "superseded flat dirs are reclaimed in the same run")
-    assert(r.legacyFlatReclaimed >= 5)
-    // row identity through the migration
-    assert(Similarity.loadIvfVersioned(spark, s"$sq8Home/ivf").assigned.count() === sq8Rows)
-    val (_, pqModel, migCodes) = Similarity.loadIvfPqVersioned(spark, s"$pqHome/pq")
-    assert(migCodes.count() === pqRows && pqModel.mSubs === 4)
-    // second run: versioned stores are compact now — quiet signal, no
-    // new version, nothing more to reclaim
-    val r2 = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue,
-      compactIvfStore = true)
-    assert(r2.sq8Fragmentation.exists(!_._3) && r2.pqFragmentation.exists(!_._3))
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L))
-    assert(r2.legacyFlatReclaimed === 0)
+    assert(r.sq8Fragmentation === None && r.pqFragmentation === None,
+      "a home without versions reports no fragmentation")
+    assert(r.ivfVersions === 0)
+    assert(Similarity.ivfVersions(spark, ServingLayouts.dirFor("sq8", corpus) + "/ivf").isEmpty &&
+      Similarity.ivfVersions(spark, ServingLayouts.dirFor("ivfpq", corpus) + "/pq").isEmpty,
+      "maintenance must not publish a version from flat dirs")
+    assert(written.forall(Files.exists(_)), "every flat file is left in place")
   }
 
   test("sweep of a corpus with no serving state reclaims nothing and creates nothing") {

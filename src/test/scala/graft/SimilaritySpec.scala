@@ -5,6 +5,26 @@ import graft.ops.Similarity
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** A private copy of the test corpus's embeddings: serving layouts
+    * are keyed by corpus directory and shared across processes, so a
+    * spec that publishes into a serving store gets a corpus of its own.
+    */
+  private def isolatedCorpus(prefix: String): String = {
+    import java.nio.file.{Files, Path, Paths}
+    val corpus = Files.createTempDirectory(prefix)
+    def copyRec(src: Path, dst: Path): Unit = {
+      if (Files.isDirectory(src)) {
+        Files.createDirectories(dst)
+        val s = Files.list(src)
+        try s.toArray.toSeq.map(_.asInstanceOf[Path])
+          .foreach(c => copyRec(c, dst.resolve(c.getFileName)))
+        finally s.close()
+      } else Files.copy(src, dst)
+    }
+    copyRec(Paths.get(sfDir, "embeddings.parquet"), corpus.resolve("embeddings.parquet"))
+    corpus.toString
+  }
+
   test("brute-force knn: k rows per query, ranked by descending cosine") {
     val out = Similarity.knnBruteForce(Tables.embeddings(spark, sfDir))
       .as[(Long, Long, Double, Long)].collect()
@@ -403,9 +423,10 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val ivf = Similarity.buildIvf(e)
     val pq = Similarity.trainPq(e)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    val (centroids, pqLoaded, codes) = Similarity.loadIvfPq(spark, dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString + "/pq"
+    assert(Similarity.writeIvfPqVersioned(ivf.centroids, pq.codebooks,
+      Similarity.pqCodesOf(ivf, pq), dir) === 1L)
+    val (centroids, pqLoaded, codes) = Similarity.loadIvfPqVersioned(spark, dir)
     assert(pqLoaded.mSubs === pq.mSubs && pqLoaded.subDim === pq.subDim)
     val queries = Similarity.prepared(e).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
@@ -421,106 +442,6 @@ class SimilaritySpec extends SparkSpec {
       .flatMap(_.files)
     assert(files.nonEmpty &&
       files.forall(_.getPath.toString.contains("cell=0")))
-  }
-
-  test("IVF-PQ append encodes against stored models and only adds files") {
-    import org.apache.spark.sql.functions.col
-    val e = Tables.embeddings(spark, sfDir)
-    val initial = e.filter(col("vec_id") % 5 =!= 4)
-    val batch = e.filter(col("vec_id") % 5 === 4)
-    // models trained on the INITIAL corpus only — the realistic shape
-    val ivf = Similarity.buildIvf(initial)
-    val pq = Similarity.trainPq(initial)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_app").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    val before = new java.io.File(s"$dir/codes").listFiles()
-      .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
-      .map(_.getAbsolutePath).toSet
-    Similarity.appendToIvfPq(dir, batch)
-    // existing files untouched, new files appended
-    val after = new java.io.File(s"$dir/codes").listFiles()
-      .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
-      .map(_.getAbsolutePath).toSet
-    assert(before.subsetOf(after) && after.size > before.size)
-    // the grown stored index serves exactly like the in-memory union
-    // encoded with the same fixed models
-    val (centroids, pqL, codes) = Similarity.loadIvfPq(spark, dir)
-    assert(codes.count() === e.count())
-    val grownIvf = Similarity.appendToIvf(ivf, batch)
-    val memCodes = Similarity.encodePq(pq, grownIvf.assigned)
-      .join(grownIvf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val queries = Similarity.prepared(e).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
-    val stored = Similarity.queryIvfPq(centroids, pqL, codes, queries,
-      Similarity.prepared(e), excludeSelf = true).collect().map(_.toSeq).toSeq
-    val mem = Similarity.queryIvfPq(ivf.centroids, pq, memCodes, queries,
-      Similarity.prepared(e), excludeSelf = true).collect().map(_.toSeq).toSeq
-    assert(stored === mem)
-  }
-
-  test("IVF-PQ monotone hwm guard: redelivery is a no-op with zero stored-code scan; crash window dedups") {
-    import org.apache.spark.sql.functions.col
-    // r16: appendToIvfPq gets the same O(batch) redelivery guard as the
-    // float path — under the monotone-producer contract the guard is one
-    // filter vs the stamped hwm (the general anti-join read the FULL
-    // stored vec_id column per batch; at sf100 that is 2 M rows).
-    val e = Tables.embeddings(spark, sfDir)
-    val n = e.count()
-    val initial = e.filter(col("vec_id") < n / 2)
-    val batch = e.filter(col("vec_id") >= n / 2)
-    val ivf = Similarity.buildIvf(initial)
-    val pq = Similarity.trainPq(initial)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_hwm").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
-    val m1 = Similarity.readIvfMeta(spark, dir)
-    assert(m1.hwm === Some(n - 1) && m1.pending.isEmpty,
-      "the first monotone append must initialize and promote the hwm")
-    assert(spark.read.parquet(s"$dir/codes").count() === n)
-    // lost checkpoint → full redelivery: the guard must no-op from the
-    // sidecar alone, scanning ZERO stored code rows
-    val scannedRows = new java.util.concurrent.atomic.AtomicLong(0)
-    val tap = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def walk(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a +: walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: walk(q.plan)
-        case other => other +: (other.children ++ other.subqueries).flatMap(walk)
-      }
-      override def onSuccess(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit =
-        walk(qe.executedPlan).foreach {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains(s"$dir/codes")) =>
-            scannedRows.addAndGet(s.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
-          case _ => ()
-        }
-      override def onFailure(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(tap)
-    try {
-      Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
-      Thread.sleep(2000) // listener delivery is async
-    } finally spark.listenerManager.unregister(tap)
-    assert(spark.read.parquet(s"$dir/codes").count() === n, "redelivery must be a no-op")
-    assert(scannedRows.get() === 0L,
-      s"the hwm guard must not scan stored codes on redelivery, scanned ${scannedRows.get()}")
-    // crash AFTER data commit, BEFORE promote: pending staked, rows on
-    // disk — redelivery verifies exactly the (h, hwm] window, no dupes
-    val done = Similarity.readIvfMeta(spark, dir)
-    Similarity.writeIvfMeta(spark, dir,
-      done.copy(hwm = Some(n / 2 - 1), pending = Some(n - 1)))
-    Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
-    val codes = spark.read.parquet(s"$dir/codes")
-    assert(codes.count() === n && codes.select("vec_id").distinct().count() === n,
-      "no duplicate code rows after crash-window redelivery")
-    val resolved = Similarity.readIvfMeta(spark, dir)
-    assert(resolved.hwm === Some(n - 1) && resolved.pending.isEmpty,
-      "the verified pending mark must promote into hwm")
   }
 
   test("recall report scores every served family with consistent counts and sane floors") {
@@ -691,26 +612,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("served-IVF rebuild flips the serving layer to the new quantizer") {
     import graft.ops.AnnServing
-    import java.nio.file.{Files, Path, Paths}
     // ISOLATED corpus home: since round 10 serving layouts are stable
     // ACROSS processes (ServingLayouts), so publishing retrained
     // versions into the shared sfDir store would leak a non-v1
     // quantizer into every later test RUN (the cell-stats determinism
     // spec compares the served index against a fresh seeded build).
     // Rebuild-lifecycle tests therefore get their own corpus copy.
-    val corpus = Files.createTempDirectory("graft_rebuild_corpus")
-    def copyRec(src: Path, dst: Path): Unit = {
-      if (Files.isDirectory(src)) {
-        Files.createDirectories(dst)
-        val s = Files.list(src)
-        try s.toArray.toSeq.map(_.asInstanceOf[Path])
-          .foreach(c => copyRec(c, dst.resolve(c.getFileName)))
-        finally s.close()
-      } else Files.copy(src, dst)
-    }
-    copyRec(Paths.get(sfDir, "embeddings.parquet"),
-      corpus.resolve("embeddings.parquet"))
-    val dir = corpus.toString
+    val dir = isolatedCorpus("graft_rebuild_corpus")
     val e = Tables.embeddings(spark, dir)
     // serve first (16 cells), then act on the drift signal: retrain to 8
     val before = AnnServing.ivfCellStats(spark, dir).count()
@@ -790,73 +698,51 @@ class SimilaritySpec extends SparkSpec {
     assert(AnnServing.ivfGeometryDrift(spark, dir) === Some((expect, expect, false)))
   }
 
-  test("legacy flat sq8/pq stores migrate to versioned on first serve, row-identically") {
+  test("a home holding only flat directories serves from a fresh v1 like a clean home") {
     import graft.ops.AnnServing
     import graft.sources.ServingLayouts
-    import org.apache.spark.sql.functions.col
-    // r16: the compressed serving families joined float-IVF's versioned
-    // store (the r12 flat layouts could not be compacted atomically and
-    // fossilized at 46k/22k slivers at sf100). A pre-versioned flat
-    // home must keep serving: first serve republishes its rows
-    // coalesced as v1 — migration IS the compaction, no model refit —
-    // and the results are the flat layout's own, row for row.
-    val corpus = java.nio.file.Files.createTempDirectory("graft_migr_corpus")
-    def copyRec(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(src)) {
-        java.nio.file.Files.createDirectories(dst)
-        val s = java.nio.file.Files.list(src)
-        try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-          .foreach(c => copyRec(c, dst.resolve(c.getFileName)))
-        finally s.close()
-      } else java.nio.file.Files.copy(src, dst)
-    }
-    copyRec(java.nio.file.Paths.get(sfDir, "embeddings.parquet"),
-      corpus.resolve("embeddings.parquet"))
-    val dir = corpus.toString
-    val e = Tables.embeddings(spark, dir)
-    val queries = Similarity.prepared(e).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
-
-    // ---- sq8: fabricate the legacy flat home (the r12 store shape) ----
-    val sq8Home = ServingLayouts.dirFor("sq8", dir)
-    val deq = Similarity.quantizeInt8(e)
-      .select(col("vec_id"),
-        org.apache.spark.sql.functions.expr("transform(codes, c -> c * scale)").as("embedding"))
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(deq, 16), sq8Home)
+    import java.nio.file.{Files, Paths}
+    // The versioned store is the one served format: data dirs at a
+    // home's top level (the older flat shape) are never read. Such a
+    // home serves exactly like a clean one — v1 built from the corpus
+    // with the same seed and geometry — and its flat dirs stay inert
+    // until the home ages out under ServingLayouts.vacuum.
+    val cleanDir = isolatedCorpus("graft_clean_corpus")
+    val flatDir = isolatedCorpus("graft_flat_corpus")
+    val e = Tables.embeddings(spark, flatDir)
+    // flat sq8 and pq homes at a geometry no fresh build picks here
+    val index = Similarity.buildIvf(e, 4)
+    val pq = Similarity.trainPq(e, 4, 8)
+    val sq8Home = ServingLayouts.dirFor("sq8", flatDir)
+    index.assigned.write.partitionBy("cell").parquet(s"$sq8Home/assigned")
+    index.centroids.write.parquet(s"$sq8Home/centroids")
     ServingLayouts.markComplete(sq8Home)
-    val sq8Expected = Similarity.queryIvf(Similarity.loadIvfFlat(spark, sq8Home),
-      queries, 5, graft.ops.LshGeometry.ivfProbe(16), excludeSelf = true)
-      .collect().map(_.toSeq).toSeq
-    val sq8Served = AnnServing.knnIvfSq8(spark, dir).collect().map(_.toSeq).toSeq
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
-      "first serve must publish the flat rows as v1 of the versioned store")
-    assert(sq8Served === sq8Expected && sq8Served.nonEmpty,
-      "migration must serve the flat layout's rows identically")
-    // v1 is the COALESCED form: one file per cell
-    val v1assigned = java.nio.file.Paths.get(sq8Home, "ivf", "v00000001", "assigned")
-    import scala.jdk.CollectionConverters._
-    val cellDirs = java.nio.file.Files.list(v1assigned).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("cell=")).toSeq
-    assert(cellDirs.nonEmpty && cellDirs.forall { d =>
-      val s = java.nio.file.Files.list(d)
-      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) == 1
-      finally s.close()
-    }, "the migrated version must be one file per cell")
-
-    // ---- pq: same lifecycle over the codes layout ----
-    val pqHome = ServingLayouts.dirFor("ivfpq", dir)
-    val ivf = Similarity.buildIvf(e, 16)
-    val pq = Similarity.trainPq(e)
-    Similarity.writeIvfPq(ivf, pq, pqHome)
+    val pqHome = ServingLayouts.dirFor("ivfpq", flatDir)
+    Similarity.pqCodesOf(index, pq).write.partitionBy("cell").parquet(s"$pqHome/codes")
+    pq.codebooks.write.parquet(s"$pqHome/codebooks")
+    index.centroids.write.parquet(s"$pqHome/centroids")
     ServingLayouts.markComplete(pqHome)
-    val (fc, fpq, fcodes) = Similarity.loadIvfPq(spark, pqHome)
-    val pqExpected = Similarity.queryIvfPq(fc, fpq, fcodes, queries,
-      Similarity.prepared(e), 5, graft.ops.LshGeometry.ivfProbe(16),
-      graft.ops.LshGeometry.pqRerank(16), excludeSelf = true)
-      .collect().map(_.toSeq).toSeq
-    val pqServed = AnnServing.knnIvfPq(spark, dir).collect().map(_.toSeq).toSeq
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val sq8Clean = rows(AnnServing.knnIvfSq8(spark, cleanDir))
+    val pqClean = rows(AnnServing.knnIvfPq(spark, cleanDir))
+    val sq8Flat = rows(AnnServing.knnIvfSq8(spark, flatDir))
+    val pqFlat = rows(AnnServing.knnIvfPq(spark, flatDir))
+    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
+      "first serve must build v1 of the versioned store")
     assert(Similarity.ivfVersions(spark, s"$pqHome/pq") === Seq(1L))
-    assert(pqServed === pqExpected && pqServed.nonEmpty)
+    assert(sq8Flat.nonEmpty && sq8Flat === sq8Clean,
+      "a flat-only home must serve row-for-row like a clean home")
+    assert(pqFlat.nonEmpty && pqFlat === pqClean)
+    // v1 carries the corpus-derived geometry, not the flat dirs' 4 cells
+    val sq8Cells = Similarity.loadIvfVersioned(spark, s"$sq8Home/ivf").centroids.count()
+    assert(sq8Cells > 4L && sq8Cells === Similarity.loadIvfVersioned(spark,
+      ServingLayouts.dirFor("sq8", cleanDir) + "/ivf").centroids.count())
+    val (pqCentroids, pqModel, _) = Similarity.loadIvfPqVersioned(spark, s"$pqHome/pq")
+    assert(pqCentroids.count() > 4L && pqModel.mSubs != 4)
+    assert(Files.exists(Paths.get(sq8Home, "assigned")) &&
+      Files.exists(Paths.get(pqHome, "codes")),
+      "serving must leave the flat dirs alone")
   }
 
   test("lsh bucket cache: a second call retires exactly the previous occupant") {

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Copy the compiled classes to a frozen dir so long `java -cp` chains
-# (tools/r12_sf100.sh etc.) keep running off a stable snapshot while
+# (multi-hour scale campaigns) keep running off a stable snapshot while
 # sbt recompiles the live tree — two sbt invocations must never
 # overlap, and a chain reading target/ mid-recompile sees torn classes.
 set -euo pipefail
