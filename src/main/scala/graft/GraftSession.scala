@@ -93,6 +93,9 @@ object GraftSession {
         (cpus.toInt * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // older corpora store events.ts as TIMESTAMP(NANOS), which Spark
+      // reads only as a long under this flag (see Tables.events)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(d => b.config("spark.checkpoint.dir", d))
     if (m.startsWith("local-cluster")) {

@@ -320,26 +320,6 @@ object StreamBench {
       if (workloads("query")) {
         val querySrc = staged(embTable
           .filter(col("vec_id") < nBatches * 4), "query_src")
-        // COLD/WARM conditioning (r15 verdict item 4: the sf100 drain
-        // p50 swings 5.4-11.8 s purely with page-cache state, so a
-        // single unconditioned number cannot be compared across
-        // rounds). Under GRAFT_BENCH_DROP_CACHES=1 (needs root) the
-        // page cache is dropped HERE — after the ingest, before the
-        // first drain — making `ann_query` a true cold-read of the
-        // layout; the second drain of the same queries (`ann_query_warm`)
-        // is then fully cache-warm. Unconditioned runs keep both
-        // blocks, flagged, so a reader knows which regime they hold.
-        val coldConditioned =
-          sys.env.get("GRAFT_BENCH_DROP_CACHES").contains("1") && {
-            try {
-              Runtime.getRuntime.exec(Array("sync")).waitFor()
-              Files.write(Paths.get("/proc/sys/vm/drop_caches"),
-                "3\n".getBytes(StandardCharsets.UTF_8))
-              true
-            } catch { case scala.util.control.NonFatal(_) => false }
-          }
-        parts += s""""ann_query_cold_conditioned":$coldConditioned"""
-
         def drain(tag: String): (Long, Int, Long, Long, Double, Int, String, String) = {
           val qTap = new ProgressTap(touchWork)
           val qStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
@@ -365,6 +345,8 @@ object StreamBench {
             stageJsonOf(qStages), scanTap.json)
         }
 
+        // the first drain reads the layout with whatever page cache the
+        // ingest left; `ann_query_warm` repeats the same queries warm
         val (qServed, qBatches, qP50, qP99, qWall, qLoads, qStageJson, qScanJson) =
           drain("cold")
         parts += s""""ann_query":${block(qServed, qBatches,

@@ -128,7 +128,9 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** `events.ts` arrives as either parquet TIMESTAMP(NANOS) (older
     * generator runs — Spark 4 refuses to read it natively, so the legacy
-    * conf surfaces it as a nanosecond long we floor-divide to µs,
+    * conf `spark.sql.legacy.parquet.nanosAsLong`, which
+    * [[GraftSession.builderFor]] sets on every session, surfaces it as a
+    * nanosecond long we floor-divide to µs,
     * matching DuckDB's own ns→µs truncation) or plain TIMESTAMP(MICROS)
     * (current generator). Branch on the READ schema, not the directory:
     * both layouts normalize to the same microsecond TIMESTAMP_NTZ, so
@@ -136,7 +138,6 @@ object Tables {
     * representation-agnostic.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -117,7 +117,7 @@ object TextDedup {
     // single final plan `withShingles` was recomputed 3× (signature
     // branch + both verify sides) and `buckets` 2× (band self-join) —
     // i.e. FOUR normalize+shingle kernel passes and TWO minhash
-    // signature passes over the corpus per call. localCheckpoint(lazy)
+    // signature passes over the corpus per call. A lazy local checkpoint
     // computes each once at first action and serves the other branches
     // from executor-local blocks — the staging write a production
     // pipeline does anyway; lazy, so plan-only construction (the

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.hadoop.fs.Path
 
 /** A minimal snapshot-isolated table format on plain parquet — the
@@ -118,6 +119,7 @@ object SnapshotTable {
   def create(spark: SparkSession, path: String, df: DataFrame,
              partitionCols: Seq[String] = Nil): Long = {
     require(versions(spark, path).isEmpty, s"table already exists at $path")
+    requireNoForeignFiles(spark, path)
     val entries = writeCommit(spark, path, df, partitionCols)
     publish(spark, path, 1L, entries, partitionCols)
   }
@@ -133,27 +135,38 @@ object SnapshotTable {
   def append(spark: SparkSession, path: String, df: DataFrame): Long = {
     val v = latestVersion(spark, path)
     val (old, partitionCols) = entriesOf(spark, path, v)
-    val evolved = Sources.evolveForAppend(df,
-      evolutionRef(readEntries(spark, path, old).schema, df, partitionCols))
-    val fresh = writeCommit(spark, path, evolved, partitionCols)
+    val fresh = writeCommit(spark, path,
+      evolved(spark, path, old, df, partitionCols), partitionCols)
     publish(spark, path, v + 1, old ++ fresh, partitionCols)
   }
 
-  /** Schema-drift reference for append/merge: the table's read schema,
-    * with partition columns typed as the INCOMING batch types them.
-    * Partition values round-trip through Hive directory names and read
-    * back type-inferred (a string "2024-01-01" returns as DATE) — that
-    * is storage layout, not producer drift, and must not trip the
-    * type-change refusal.
+  /** `batch` evolved to the table's schema by [[Sources.evolveForAppend]].
+    * The table schema is read from the NEWEST commit's files alone: every
+    * commit is written at the full table schema (evolution null-fills
+    * missing columns; merge and compact rewrite from the union) and
+    * [[publish]] lists a commit's entries after the ones it carries
+    * forward, so one commit's footers answer what a union over every
+    * live commit would. Partition columns take the INCOMING batch's
+    * types: their values round-trip through Hive directory names and
+    * read back type-inferred (a string "2024-01-01" returns as DATE) —
+    * storage layout, not producer drift, and must not trip the
+    * type-change refusal. One the batch omits null-fills as a string: a
+    * null lands in the default partition whatever its type, and a
+    * commit holding only that partition infers VOID, which no writer
+    * accepts.
     */
-  private def evolutionRef(tableSchema: org.apache.spark.sql.types.StructType,
-                           batch: DataFrame, partitionCols: Seq[String])
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(tableSchema.map { f =>
-      if (partitionCols.contains(f.name))
-        batch.schema.find(_.name == f.name).getOrElse(f)
-      else f
-    })
+  private def evolved(spark: SparkSession, path: String, entries: Seq[Entry],
+                      batch: DataFrame, partitionCols: Seq[String]): DataFrame =
+    if (entries.isEmpty) batch
+    else {
+      val newest = commitOf(entries.last)
+      val table = readEntries(spark, path, entries.filter(commitOf(_) == newest)).schema
+      Sources.evolveForAppend(batch, StructType(table.map { f =>
+        if (partitionCols.contains(f.name))
+          batch.schema.find(_.name == f.name).getOrElse(f.copy(dataType = StringType))
+        else f
+      }))
+    }
 
   /** Partition-level copy-on-write MERGE: per `keyCols` key keep the
     * `orderCol`-newest row across (stored ∪ updates), rewriting ONLY
@@ -161,49 +174,64 @@ object SnapshotTable {
     * rewrite fully (one "partition").
     */
   def upsertKeepLast(spark: SparkSession, path: String, updates: DataFrame,
-                     keyCols: Seq[String], orderCol: String): Long = {
-    val v = latestVersion(spark, path)
-    val (old, partitionCols) = entriesOf(spark, path, v)
+                     keyCols: Seq[String], orderCol: String): Long =
+    merge(spark, path, latestVersion(spark, path), Nil, updates, keyCols, orderCol)
+
+  /** [[upsertKeepLast]] against a table that may not exist yet: the
+    * first call publishes version 1 from the keep-last winners of the
+    * batch alone (`partitionCols` then fixes the table's partitioning),
+    * later calls MERGE. The idempotent entry a streaming `foreachBatch`
+    * sink needs — batch replays after a checkpoint recovery converge by
+    * keep-last instead of duplicating. Two writers racing to version 1
+    * resolve at publish like any other commit: the loser gets the
+    * retryable conflict [[retryOnConflict]] handles.
+    */
+  def upsertOrCreate(spark: SparkSession, path: String, updates: DataFrame,
+                     keyCols: Seq[String], orderCol: String,
+                     partitionCols: Seq[String] = Nil): Long = {
+    val v = versions(spark, path).lastOption.getOrElse {
+      requireNoForeignFiles(spark, path); 0L
+    }
+    merge(spark, path, v, partitionCols, updates, keyCols, orderCol)
+  }
+
+  /** The one keep-last MERGE, from version `v` to v+1. Version 0 is the
+    * empty table, partitioned by `newPartitionCols`; an existing table
+    * keeps its own partitioning.
+    */
+  private def merge(spark: SparkSession, path: String, v: Long,
+                    newPartitionCols: Seq[String], updates: DataFrame,
+                    keyCols: Seq[String], orderCol: String): Long = {
+    val (old, partitionCols) =
+      if (v == 0L) (Nil, newPartitionCols) else entriesOf(spark, path, v)
     // MERGE follows the same evolution contract as append: the batch
-    // evolves against the table's read schema (type changes refuse,
-    // missing columns null-fill), and affected rows stored before a
-    // column existed null-fill it through the union. Evolution runs
-    // FIRST so a batch from an older producer that omits a partition
-    // column null-fills it (landing in the default partition) instead
-    // of failing the affected-partition resolution below — append and
+    // evolves against the table's schema (type changes refuse, missing
+    // columns null-fill), and affected rows stored before a column
+    // existed null-fill it through the union. Evolution runs FIRST so a
+    // batch from an older producer that omits a partition column
+    // null-fills it (landing in the default partition) instead of
+    // failing the affected-partition resolution below — append and
     // merge accept the same batches.
-    val evolved = Sources.evolveForAppend(updates,
-      evolutionRef(readEntries(spark, path, old).schema, updates, partitionCols))
-    // Affected-partition subpaths must match the manifest's `part`
-    // field, which comes from ON-DISK dir names — Hive-escaped by
-    // Spark's partition writer ('a b' -> 'a%20b', null ->
-    // __HIVE_DEFAULT_PARTITION__). A raw `c=value` concat misses every
-    // such partition: old files would be kept AND merged rows written —
-    // silent duplicates. Escape with the writer's own rules.
-    val affectedParts: Set[String] =
-      if (partitionCols.isEmpty) Set("")
-      else evolved.select(partitionCols.map(c => col(c).cast("string")): _*)
-        .distinct().collect().map { r =>
-          partitionCols.indices.map { i =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .getPartitionPathString(
-                partitionCols(i), if (r.isNullAt(i)) null else r.getString(i))
-          }.mkString("/")
-        }.toSet
-    val (hit, kept) = old.partition(e => affectedParts.contains(e.part))
-    // updates may target partitions the table has never seen
-    val existingAffected =
-      if (hit.isEmpty) evolved.limit(0) else readEntries(spark, path, hit)
+    val batch = evolved(spark, path, old, updates, partitionCols)
+    val (hit, kept) =
+      if (old.isEmpty) (Nil, Nil)
+      else {
+        val parts = affectedParts(batch, partitionCols)
+        old.partition(e => parts.contains(e.part))
+      }
     // Deterministic winner on orderCol ties: an update beats a stored
     // row (MERGE semantics — the incoming write is the newer fact), and
     // two tied updates resolve by a content hash so reruns pick the
     // same row. Identical rows hash equal, so the outcome is stable
     // either way.
-    val merged = existingAffected.withColumn("__upd", lit(0))
-      .unionByName(evolved.withColumn("__upd", lit(1)), allowMissingColumns = true)
+    val incoming = batch.withColumn("__upd", lit(1))
+    val merged =
+      if (hit.isEmpty) incoming // updates may target partitions the table has never seen
+      else readEntries(spark, path, hit).withColumn("__upd", lit(0))
+        .unionByName(incoming, allowMissingColumns = true)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(orderCol).desc, col("__upd").desc,
-        xxhash64(struct(evolved.columns.map(col): _*)).desc)
+        xxhash64(struct(batch.columns.map(col): _*)).desc)
     val winners = merged
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__upd")
@@ -211,32 +239,42 @@ object SnapshotTable {
     publish(spark, path, v + 1, kept ++ fresh, partitionCols)
   }
 
-  /** [[upsertKeepLast]] that also handles the empty table: the first
-    * call creates version 1 from the (within-batch keep-last-deduped)
-    * updates, later calls MERGE. The idempotent entry a streaming
-    * `foreachBatch` sink needs — batch replays after a checkpoint
-    * recovery converge by keep-last instead of duplicating.
+  /** Manifest `part` subpaths the batch touches. They must match the
+    * ON-DISK dir names, which Spark's partition writer Hive-escapes
+    * ('a b' -> 'a%20b', null -> __HIVE_DEFAULT_PARTITION__). A raw
+    * `c=value` concat misses every such partition: old files would be
+    * kept AND merged rows written — silent duplicates. Escape with the
+    * writer's own rules.
     */
-  def upsertOrCreate(spark: SparkSession, path: String, updates: DataFrame,
-                     keyCols: Seq[String], orderCol: String,
-                     partitionCols: Seq[String] = Nil): Long =
-    if (versions(spark, path).isEmpty) {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(col(orderCol).desc,
-          xxhash64(struct(updates.columns.map(col): _*)).desc)
-      val deduped = updates.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      try create(spark, path, deduped, partitionCols)
-      catch {
-        // lost the create race: another writer published version 1
-        // between our emptiness check and create's own — converge by
-        // merging against the winner instead of surfacing a
-        // non-retryable "already exists" to retryOnConflict
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("already exists") =>
-          upsertKeepLast(spark, path, updates, keyCols, orderCol)
-      }
-    } else upsertKeepLast(spark, path, updates, keyCols, orderCol)
+  private def affectedParts(batch: DataFrame, partitionCols: Seq[String]): Set[String] =
+    if (partitionCols.isEmpty) Set("")
+    else batch.select(partitionCols.map(c => col(c).cast("string")): _*)
+      .distinct().collect().map { r =>
+        partitionCols.indices.map { i =>
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .getPartitionPathString(
+              partitionCols(i), if (r.isNullAt(i)) null else r.getString(i))
+        }.mkString("/")
+      }.toSet
+
+  /** A table's first commit may find only the layout's own children
+    * under its root: `data/` (an unpublished or racing first commit)
+    * and `_manifests/` (a staged publish). Anything else — e.g. the
+    * `dt=` tree of a raw partitioned parquet writer — would be silently
+    * shadowed by a version 1 holding only the new batch, so refuse it
+    * before any file lands.
+    */
+  private def requireNoForeignFiles(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
+    val root = new Path(path)
+    val foreign =
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .filterNot(n => n == "data" || n == ManifestDir)
+    require(foreign.isEmpty,
+      s"$path is not a snapshot table (holds ${foreign.sorted.take(3).mkString(", ")}); " +
+        "refusing to shadow it with a new version 1")
+  }
 
   /** Fold the snapshot's whole history into one commit subtree with
     * `targetFilesPerPartition` files per partition — same rows, fewer
@@ -367,6 +405,9 @@ object SnapshotTable {
 
   private case class Entry(path: String, part: String)
 
+  /** `data/<commit>` — the commit subtree an entry's file lives in. */
+  private def commitOf(e: Entry): String = e.path.split("/").take(2).mkString("/")
+
   private def entriesOf(spark: SparkSession, path: String,
                         v: Long): (Seq[Entry], Seq[String]) = {
     val rows = manifest(spark, path, v)
@@ -381,7 +422,7 @@ object SnapshotTable {
 
   private def readEntries(spark: SparkSession, root: String,
                           entries: Seq[Entry]): DataFrame = {
-    val byCommit = entries.groupBy(_.path.split("/").take(2).mkString("/"))
+    val byCommit = entries.groupBy(commitOf)
     val branches = byCommit.toSeq.sortBy(_._1).map { case (commitDir, es) =>
       spark.read
         .option("basePath", s"$root/$commitDir")

@@ -56,102 +56,6 @@ object Sources {
                        partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
-  /** Idempotent keep-last upsert into a date-partitioned parquet table —
-    * the file-level equivalent of the reference's
-    * `ON CONFLICT (station_id,timestamp) DO UPDATE` upsert
-    * (consumer/main.py:229-245): re-delivered or corrected batches
-    * converge to one newest row per key.
-    *
-    * Only partitions PRESENT IN THE BATCH are touched: existing rows of
-    * affected partitions are semi-joined in, merged keep-last on
-    * `keyCols` by `orderCol` desc, and rewritten — untouched partitions
-    * never move, so cost scales with the batch, not the table.
-    *
-    * Write discipline: the merged output is fully materialized to a
-    * STAGING directory first, then each affected partition directory is
-    * swapped in with two renames (old → trash, staged → live). A
-    * failure while computing or writing the merge leaves the table
-    * untouched; the vulnerable window shrinks to the per-partition
-    * rename pair, and a crash there leaves the previous contents intact
-    * in `<path>.__trash-*` (recoverable by hand) rather than silently
-    * lost mid-overwrite. At 100 TB a transactional table format
-    * (Delta/Iceberg MERGE) replaces this swap with a snapshot commit —
-    * the partition-scoped merge plan is the part that carries over.
-    */
-  def upsertPartitionedKeepLast(spark: SparkSession, path: String,
-                                updates: DataFrame, keyCols: Seq[String],
-                                orderCol: String,
-                                partitionCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.hadoop.fs.Path
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(hPath) && fs.listStatus(hPath).nonEmpty
-    if (!exists) {
-      updates.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-      return
-    }
-    // partition-column type inference would re-type string partition
-    // values (hour "00" → int 0) and re-name directories on rewrite,
-    // stranding stale copies — read them back verbatim as strings
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prevInfer = spark.conf.get(inferKey)
-    spark.conf.set(inferKey, "false")
-    val existing =
-      try spark.read.parquet(path)
-      finally spark.conf.set(inferKey, prevInfer)
-    // NULL-SAFE partition match: a plain equality semi-join drops
-    // existing rows of a null-valued partition (null = null is not
-    // true), so an upsert targeting __HIVE_DEFAULT_PARTITION__ would
-    // stage only its own rows and the swap would silently DISCARD the
-    // partition's prior contents. <=> keeps them in the merge.
-    val affectedParts = updates.select(partitionCols.map(col): _*).distinct()
-    val affected = existing.as("e").join(affectedParts.as("p"),
-      partitionCols.map(c => col(s"e.$c") <=> col(s"p.$c")).reduce(_ && _),
-      "left_semi")
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(orderCol).desc)
-    val merged = affected.unionByName(updates)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    // Stage to a sibling dir: the merge reads from `path` and writes
-    // elsewhere, so there is no read-overwrite cycle (and no need to
-    // materialize via checkpoint) and no partial state ever lands live.
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(path + s".__staging-$runId")
-    val trash = new Path(path + s".__trash-$runId")
-    merged.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(staging.toString)
-    // Enumerate staged partition leaf dirs (depth = #partitionCols) and
-    // swap each into place; rename is the atomic unit on HDFS-like FSs.
-    def leaves(p: Path, depth: Int, rel: String): Seq[String] =
-      if (depth == 0) Seq(rel)
-      else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { s =>
-        val r = if (rel.isEmpty) s.getPath.getName else rel + "/" + s.getPath.getName
-        leaves(s.getPath, depth - 1, r)
-      }
-    // Hadoop FileSystem.rename signals most failures (dest exists,
-    // missing parent, object-store quirks) by returning FALSE, not by
-    // throwing — an unchecked false on the staged→live rename followed
-    // by the trash delete below would silently lose the displaced
-    // partition. Every rename must prove it succeeded before cleanup.
-    def renameOrDie(src: Path, dst: Path): Unit =
-      require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    leaves(staging, partitionCols.length, "").foreach { rel =>
-      val live = new Path(hPath, rel)
-      val saved = new Path(trash, rel)
-      if (fs.exists(live)) {
-        fs.mkdirs(saved.getParent)
-        renameOrDie(live, saved)
-      }
-      fs.mkdirs(live.getParent)
-      renameOrDie(new Path(staging, rel), live)
-    }
-    // cleanup ONLY on success — on a mid-swap failure both the staged
-    // output and the displaced originals survive for recovery
-    fs.delete(staging, true)
-    fs.delete(trash, true)
-  }
-
   /** Schema drift report between an incoming batch and a stored table:
     * columns added, columns missing, and type changes keyed by column
     * name — the check continuous ingestion runs BEFORE letting a
@@ -318,9 +222,9 @@ object Sources {
     * and one repartition on (partitionCols, slot) co-locates every
     * slot's rows so the writer emits one file per slot per partition
     * dir. Data is only read and written ONCE, shuffled on exactly the
-    * layout being produced. Output goes to `destPath`; swap-in follows
-    * the [[upsertPartitionedKeepLast]] staging protocol (or a
-    * transactional format's rewrite commit at 100 TB).
+    * layout being produced. Output goes to `destPath`, never over the
+    * source; a table that needs the rewrite published atomically is a
+    * [[SnapshotTable]], whose [[SnapshotTable.compact]] is that commit.
     *
     * Partition values are joined back by their directory string form
     * (`k=v`); values needing URL-escaping (rare for date/hour-style

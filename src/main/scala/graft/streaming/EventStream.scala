@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.Ingest
+import graft.sources.SnapshotTable
 
 /** Structured Streaming form of the reference's ingest path (SURVEY.md
   * §2E): the consumer loop (services/consumer/main.py:277-376) —
@@ -224,16 +225,17 @@ object EventStream {
   }
 
   /** Streaming upsert sink — the consumer's full persistence path
-    * (consumer/main.py:277-376): validate each micro-batch, then merge
-    * it into a date-partitioned parquet table with keep-last semantics
-    * per (user_id, ts), the `ON CONFLICT DO UPDATE` analog
-    * (consumer/main.py:229-245). The micro-batch IS the reference's
-    * size/TTL flush buffer (trigger interval ≈ TTL, maxFilesPerTrigger
-    * ≈ size); dedup across redeliveries is the upsert's job, so the
-    * sink converges to one newest row per key no matter how batches
-    * overlap. Each foreachBatch call touches only the partitions
-    * present in that batch — cost scales with the batch at any table
-    * size.
+    * (consumer/main.py:277-376): validate each micro-batch, then MERGE it
+    * into a date-partitioned [[graft.sources.SnapshotTable]] with
+    * keep-last semantics per (user_id, ts), the `ON CONFLICT DO UPDATE`
+    * analog (consumer/main.py:229-245). The micro-batch IS the
+    * reference's size/TTL flush buffer (trigger interval ≈ TTL,
+    * maxFilesPerTrigger ≈ size). Each non-empty micro-batch becomes one
+    * atomically-published table version whose commit rewrites only the
+    * partitions the batch touches — cost scales with the batch at any
+    * table size — and a reader pinned at version v keeps reading v
+    * byte-for-byte while the stream publishes v+1, v+2, … Batch replays
+    * after checkpoint recovery converge by keep-last.
     */
   def upsertSink(spark: SparkSession, events: DataFrame, path: String,
                  checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -248,64 +250,11 @@ object EventStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sources.upsertPartitionedKeepLast(spark, path, batch,
-          keyCols = Seq("user_id", "ts"), orderCol = "event_id",
-          partitionCols = Seq("dt"))
-      }
-      .start()
-
-  /** [[upsertSink]] writing through [[graft.sources.SnapshotTable]]
-    * instead of live partition-swap parquet — the consumer's `ON
-    * CONFLICT` loop under a transactional table (consumer/main.py:
-    * 229-245 against a real MVCC store). Each micro-batch becomes one
-    * atomically-published table version whose commit rewrites only the
-    * partitions the batch touches; a reader pinned at version v keeps
-    * reading v byte-for-byte while the stream publishes v+1, v+2, … —
-    * the isolation the raw-directory sink can only approximate. Batch
-    * replays after checkpoint recovery converge by keep-last.
-    */
-  def upsertSinkSnapshot(spark: SparkSession, events: DataFrame, path: String,
-                         checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    Ingest.validate(events)
-      .drop("__raw")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withColumn("dt", to_date(col("ts")).cast("string"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
         // no-data micro-batches (watermark advancement) must not mint
         // empty table versions
         if (!batch.isEmpty)
-          graft.sources.SnapshotTable.upsertOrCreate(spark, path, batch,
+          SnapshotTable.upsertOrCreate(spark, path, batch,
             keyCols = Seq("user_id", "ts"), orderCol = "event_id",
-            partitionCols = Seq("dt")): Unit
-      }
-      .start()
-
-  /** [[aggTableSink]] on [[graft.sources.SnapshotTable]]: the
-    * incrementally-maintained aggregate becomes a versioned table, so a
-    * dashboard reader holds one CONSISTENT version of the whole
-    * aggregate while the stream keeps publishing newer ones — update
-    * mode re-emits a window's row mid-aggregation, and under the raw
-    * sink a reader could catch partition A after batch n and partition
-    * B at batch n-1. Keep-last on the micro-batch sequence `__v` keeps
-    * redelivered batches from regressing rows, exactly as in
-    * [[aggTableSink]].
-    */
-  def aggTableSinkSnapshot(spark: SparkSession, events: DataFrame, path: String,
-                           checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    windowedAgg(cleaned(events))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.SnapshotTable.upsertOrCreate(spark, path,
-            batch
-              .withColumn("dt", to_date(col("bucket")).cast("string"))
-              .withColumn("__v", lit(batchId)),
-            keyCols = Seq("bucket", "event_type"), orderCol = "__v",
             partitionCols = Seq("dt")): Unit
       }
       .start()
@@ -313,14 +262,15 @@ object EventStream {
   /** Incrementally-maintained aggregate table — the materialized-view
     * face of [[windowedAgg]]: update mode re-emits each (bucket,
     * event_type) row whenever new events land in its window, and
-    * foreachBatch upserts the NEW cumulative value over the old one
-    * (keep-last on the micro-batch sequence number — monotone per
-    * checkpoint, so redelivered batches can't regress a row). The
-    * dashboard table the reference's query service would read is thus
-    * always current without ever recomputing history; each micro-batch
-    * touches only the date partitions its windows fall in. The batch
-    * version column `__v` rides along in the stored table as merge
-    * lineage.
+    * foreachBatch MERGEs the NEW cumulative value over the old one into
+    * a [[graft.sources.SnapshotTable]] (keep-last on the micro-batch
+    * sequence `__v` — monotone per checkpoint, so redelivered batches
+    * can't regress a row; it rides along in the stored table as merge
+    * lineage). Each micro-batch publishes one version touching only the
+    * date partitions its windows fall in, so a dashboard reader holds
+    * one CONSISTENT version of the whole aggregate while the stream
+    * publishes newer ones, never partition A after batch n with
+    * partition B at batch n-1.
     */
   def aggTableSink(spark: SparkSession, events: DataFrame, path: String,
                    checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -329,12 +279,13 @@ object EventStream {
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sources.upsertPartitionedKeepLast(spark, path,
-          batch
-            .withColumn("dt", to_date(col("bucket")).cast("string"))
-            .withColumn("__v", lit(batchId)),
-          keyCols = Seq("bucket", "event_type"), orderCol = "__v",
-          partitionCols = Seq("dt"))
+        if (!batch.isEmpty)
+          SnapshotTable.upsertOrCreate(spark, path,
+            batch
+              .withColumn("dt", to_date(col("bucket")).cast("string"))
+              .withColumn("__v", lit(batchId)),
+            keyCols = Seq("bucket", "event_type"), orderCol = "__v",
+            partitionCols = Seq("dt")): Unit
       }
       .start()
 
@@ -578,16 +529,18 @@ object EventStream {
   /** Continuous distinct-count maintenance — the streaming
     * materialization of [[graft.ops.Analytics.hllRollup]]'s daily
     * layer: each micro-batch folds its events into per-(event_type,
-    * day) HLL sketch rows and register-merges them into the persisted
-    * sketch store (`hll_union_agg` over old ∪ new — same-lgK union is
+    * day) HLL sketch rows and register-merges them into the sketch
+    * store (`hll_union_agg` over stored ∪ new — same-lgK union is
     * lossless, so the stream-maintained sketch is BIT-EQUAL to one
     * built from all rows at once, which the spec asserts through the
     * estimates). The store is rollup-sized (types × days), so the
     * merge rewrite costs nothing at any event volume — this is the
     * pre-aggregation that makes "distinct users this week" a
     * sketch-merge instead of a 100 TB rescan, kept fresh per batch.
-    * The merged frame is localCheckpointed before the overwrite (the
-    * plan reads the store it is about to replace) and released after.
+    * The store is a [[graft.sources.SnapshotTable]]: each non-empty
+    * micro-batch publishes one version (keep-last on the batch id
+    * `__v`), written beside the files its plan reads, so a crash
+    * mid-commit leaves the previous version whole.
     */
   def hllIngestOnce(spark: SparkSession, srcDir: String, storePath: String,
                     checkpointDir: String, lgK: Int = 12,
@@ -602,29 +555,23 @@ object EventStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // release exactly the blocks this batch pins (the CorpusStream
-        // snapshot-diff pattern) — a continuous stream would otherwise
-        // accumulate one checkpointed store copy per micro-batch
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val daily = batch
-          .filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .groupBy(col("event_type"),
-            to_date(col("ts").cast("timestamp")).as("day"))
-          .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
-            count(lit(1)).as("n_events"))
-        val store = new java.io.File(storePath)
-        val merged = (if (store.exists && store.list().nonEmpty)
-          spark.read.parquet(storePath).unionByName(daily)
-        else daily)
-          .groupBy(col("event_type"), col("day"))
-          .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
-            sum(col("n_events")).as("n_events"))
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(storePath)
-        sc.getPersistentRDDs.filterNot { case (id, _) => before.contains(id) }
-          .foreach { case (_, rdd) => rdd.unpersist(false) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          val daily = batch
+            .filter(col("user_id").isNotNull && col("ts").isNotNull)
+            .groupBy(col("event_type"),
+              to_date(col("ts").cast("timestamp")).as("day"))
+            .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
+              count(lit(1)).as("n_events"))
+          val merged = (if (SnapshotTable.versions(spark, storePath).isEmpty) daily
+            else SnapshotTable.read(spark, storePath).drop("__v").unionByName(daily))
+            .groupBy(col("event_type"), col("day"))
+            .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
+              sum(col("n_events")).as("n_events"))
+            .withColumn("__v", lit(batchId))
+          SnapshotTable.upsertOrCreate(spark, storePath, merged,
+            keyCols = Seq("event_type", "day"), orderCol = "__v"): Unit
+        }
       }
       .start()
       .awaitTermination()
@@ -634,7 +581,7 @@ object EventStream {
     * what a dashboard reads; cost ∝ store rows, never events.
     */
   def hllServe(spark: SparkSession, storePath: String): DataFrame =
-    spark.read.parquet(storePath)
+    SnapshotTable.read(spark, storePath)
       .select(col("event_type"), col("day"),
         expr("hll_sketch_estimate(sketch)").as("approx_users"),
         col("n_events"))

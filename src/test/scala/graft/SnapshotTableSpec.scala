@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Contract tests for the snapshot-isolated table format: atomic
   * version publish, time travel, partition-level copy-on-write merge,
@@ -171,6 +172,35 @@ class SnapshotTableSpec extends SparkSpec {
       .select("path").as[String].collect().toSet
     assert(after.intersect(before).isEmpty,
       "all partitions were updated, so no old file may survive in the new manifest")
+  }
+
+  test("the first commit refuses a directory that is not a snapshot table, leaving it untouched") {
+    // the layout a raw partitioned parquet writer leaves: dt= dirs and a
+    // _SUCCESS marker, no _manifests — a fresh version 1 holding only
+    // the new batch would silently shadow every row in it
+    val t = tmpTable("graft_snap_raw")
+    Seq((1L, "2024-01-01", 1L), (2L, "2024-01-02", 1L)).toDF("k", "dt", "ord")
+      .write.partitionBy("dt").parquet(t)
+    def listing: Set[(String, Long, Long)] = {
+      val root = java.nio.file.Paths.get(t)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map { p =>
+        val f = p.toFile
+        (root.relativize(p).toString, f.length, f.lastModified)
+      }.toSet
+      finally walk.close()
+    }
+    val before = listing
+    val batch = Seq((3L, "2024-01-03", 1L)).toDF("k", "dt", "ord")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.upsertOrCreate(spark, t, batch, Seq("k"), "ord", Seq("dt"))
+    }
+    assert(e.getMessage.contains("not a snapshot table"), e.getMessage)
+    intercept[IllegalArgumentException] {
+      SnapshotTable.create(spark, t, batch, Seq("dt"))
+    }
+    assert(listing === before, "a refused commit must not add, change or remove a file")
+    assert(SnapshotTable.versions(spark, t).isEmpty)
   }
 
   test("upsert ties on orderCol resolve deterministically with the update winning") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Skew
-import graft.sources.Sources
+import graft.sources.{SnapshotTable, Sources}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,74 +49,61 @@ class SourcesSkewSpec extends SparkSpec {
   }
 
   test("partitioned upsert keeps the newest row per key and only touches batch partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/table"
     def batch(rows: (Long, String, Long, Double)*) =
       rows.toDF("event_id", "date", "user_id", "value")
+    def upsert(df: org.apache.spark.sql.DataFrame): Long =
+      SnapshotTable.upsertOrCreate(spark, dir, df,
+        keyCols = Seq("date", "user_id"), orderCol = "event_id",
+        partitionCols = Seq("date"))
+    def filesOf(part: String): Set[String] = SnapshotTable.manifest(spark, dir)
+      .filter(col("part") === part).select("path").as[String].collect().toSet
     // base: two date partitions
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((1L, "2024-01-01", 1L, 10.0), (2L, "2024-01-02", 2L, 20.0)),
-      keyCols = Seq("date", "user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    val untouched = new java.io.File(s"$dir/date=2024-01-02").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
+    upsert(batch((1L, "2024-01-01", 1L, 10.0), (2L, "2024-01-02", 2L, 20.0)))
+    val untouched = filesOf("date=2024-01-02")
+    assert(untouched.nonEmpty)
     // second delivery: corrects user 1 on 01-01 (higher event_id), adds 01-03
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((5L, "2024-01-01", 1L, 11.0), (6L, "2024-01-03", 3L, 30.0)),
-      keyCols = Seq("date", "user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    val back = spark.read.parquet(dir)
+    upsert(batch((5L, "2024-01-01", 1L, 11.0), (6L, "2024-01-03", 3L, 30.0)))
+    val back = SnapshotTable.read(spark, dir)
       .select("event_id", "date", "user_id", "value")
       .as[(Long, String, Long, Double)].collect().sortBy(_._1)
     assert(back.toSeq === Seq(
       (2L, "2024-01-02", 2L, 20.0),   // untouched partition intact
       (5L, "2024-01-01", 1L, 11.0),   // keep-last won
       (6L, "2024-01-03", 3L, 30.0)))  // new partition appended
-    // the 01-02 partition's files were not rewritten
-    val after = new java.io.File(s"$dir/date=2024-01-02").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
-    assert(after === untouched)
+    // the 01-02 partition's files were not rewritten: they carry forward
+    assert(filesOf("date=2024-01-02") === untouched)
     // idempotent: re-delivering the same batch changes nothing
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((5L, "2024-01-01", 1L, 11.0)),
-      keyCols = Seq("date", "user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    assert(spark.read.parquet(dir).count() === 3)
+    upsert(batch((5L, "2024-01-01", 1L, 11.0)))
+    assert(SnapshotTable.read(spark, dir).count() === 3)
   }
 
   test("partitioned upsert into a NULL-valued partition keeps the partition's prior rows") {
     // a plain equality semi-join never matches existing null-partition
-    // rows (null = null is not true), so before the r7 fix an upsert
-    // targeting __HIVE_DEFAULT_PARTITION__ staged ONLY its own rows and
-    // the swap discarded the partition's prior contents — data loss,
+    // rows (null = null is not true), so an upsert targeting
+    // __HIVE_DEFAULT_PARTITION__ that rewrote the partition from its
+    // matched rows alone would discard its prior contents — data loss,
     // not duplication
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_null").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_null").toString + "/table"
     def batch(rows: (Long, Option[String], Long, Double)*) =
       rows.toDF("event_id", "date", "user_id", "value")
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((1L, None, 1L, 10.0), (2L, Some("2024-01-02"), 2L, 20.0)),
-      keyCols = Seq("user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    // upsert a NEW key into the null partition
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((5L, None, 3L, 30.0)),
-      keyCols = Seq("user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    val back = spark.read.parquet(dir)
+    def upsert(df: org.apache.spark.sql.DataFrame): Long =
+      SnapshotTable.upsertOrCreate(spark, dir, df,
+        keyCols = Seq("user_id"), orderCol = "event_id",
+        partitionCols = Seq("date"))
+    def rows: Seq[(Long, Long, Double)] = SnapshotTable.read(spark, dir)
       .select("event_id", "user_id", "value")
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    assert(back.toSeq === Seq(
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    upsert(batch((1L, None, 1L, 10.0), (2L, Some("2024-01-02"), 2L, 20.0)))
+    // upsert a NEW key into the null partition
+    upsert(batch((5L, None, 3L, 30.0)))
+    assert(rows === Seq(
       (1L, 1L, 10.0),   // prior null-partition row MUST survive
       (2L, 2L, 20.0),
       (5L, 3L, 30.0)))
     // and keep-last still applies within the null partition
-    Sources.upsertPartitionedKeepLast(spark, dir,
-      batch((9L, None, 1L, 11.0)),
-      keyCols = Seq("user_id"), orderCol = "event_id",
-      partitionCols = Seq("date"))
-    val after = spark.read.parquet(dir)
-      .select("event_id", "user_id", "value")
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    assert(after.toSeq === Seq((2L, 2L, 20.0), (5L, 3L, 30.0), (9L, 1L, 11.0)))
+    upsert(batch((9L, None, 1L, 11.0)))
+    assert(rows === Seq((2L, 2L, 20.0), (5L, 3L, 30.0), (9L, 1L, 11.0)))
   }
 
   test("structural DLQ wraps corrupt rows in the collector's record shape") {

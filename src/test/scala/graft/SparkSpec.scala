@@ -11,9 +11,8 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    // events.ts is parquet TIMESTAMP(NANOS); Tables.events sets this at
-    // call time too, but a suite running in a fresh JVM needs it before
-    // the session's first parquet schema inference (see Tables.scala:29)
+    // older corpora store events.ts as parquet TIMESTAMP(NANOS); the
+    // mains set this in GraftSession.builderFor (see Tables.events)
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 

@@ -187,6 +187,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming upsert sink converges to keep-last per key across micro-batches") {
     import spark.implicits._
+    import graft.sources.SnapshotTable
     val src = java.nio.file.Files.createTempDirectory("graft_upsert_src").toString
     val tgt = java.nio.file.Files.createTempDirectory("graft_upsert_tgt").toString + "/table"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString
@@ -208,7 +209,7 @@ class StreamingSpec extends SparkSpec {
       (9L, "2024-01-01 10:00:00", 1L, "click", 99.0, "{}"),
       (5L, "2024-01-01 13:00:00", 4L, "view", 1.0, "{}")), "b2")
     q.processAllAvailable(); q.stop()
-    val table = spark.read.parquet(tgt)
+    val table = SnapshotTable.read(spark, tgt)
     val byKey = table.select("user_id", "event_id", "value")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(table.count() === 3) // invalid row dropped, dup converged
@@ -216,7 +217,8 @@ class StreamingSpec extends SparkSpec {
     assert(byKey(2L) === ((2L, 5.0)))
     assert(byKey(4L) === ((5L, 1.0)))
     // date partitioning materialized (hypertable-chunk analog)
-    assert(new java.io.File(tgt).listFiles().map(_.getName).count(_.startsWith("dt=")) === 2)
+    assert(SnapshotTable.manifest(spark, tgt).select("part").distinct()
+      .as[String].collect().toSet === Set("dt=2024-01-01", "dt=2024-01-02"))
   }
 
   test("streaming gap detection emits exactly the batch-detected outages") {
@@ -282,6 +284,7 @@ class StreamingSpec extends SparkSpec {
 
   test("incrementally-maintained aggregate table converges to the batch aggregate") {
     import spark.implicits._
+    import graft.sources.SnapshotTable
     val src = java.nio.file.Files.createTempDirectory("graft_aggtbl_src").toString
     val tgt = java.nio.file.Files.createTempDirectory("graft_aggtbl_tgt").toString + "/table"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_aggtbl_ck").toString
@@ -302,16 +305,16 @@ class StreamingSpec extends SparkSpec {
       (4L, "2024-01-01 10:40:00", 3L, "click", 7.0, "{}"),
       (5L, "2024-01-02 09:00:00", 1L, "click", 1.0, "{}")), "b2")
     q.processAllAvailable(); q.stop()
-    val got = spark.read.parquet(tgt)
+    val got = SnapshotTable.read(spark, tgt)
       .select(col("bucket").cast("string"), col("event_type"), col("n"), col("total_value"))
       .as[(String, String, Long, Double)].collect().toSet
     assert(got === Set(
       ("2024-01-01 10:00:00", "click", 3L, 22.0),
       ("2024-01-01 11:00:00", "view", 1L, 2.0),
       ("2024-01-02 09:00:00", "click", 1L, 1.0)))
-    // two date partitions materialized; batch 2 touched only its own dates
-    assert(new java.io.File(tgt).listFiles().map(_.getName)
-      .count(_.startsWith("dt=")) === 2)
+    // two date partitions materialized
+    assert(SnapshotTable.manifest(spark, tgt).select("part").distinct()
+      .as[String].collect().toSet === Set("dt=2024-01-01", "dt=2024-01-02"))
   }
 
   test("snapshot-table streaming upsert: pinned reader isolation while the stream commits") {
@@ -327,7 +330,7 @@ class StreamingSpec extends SparkSpec {
     write(Seq(
       (1L, "2024-01-01 10:00:00", 1L, "click", 10.0, "{}"),
       (2L, "2024-01-02 11:00:00", 2L, "view", 5.0, "{}")), "b1")
-    val q = EventStream.upsertSinkSnapshot(spark,
+    val q = EventStream.upsertSink(spark,
       spark.readStream.schema(EventStream.eventSchema).parquet(src + "/*"), tgt, ckpt)
     q.processAllAvailable()
     val v1 = SnapshotTable.latestVersion(spark, tgt)
@@ -364,7 +367,7 @@ class StreamingSpec extends SparkSpec {
       (1L, "2024-01-01 10:05:00", 1L, "click", 10.0, "{}"),
       (2L, "2024-01-01 10:20:00", 2L, "click", 5.0, "{}"),
       (3L, "2024-01-01 11:10:00", 1L, "view", 2.0, "{}")), "b1")
-    val q = EventStream.aggTableSinkSnapshot(spark,
+    val q = EventStream.aggTableSink(spark,
       spark.readStream.schema(EventStream.eventSchema).parquet(src + "/*"), tgt, ckpt)
     q.processAllAvailable()
     // batch 2 re-opens the 10:00 window: the upsert must REPLACE its row
@@ -569,6 +572,8 @@ class StreamingSpec extends SparkSpec {
     Thread.sleep(1100)
     ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(src)
     EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1)
+    // one store version per non-empty micro-batch
+    assert(graft.sources.SnapshotTable.versions(spark, store) === Seq(1L, 2L))
     val served = EventStream.hllServe(spark, store)
     // same-lgK register union is lossless: incremental = one-shot, exactly
     val oneShot = ev
@@ -581,6 +586,8 @@ class StreamingSpec extends SparkSpec {
     // committed checkpoint → replay leaves the store unchanged
     val snapshot = served.collect().toSeq
     EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1)
+    assert(graft.sources.SnapshotTable.versions(spark, store) === Seq(1L, 2L),
+      "a replay with a committed checkpoint must publish no version")
     assert(EventStream.hllServe(spark, store).collect().toSeq === snapshot)
   }
 
