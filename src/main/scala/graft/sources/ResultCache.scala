@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
 
@@ -16,7 +18,13 @@ import java.nio.charset.StandardCharsets
   * {{{
   *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/data/part-*.parquet
   *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/_cached_at
+  *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/_schema
   * }}}
+  *
+  * `_cached_at` is the publish stamp (epoch ms); `_schema` is the
+  * result's schema (Spark's StructType JSON, every field nullable), so
+  * a hit reads its parquet without a schema-inference job. A generation
+  * without `_schema` (an older layout) serves as a miss and is replaced.
   *
   * Generations are IMMUTABLE once published: a refresh publishes a NEW
   * `e-*` directory and never touches the one a concurrent reader may
@@ -71,27 +79,41 @@ object ResultCache {
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read a generation's publish stamp. exists→open is NOT atomic and
-    * both the stamp (invalidate strips it) and the whole generation
-    * (GC of a superseded one) are legitimately deleted by concurrent
-    * callers, so ANY missing/unreadable state — not just a malformed
-    * payload — means "no stamp", never a thrown error: getOrCompute's
-    * contract is that concurrent racers each succeed.
+  /** Read one of a generation's small files. Both the stamp (invalidate
+    * strips it) and the whole generation (GC of a superseded one) are
+    * legitimately deleted by concurrent callers, so ANY missing or
+    * unreadable state means "absent", never a thrown error:
+    * getOrCompute's contract is that concurrent racers each succeed.
     */
-  private def stampOf(spark: SparkSession, entry: Path): Option[Long] = {
+  private def readSmall(spark: SparkSession, entry: Path, name: String): Option[String] = {
     val fs = fsOf(spark, entry.toString)
-    val stamp = new Path(entry, "_cached_at")
     try {
-      if (!fs.exists(stamp)) None
-      else {
-        val in = fs.open(stamp)
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong)
-        finally in.close()
-      }
-    } catch {
-      case _: NumberFormatException | _: java.io.IOException => None
-    }
+      val in = fs.open(new Path(entry, name))
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case _: java.io.IOException => None }
   }
+
+  private def writeSmall(fs: org.apache.hadoop.fs.FileSystem, entry: Path,
+                         name: String, text: String): Unit = {
+    val out = fs.create(new Path(entry, name))
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** A generation's publish stamp; None when stripped, gone or malformed. */
+  private def stampOf(spark: SparkSession, entry: Path): Option[Long] =
+    readSmall(spark, entry, "_cached_at").flatMap(_.trim.toLongOption)
+
+  /** A generation's stored result schema; None when absent or malformed. */
+  private def schemaOf(spark: SparkSession, entry: Path): Option[StructType] =
+    readSmall(spark, entry, "_schema").flatMap { j =>
+      try Some(DataType.fromJson(j).asInstanceOf[StructType])
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+
+  /** The generation's data, read under its stored schema (no job). */
+  private def readGeneration(spark: SparkSession, gen: Path, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(new Path(gen, "data").toString)
 
   /** Published generations of `key`, newest-name-first (the 13-digit
     * zero-padded publish stamp in the name sorts chronologically;
@@ -107,9 +129,10 @@ object ResultCache {
       .sortBy(_.getName)(Ordering[String].reverse)
 
   /** Serve `key` from the cache if its newest generation is younger
-    * than `ttlMs`, otherwise run `compute`, publish its result as a
-    * fresh generation, and return the cached read. `nowMs` is
-    * injectable for tests.
+    * than `ttlMs` and carries its schema, otherwise run `compute`,
+    * publish its result as a fresh generation, and return the cached
+    * read. Neither read starts a Spark job before the caller's action.
+    * `nowMs` is injectable for tests.
     *
     * `gcGraceMs` bounds the reader-safety window of generation GC: a
     * superseded generation is reclaimed only once its publish stamp is
@@ -129,20 +152,21 @@ object ResultCache {
     val fs = fsOf(spark, cacheRoot)
     val keyDir = new Path(cacheRoot, key)
     val gens = generationsOf(fs, keyDir)
-    val latestFresh = gens.headOption.filter(g =>
-      stampOf(spark, g).exists(t => nowMs() - t < ttlMs))
+    val latestFresh = gens.headOption
+      .filter(g => stampOf(spark, g).exists(t => nowMs() - t < ttlMs))
+      .flatMap(g => schemaOf(spark, g).map(g -> _))
     latestFresh match {
-      case Some(g) => spark.read.parquet(new Path(g, "data").toString)
+      case Some((g, schema)) => readGeneration(spark, g, schema)
       case None =>
         val df = compute
+        val schema = Shims.asNullable(df.schema)
         val now = nowMs()
         val gen = f"e-$now%013d-${java.util.UUID.randomUUID().toString.take(8)}"
         val tmp = new Path(keyDir,
           ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
         df.write.parquet(new Path(tmp, "data").toString)
-        val out = fs.create(new Path(tmp, "_cached_at"))
-        try out.write(now.toString.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        writeSmall(fs, tmp, "_schema", schema.json)
+        writeSmall(fs, tmp, "_cached_at", now.toString)
         val target = new Path(keyDir, gen)
         // generation names are unique, so the publish cannot conflict;
         // the atomic rename still guards against a torn directory
@@ -157,7 +181,7 @@ object ResultCache {
         gens.drop(1)
           .filter(g => stampOf(spark, g).forall(_ < cutoff))
           .foreach(g => fs.delete(g, true))
-        spark.read.parquet(new Path(target, "data").toString)
+        readGeneration(spark, target, schema)
     }
   }
 

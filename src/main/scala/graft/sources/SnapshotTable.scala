@@ -3,8 +3,11 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.jdk.CollectionConverters._
 
 /** A minimal snapshot-isolated table format on plain parquet — the
   * transactional layer a 100 TB deployment gets from Delta/Iceberg,
@@ -15,17 +18,28 @@ import org.apache.hadoop.fs.Path
   * Layout under the table root:
   * {{{
   *   data/<commit-uuid>/[k=v/...]part-*.parquet   immutable, write-once
-  *   _manifests/v<00000001>/manifest.parquet      (path, part, partition_cols)
+  *   _manifests/v<00000001>/manifest.json         one JSON object per version
   * }}}
+  *
+  * `manifest.json` holds the version's `entries` (`path`, relative to
+  * the root, and `part`, the file's Hive partition subpath, "" when
+  * unpartitioned), the table's `partition_cols`, and its data `schema`
+  * (Spark's StructType JSON, partition columns left out, every field
+  * nullable). The driver writes and reads it through the Hadoop
+  * FileSystem API, so no metadata operation starts a Spark job — the
+  * log design of Delta Lake (PROTOCOL.md), one self-contained snapshot
+  * per version instead of a replayed chain of deltas.
   *
   * Protocol:
   *  - A COMMIT writes its data files under a fresh `data/<commit>/`
   *    subtree (never touching existing files), stages the new version's
-  *    manifest under a temp name, and PUBLISHES it with one directory
-  *    rename to `_manifests/v<n+1>` — the single atomic step. A reader
-  *    either sees the version or doesn't; there is no mid-commit state.
+  *    `manifest.json` in a temp directory, and PUBLISHES it with one
+  *    directory rename to `_manifests/v<n+1>` — the single atomic step. A
+  *    reader either sees the version or doesn't; there is no mid-commit
+  *    state.
   *  - READERS list `_manifests`, pick the highest version (or any older
-  *    one — time travel), and read exactly that manifest's files. Data
+  *    one — time travel), and read exactly that manifest's files under
+  *    its stored data schema, so parquet never infers one. Data
   *    files are never rewritten and only [[vacuum]] deletes them, so a
   *    pinned snapshot stays readable regardless of concurrent commits —
   *    snapshot isolation by construction, not by locking.
@@ -53,16 +67,25 @@ import org.apache.hadoop.fs.Path
   * touching one hour of one day rewrites that hour's files only, and a
   * concurrent reader mid-upsert sees either wholly-old or wholly-new.
   *
-  * Scale notes: manifests are parquet (one small file per version) and
-  * list file PATHS, so reading N files of metadata costs one scan of a
-  * KB-scale table; snapshot reads pass explicit file lists per commit
-  * subtree with `basePath` so partition columns re-attach and partition
-  * pruning still prunes; per-version read plans union one branch per
-  * contributing commit — [[compact]] folds history back to one branch.
+  * Scale notes: a manifest is one JSON file per version listing file
+  * PATHS, read whole by the driver; it grows linearly with live files,
+  * which [[compact]] bounds. Snapshot reads pass explicit file lists per
+  * commit subtree with `basePath` and the stored data schema: partition
+  * columns re-attach with the types Spark infers from the paths
+  * (driver-side, no job — `dt=2024-01-01` reads back as DATE, digit-only
+  * values as INT, exactly as an inferring read), and partition pruning
+  * still prunes. A branch of more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
+  * is still listed by one Spark job. Per-version read plans union one
+  * branch per contributing commit — [[compact]] folds history back to
+  * one branch. Tables whose versions carry the older parquet manifest
+  * are refused, not migrated.
   */
 object SnapshotTable {
 
   private val ManifestDir = "_manifests"
+  private val ManifestFile = "manifest.json"
+  private val Json = new ObjectMapper()
 
   // table path -> post-commit hooks (path, publishedVersion). Fired
   // after a successful manifest publish — the read-after-write wiring
@@ -105,12 +128,14 @@ object SnapshotTable {
 
   /** Manifest rows of `version` (or latest): relative file path, the
     * file's partition subpath ("" when unpartitioned), and the table's
-    * partition columns (comma-joined, repeated per row).
+    * partition columns (comma-joined, repeated per row). A local
+    * relation: collecting it starts no Spark job.
     */
   def manifest(spark: SparkSession, path: String, version: Long = -1L): DataFrame = {
-    val v = if (version >= 0) version else latestVersion(spark, path)
-    spark.read.parquet(
-      new Path(new Path(path, ManifestDir), versionDirName(v)).toString)
+    import spark.implicits._
+    val s = snapshotOf(spark, path, if (version >= 0) version else latestVersion(spark, path))
+    val pcols = s.partitionCols.mkString(",")
+    s.entries.map(e => (e.path, e.part, pcols)).toDF("path", "part", "partition_cols")
   }
 
   /** Create version 1 from `df`. `partitionCols` fixes the table's
@@ -120,53 +145,41 @@ object SnapshotTable {
              partitionCols: Seq[String] = Nil): Long = {
     require(versions(spark, path).isEmpty, s"table already exists at $path")
     requireNoForeignFiles(spark, path)
-    val entries = writeCommit(spark, path, df, partitionCols)
-    publish(spark, path, 1L, entries, partitionCols)
+    publish(spark, path, 1L, Nil, writeCommit(spark, path, df, partitionCols))
   }
 
   /** Add `df`'s rows as new files; existing entries carry forward.
     * Schema evolution follows the [[Sources.evolveForAppend]] gate:
     * ADDED nullable columns merge in (older commits null-fill at
-    * read — [[readEntries]] unions by name with missing-column fill),
+    * read — every branch reads under the version's stored schema),
     * MISSING columns null-fill in the batch, and a TYPE CHANGE throws
     * before any file lands — the producer-deployment contract the raw
     * append path already enforces, now on the transactional table.
     */
   def append(spark: SparkSession, path: String, df: DataFrame): Long = {
     val v = latestVersion(spark, path)
-    val (old, partitionCols) = entriesOf(spark, path, v)
-    val fresh = writeCommit(spark, path,
-      evolved(spark, path, old, df, partitionCols), partitionCols)
-    publish(spark, path, v + 1, old ++ fresh, partitionCols)
+    val s = snapshotOf(spark, path, v)
+    publish(spark, path, v + 1, s.entries,
+      writeCommit(spark, path, evolved(s, df), s.partitionCols))
   }
 
-  /** `batch` evolved to the table's schema by [[Sources.evolveForAppend]].
-    * The table schema is read from the NEWEST commit's files alone: every
-    * commit is written at the full table schema (evolution null-fills
-    * missing columns; merge and compact rewrite from the union) and
-    * [[publish]] lists a commit's entries after the ones it carries
-    * forward, so one commit's footers answer what a union over every
-    * live commit would. Partition columns take the INCOMING batch's
-    * types: their values round-trip through Hive directory names and
-    * read back type-inferred (a string "2024-01-01" returns as DATE) —
-    * storage layout, not producer drift, and must not trip the
-    * type-change refusal. One the batch omits null-fills as a string: a
-    * null lands in the default partition whatever its type, and a
-    * commit holding only that partition infers VOID, which no writer
-    * accepts.
+  /** `batch` evolved by [[Sources.evolveForAppend]] to the table schema
+    * the version stores — its data columns, then its partition columns.
+    * Every commit is written at the full table schema (evolution
+    * null-fills missing columns; merge and compact rewrite from the
+    * union), so the newest commit's schema is the table's. Partition
+    * columns take the INCOMING batch's types: their values round-trip
+    * through Hive directory names and read back type-inferred (a string
+    * "2024-01-01" returns as DATE) — storage layout, not producer drift,
+    * and must not trip the type-change refusal. One the batch omits
+    * null-fills as a string: a null lands in the default partition
+    * whatever its type, and a commit holding only that partition infers
+    * VOID, which no writer accepts.
     */
-  private def evolved(spark: SparkSession, path: String, entries: Seq[Entry],
-                      batch: DataFrame, partitionCols: Seq[String]): DataFrame =
-    if (entries.isEmpty) batch
-    else {
-      val newest = commitOf(entries.last)
-      val table = readEntries(spark, path, entries.filter(commitOf(_) == newest)).schema
-      Sources.evolveForAppend(batch, StructType(table.map { f =>
-        if (partitionCols.contains(f.name))
-          batch.schema.find(_.name == f.name).getOrElse(f.copy(dataType = StringType))
-        else f
-      }))
-    }
+  private def evolved(s: Snapshot, batch: DataFrame): DataFrame =
+    Sources.evolveForAppend(batch, StructType(s.dataSchema.fields ++
+      s.partitionCols.map(c => batch.schema.find(_.name == c)
+        .getOrElse(StructField(c, StringType)))))
 
   /** Partition-level copy-on-write MERGE: per `keyCols` key keep the
     * `orderCol`-newest row across (stored ∪ updates), rewriting ONLY
@@ -202,8 +215,9 @@ object SnapshotTable {
   private def merge(spark: SparkSession, path: String, v: Long,
                     newPartitionCols: Seq[String], updates: DataFrame,
                     keyCols: Seq[String], orderCol: String): Long = {
-    val (old, partitionCols) =
-      if (v == 0L) (Nil, newPartitionCols) else entriesOf(spark, path, v)
+    val s = if (v == 0L) Snapshot(Nil, newPartitionCols, StructType(Nil))
+      else snapshotOf(spark, path, v)
+    val (old, partitionCols) = (s.entries, s.partitionCols)
     // MERGE follows the same evolution contract as append: the batch
     // evolves against the table's schema (type changes refuse, missing
     // columns null-fill), and affected rows stored before a column
@@ -212,7 +226,7 @@ object SnapshotTable {
     // null-fills it (landing in the default partition) instead of
     // failing the affected-partition resolution below — append and
     // merge accept the same batches.
-    val batch = evolved(spark, path, old, updates, partitionCols)
+    val batch = if (v == 0L) updates else evolved(s, updates)
     val (hit, kept) =
       if (old.isEmpty) (Nil, Nil)
       else {
@@ -227,7 +241,7 @@ object SnapshotTable {
     val incoming = batch.withColumn("__upd", lit(1))
     val merged =
       if (hit.isEmpty) incoming // updates may target partitions the table has never seen
-      else readEntries(spark, path, hit).withColumn("__upd", lit(0))
+      else readEntries(spark, path, hit, s.dataSchema).withColumn("__upd", lit(0))
         .unionByName(incoming, allowMissingColumns = true)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(orderCol).desc, col("__upd").desc,
@@ -235,8 +249,7 @@ object SnapshotTable {
     val winners = merged
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__upd")
-    val fresh = writeCommit(spark, path, winners, partitionCols)
-    publish(spark, path, v + 1, kept ++ fresh, partitionCols)
+    publish(spark, path, v + 1, kept, writeCommit(spark, path, winners, partitionCols))
   }
 
   /** Manifest `part` subpaths the batch touches. They must match the
@@ -284,8 +297,9 @@ object SnapshotTable {
   def compact(spark: SparkSession, path: String,
               targetFilesPerPartition: Int = 1): Long = {
     val v = latestVersion(spark, path)
-    val (_, partitionCols) = entriesOf(spark, path, v)
-    val base = read(spark, path, v)
+    val s = snapshotOf(spark, path, v)
+    val partitionCols = s.partitionCols
+    val base = readSnapshot(spark, path, v, s)
     // `repartition(n, partitionCols)` would colocate each table
     // partition into ONE task (→ one file) regardless of n; to honor
     // the target, spread each partition's rows over a content-hash
@@ -309,8 +323,7 @@ object SnapshotTable {
           .repartition(tasks, partitionCols.map(col) :+ col("__bucket"): _*)
           .drop("__bucket")
       }
-    val fresh = writeCommit(spark, path, all, partitionCols)
-    publish(spark, path, v + 1, fresh, partitionCols)
+    publish(spark, path, v + 1, Nil, writeCommit(spark, path, all, partitionCols))
   }
 
   /** Delete manifests older than the newest `keepVersions`, every data
@@ -329,7 +342,7 @@ object SnapshotTable {
     val fs = fsOf(spark, path)
     val vs = versions(spark, path)
     val (drop, keep) = vs.splitAt((vs.length - keepVersions).max(0))
-    val referenced = keep.flatMap(v => entriesOf(spark, path, v)._1)
+    val referenced = keep.flatMap(v => snapshotOf(spark, path, v).entries)
       .map(_.path).toSet
     val dataDir = new Path(path, "data")
     var deleted = 0
@@ -396,50 +409,73 @@ object SnapshotTable {
     */
   def read(spark: SparkSession, path: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else latestVersion(spark, path)
-    val (entries, _) = entriesOf(spark, path, v)
-    require(entries.nonEmpty, s"version $v of $path is empty")
-    readEntries(spark, path, entries)
+    readSnapshot(spark, path, v, snapshotOf(spark, path, v))
   }
 
   // ── internals ─────────────────────────────────────────────────────
 
   private case class Entry(path: String, part: String)
 
+  /** One version's log record: its files, the table's partition columns
+    * and its data schema (partition columns excluded, fields nullable).
+    */
+  private case class Snapshot(entries: Seq[Entry], partitionCols: Seq[String],
+                              dataSchema: StructType)
+
   /** `data/<commit>` — the commit subtree an entry's file lives in. */
   private def commitOf(e: Entry): String = e.path.split("/").take(2).mkString("/")
 
-  private def entriesOf(spark: SparkSession, path: String,
-                        v: Long): (Seq[Entry], Seq[String]) = {
-    val rows = manifest(spark, path, v)
-      .select("path", "part", "partition_cols").collect()
-    val entries = rows.map(r => Entry(r.getString(0), r.getString(1))).toSeq
-    val pcols = rows.headOption.map(_.getString(2)) match {
-      case Some("") | None => Nil
-      case Some(s) => s.split(",").toSeq
+  private def snapshotOf(spark: SparkSession, path: String, v: Long): Snapshot = {
+    val fs = fsOf(spark, path)
+    val dir = new Path(new Path(path, ManifestDir), versionDirName(v))
+    val node = try {
+      val in = fs.open(new Path(dir, ManifestFile))
+      try Json.readTree(in) finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException =>
+        throw new IllegalStateException(
+          if (fs.exists(dir)) s"snapshot table $path: version $v has no $ManifestFile " +
+            "(an older manifest format, which is not migrated); rebuild the table"
+          else s"snapshot table $path has no version $v")
     }
-    (entries, pcols)
+    def strings(n: JsonNode): Seq[String] = n.elements().asScala.map(_.asText).toSeq
+    Snapshot(
+      node.get("entries").elements().asScala
+        .map(e => Entry(e.get("path").asText, e.get("part").asText)).toSeq,
+      strings(node.get("partition_cols")),
+      DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType])
   }
 
-  private def readEntries(spark: SparkSession, root: String,
-                          entries: Seq[Entry]): DataFrame = {
+  private def readSnapshot(spark: SparkSession, path: String, v: Long,
+                           s: Snapshot): DataFrame = {
+    require(s.entries.nonEmpty, s"version $v of $path is empty")
+    readEntries(spark, path, s.entries, s.dataSchema)
+  }
+
+  /** One parquet branch per commit subtree, each read under the stored
+    * `dataSchema` (no inference job); partition columns re-attach from
+    * the paths below each branch's `basePath`. Files of commits written
+    * before a column was added read it as null.
+    */
+  private def readEntries(spark: SparkSession, root: String, entries: Seq[Entry],
+                          dataSchema: StructType): DataFrame = {
     val byCommit = entries.groupBy(commitOf)
     val branches = byCommit.toSeq.sortBy(_._1).map { case (commitDir, es) =>
-      spark.read
+      spark.read.schema(dataSchema)
         .option("basePath", s"$root/$commitDir")
         .parquet(es.map(e => s"$root/${e.path}"): _*)
     }
-    // missing-column fill: commits written BEFORE a column was added
-    // (append-time schema evolution) read back with nulls in it
     branches.reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Write `df` under a fresh commit subtree; return its manifest
-    * entries. Files land directly in their final location — atomicity
-    * comes from the manifest publish, so uncommitted files are inert
-    * (invisible to readers, reclaimed by vacuum).
+  /** Write `df` under a fresh commit subtree; return the commit as a
+    * snapshot of its own files and data schema. Files land directly in
+    * their final location — atomicity comes from the manifest publish,
+    * so uncommitted files are inert (invisible to readers, reclaimed by
+    * vacuum).
     */
   private def writeCommit(spark: SparkSession, root: String, df: DataFrame,
-                          partitionCols: Seq[String]): Seq[Entry] = {
+                          partitionCols: Seq[String]): Snapshot = {
     val fs = fsOf(spark, root)
     val commit = "data/commit-" + java.util.UUID.randomUUID().toString.take(12)
     val dest = new Path(root, commit)
@@ -457,18 +493,26 @@ object SnapshotTable {
         out += Entry(rel, part)
       }
     }
-    out.result()
+    Snapshot(out.result(), partitionCols, Shims.asNullable(
+      StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))))
   }
 
+  /** Publish version `v`: the `kept` entries carried forward, then the
+    * commit's own, at the commit's schema — the newest commit is written
+    * at the full table schema, so its schema is the version's.
+    */
   private def publish(spark: SparkSession, root: String, v: Long,
-                      entries: Seq[Entry], partitionCols: Seq[String]): Long = {
-    import spark.implicits._
+                      kept: Seq[Entry], commit: Snapshot): Long = {
     val fs = fsOf(spark, root)
-    val pcols = partitionCols.mkString(",")
-    val mf = entries.map(e => (e.path, e.part, pcols))
-      .toDF("path", "part", "partition_cols")
+    val doc = Json.createObjectNode()
+    val es = doc.putArray("entries")
+    (kept ++ commit.entries).foreach(e => es.addObject().put("path", e.path).put("part", e.part))
+    val pcols = doc.putArray("partition_cols")
+    commit.partitionCols.foreach(c => pcols.add(c))
+    doc.set[JsonNode]("schema", Json.readTree(commit.dataSchema.json))
     val tmp = new Path(root, s"$ManifestDir/.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    mf.coalesce(1).write.parquet(tmp.toString)
+    val out = fs.create(new Path(tmp, ManifestFile), false)
+    try out.write(Json.writeValueAsBytes(doc)) finally out.close()
     val target = new Path(new Path(root, ManifestDir), versionDirName(v))
     atomicPublishDir(fs, tmp, target)
     commitHooks.getOrDefault(root, Nil).foreach(_(root, v))

@@ -55,6 +55,12 @@ object Shims {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** `s` with every field nullable, nested ones included — the schema a
+    * file-source read reports for data written at `s`.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Register a custom expression under a SQL function name. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

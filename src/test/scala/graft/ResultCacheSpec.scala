@@ -1,7 +1,9 @@
 package graft
 
 import graft.sources.ResultCache
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Contract tests for the TTL'd materialized result cache: hit
   * short-circuits compute, expiry recomputes, invalidation forces a
@@ -265,5 +267,41 @@ class ResultCacheSpec extends SparkSpec {
     val df = ResultCache.getOrCompute(spark, dir, "k", ttlMs = 60000L)(
       Seq(2L).toDF("v"))
     assert(df.as[Long].collect().toSeq === Seq(2L))
+  }
+
+  private def generations(dir: String, key: String): Seq[java.nio.file.Path] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir, key))
+    try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("e-")).toSeq
+    finally ls.close()
+  }
+
+  test("a hit's getOrCompute runs no Spark job before the caller's action") {
+    val dir = root()
+    val key = ResultCache.keyOf("jobs", Nil)
+    def cached() = ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L)(
+      Seq((1L, "x"), (2L, "y")).toDF("k", "v").groupBy("v").agg(sum("k").as("s")))
+    cached().collect()
+    val (hit, n) = JobCount.of(spark.sparkContext)(cached())
+    assert(n === 0, s"a hit started $n jobs before its action")
+    assert(hit.as[(String, Long)].collect().toSet === Set(("x", 1L), ("y", 2L)))
+    // the stored schema is the one an inferring read of the generation reports
+    val gen = generations(dir, key).head
+    assert(hit.schema === spark.read.parquet(gen.resolve("data").toString).schema)
+  }
+
+  test("a generation without _schema is a miss that recomputes") {
+    // the layout an older publisher left: data and stamp, no schema
+    val dir = root()
+    val key = ResultCache.keyOf("noschema", Nil)
+    var computes = 0
+    def cached() = ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L) {
+      computes += 1; Seq(computes.toLong).toDF("k")
+    }
+    cached()
+    generations(dir, key).foreach(g => java.nio.file.Files.delete(g.resolve("_schema")))
+    assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
+      "a fresh generation without _schema must recompute, not fail")
+    assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
+      "the republished generation serves")
   }
 }

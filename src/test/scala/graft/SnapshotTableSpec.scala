@@ -1,7 +1,9 @@
 package graft
 
 import graft.sources.SnapshotTable
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Contract tests for the snapshot-isolated table format: atomic
@@ -241,12 +243,12 @@ class SnapshotTableSpec extends SparkSpec {
     def stage(name: String): Path = {
       val p = new Path(dir, name)
       fs.mkdirs(p)
-      val out = fs.create(new Path(p, "manifest.parquet")); out.write(1); out.close()
+      val out = fs.create(new Path(p, "manifest.json")); out.write(1); out.close()
       p
     }
     val target = new Path(dir, "v00000001")
     SnapshotTable.atomicPublishDir(fs, stage(".tmp-winner"), target)
-    assert(fs.exists(new Path(target, "manifest.parquet")), "winner publishes cleanly")
+    assert(fs.exists(new Path(target, "manifest.json")), "winner publishes cleanly")
 
     // first, the raw Hadoop hazard the guard exists for: rename into an
     // existing dir returns TRUE and nests the source — the old code
@@ -266,7 +268,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!fs.exists(loser), "staging dir must be cleaned up")
     assert(fs.listStatus(target).forall(!_.getPath.getName.startsWith(".tmp-")),
       "nothing may nest inside the winner's version dir")
-    assert(fs.exists(new Path(target, "manifest.parquet")), "winner intact")
+    assert(fs.exists(new Path(target, "manifest.json")), "winner intact")
   }
 
   test("torn publish: staged manifest with no rename is invisible, vacuum reclaims it") {
@@ -282,9 +284,11 @@ class SnapshotTableSpec extends SparkSpec {
     Seq((9L, "z", 9L)).toDF("k", "part_col", "ord")
       .write.partitionBy("part_col").parquet(s"$t/data/commit-torn0001")
     // ... and its staged-but-never-renamed manifest
-    Seq(("data/commit-torn0001/part_col=z/x.parquet", "part_col=z", "part_col"))
-      .toDF("path", "part", "partition_cols")
-      .coalesce(1).write.parquet(s"$t/_manifests/.tmp-torn0001")
+    val staged = java.nio.file.Paths.get(s"$t/_manifests/.tmp-torn0001")
+    java.nio.file.Files.createDirectories(staged)
+    java.nio.file.Files.writeString(staged.resolve("manifest.json"),
+      """{"entries":[{"path":"data/commit-torn0001/part_col=z/x.parquet","part":"part_col=z"}],""" +
+        s""""partition_cols":["part_col"],"schema":${seed.drop("part_col").schema.json}}""")
     assert(SnapshotTable.versions(spark, t) === Seq(1L),
       "a staged manifest must not be a visible version")
     assert(rowsOf(t).size === 5, "readers still see the last published version")
@@ -466,5 +470,113 @@ class SnapshotTableSpec extends SparkSpec {
     assert(deleted === v1Files,
       s"deleted count must equal v1's parquet file count ($v1Files), got $deleted")
     assert(rowsOf(t).size === 5, "live commit must read fine after vacuum")
+  }
+
+  /** A table with two commit branches: v1 and one append. */
+  private def twoBranches(prefix: String): String = {
+    val t = tmpTable(prefix)
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    SnapshotTable.append(spark, t, Seq((6L, "c", 2L)).toDF("k", "part_col", "ord"))
+    t
+  }
+
+  test("building read(...) runs no Spark job") {
+    val t = twoBranches("graft_snap_jobs_read")
+    val (df, n) = JobCount.of(spark.sparkContext)(SnapshotTable.read(spark, t))
+    assert(n === 0, s"read(...) started $n jobs before any action")
+    assert(df.count() === 6)
+  }
+
+  test("manifest(...).collect() runs no Spark job") {
+    val t = twoBranches("graft_snap_jobs_mf")
+    val (rows, n) = JobCount.of(spark.sparkContext)(SnapshotTable.manifest(spark, t).collect())
+    assert(n === 0, s"manifest collect started $n jobs")
+    assert(rows.map(_.getString(2)).toSet === Set("part_col"))
+    assert(rows.length >= 4)
+  }
+
+  test("vacuum runs no Spark job") {
+    val t = twoBranches("graft_snap_jobs_vac")
+    SnapshotTable.compact(spark, t)
+    val (deleted, n) = JobCount.of(spark.sparkContext)(SnapshotTable.vacuum(spark, t, keepVersions = 1))
+    assert(n === 0, s"vacuum started $n jobs")
+    assert(deleted > 0)
+    assert(rowsOf(t).size === 6)
+  }
+
+  test("an append of a small unpartitioned frame runs only its data-write job") {
+    val t = tmpTable("graft_snap_jobs_app")
+    SnapshotTable.create(spark, t, seed.drop("part_col"))
+    val batch = Seq((6L, 2L)).toDF("k", "ord")
+    val (v, n) = JobCount.of(spark.sparkContext)(SnapshotTable.append(spark, t, batch))
+    assert(v === 2L && n === 1, s"append started $n jobs")
+    assert(SnapshotTable.read(spark, t).count() === 6)
+  }
+
+  test("a partitioned table created from an empty frame keeps its partitioning") {
+    val t = tmpTable("graft_snap_empty")
+    val batch = Seq((1L, "2024-01-01", 1L), (2L, "2024-01-02", 1L)).toDF("k", "dt", "ord")
+    assert(SnapshotTable.create(spark, t, batch.limit(0), Seq("dt")) === 1L)
+    assert(SnapshotTable.manifest(spark, t).collect().isEmpty)
+    SnapshotTable.upsertOrCreate(spark, t, batch, Seq("k"), "ord", Seq("dt"))
+    val parts = SnapshotTable.manifest(spark, t).select("part").as[String].collect().toSet
+    assert(parts === Set("dt=2024-01-01", "dt=2024-01-02"),
+      "the second commit must write at the table's partitioning")
+    assert(SnapshotTable.read(spark, t).schema("dt").dataType === DateType)
+  }
+
+  test("read's schema equals an inferring read for date-like, digit-only, Hive-escaped and null partitions") {
+    // what a direct `spark.read.parquet` of the version's files reports:
+    // partition types inferred from the paths, data columns nullable
+    def inferred(t: String): StructType = {
+      val files = SnapshotTable.manifest(spark, t).select("path").as[String].collect().toSeq
+      val commits = files.map(_.split("/").take(2).mkString("/")).distinct
+      assert(commits.length === 1)
+      spark.read.option("basePath", s"$t/${commits.head}")
+        .parquet(files.map(f => s"$t/$f"): _*).schema
+    }
+    Seq(
+      "date-like" -> Seq(Some("2024-01-01"), Some("2024-01-02")),
+      "digit-only" -> Seq(Some("7"), Some("42")),
+      "Hive-escaped" -> Seq(Some("a b"), Some("x:y/z")),
+      "null" -> Seq(Some("a"), None)
+    ).foreach { case (kind, values) =>
+      val t = tmpTable("graft_snap_fid")
+      SnapshotTable.create(spark, t,
+        values.zipWithIndex.map { case (p, i) => (i.toLong, p, 1L) }.toDF("k", "part_col", "ord"),
+        Seq("part_col"))
+      assert(SnapshotTable.read(spark, t).schema === inferred(t), kind)
+      SnapshotTable.append(spark, t, Seq((9L, values.head, 2L)).toDF("k", "part_col", "ord"))
+      SnapshotTable.compact(spark, t)
+      assert(SnapshotTable.read(spark, t).schema === inferred(t), s"$kind, compacted")
+    }
+    // a column added by append null-fills the older commit's rows under
+    // the stored schema, with data columns before partition columns
+    val t = tmpTable("graft_snap_fid_evo")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    SnapshotTable.append(spark, t, Seq((6L, "c", 2L, "fresh")).toDF("k", "part_col", "ord", "note"))
+    val back = SnapshotTable.read(spark, t)
+    assert(back.columns.toSeq === Seq("k", "ord", "note", "part_col"))
+    val notes = back.select("k", "note").as[(Long, Option[String])].collect().toMap
+    assert(notes(6L) === Some("fresh") && (1L to 5L).forall(notes(_).isEmpty))
+  }
+
+  test("a version without manifest.json is refused with an error naming the table") {
+    val t = tmpTable("graft_snap_oldfmt")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    // version 2 as an older writer published it: a parquet manifest
+    Seq(("data/commit-old/part_col=a/x.parquet", "part_col=a", "part_col"))
+      .toDF("path", "part", "partition_cols")
+      .coalesce(1).write.parquet(s"$t/_manifests/v00000002")
+    Seq[(String, () => Any)](
+      "read" -> (() => SnapshotTable.read(spark, t)),
+      "manifest" -> (() => SnapshotTable.manifest(spark, t)),
+      "append" -> (() => SnapshotTable.append(spark, t, seed)),
+      "vacuum" -> (() => SnapshotTable.vacuum(spark, t, keepVersions = 1))
+    ).foreach { case (op, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(t) && e.getMessage.contains("manifest.json"), s"$op: ${e.getMessage}")
+    }
+    assert(rowsOf(t, 1L).size === 5, "the current-format version still reads")
   }
 }
