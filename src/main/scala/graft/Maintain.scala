@@ -9,15 +9,17 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   * stage debris and superseded layouts accumulated until someone did).
   * One invocation sweeps, in dependency order:
   *
-  *   1. '''versioned ANN serving stores''' — float IVF, SQ8 and PQ
-  *      homes all carry the same `v<NNNNNNNN>`/atomic-rename store
-  *      since r16 ([[graft.ops.Similarity.vacuumIvfVersions]]): all
-  *      but the newest `keepVersions` versions + crashed-rebuild
-  *      `.tmp-*` stagings — swept BEFORE the layout vacuum so version
-  *      GC never races the reclamation of its own parent directory.
-  *      Under `--compact-ivf` a fragmented store republishes coalesced
-  *      as v+1. Only `v<N>` versions are read: any other directory
-  *      under a home is left alone and ages out with the home;
+  *   1. '''ANN serving stores''' — the float IVF, SQ8 and PQ homes
+  *      each keep one [[SnapshotTable]] store partitioned by `cell`
+  *      under `<home>/table` ([[graft.ops.AnnServing.storeIn]]): its
+  *      fragmentation (files and cells of the latest manifest) is
+  *      probed, under `--compact-ivf` a fragmented store compacts to
+  *      one file per cell ([[SnapshotTable.compact]]), and
+  *      [[SnapshotTable.vacuum]] keeps the newest `keepVersions`
+  *      versions' files — swept BEFORE the layout vacuum so store GC
+  *      never races the reclamation of its own parent directory. Any
+  *      other directory under a home is left alone and ages out with
+  *      the home;
   *   2. '''serving layouts''' ([[ServingLayouts.vacuum]]): dedup/ANN
   *      layout homes no process has served from within the retention
   *      window, plus crashed builders' `.stage-*`/`.debris-*` dirs;
@@ -36,7 +38,7 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   * {{{
   *   runMain graft.Maintain <corpusDir>
   *     [--layout-age-ms N]     retention for serving layouts (default 7d)
-  *     [--keep-ivf N]          IVF versions kept (default 2)
+  *     [--keep-ivf N]          ANN store versions kept (default 2)
   *     [--snapshot <path>]...  snapshot tables to vacuum (keep 2)
   *     [--cache-root <path>]   result-cache roots to sweep (TTL 300s)
   *     [--cache-ttl-ms N]
@@ -53,7 +55,7 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   */
 object Maintain {
 
-  case class Report(ivfVersions: Int, layouts: Int, snapshots: Int, cacheDirs: Int,
+  case class Report(ivfFiles: Int, layouts: Int, snapshots: Int, cacheDirs: Int,
                     geometryDrift: Option[(Int, Int, Boolean)] = None,
                     scratchRoots: Int = 0,
                     ivfFragmentation: Option[(Long, Long, Boolean)] = None,
@@ -70,7 +72,7 @@ object Maintain {
           s"""{"files":$files,"cells":$cells,"compact_recommended":$rec}"""
         case None => "null"
       }
-      s"""{"metric":"maintain","corpus":"$corpusDir","ivf_versions_reclaimed":$ivfVersions,""" +
+      s"""{"metric":"maintain","corpus":"$corpusDir","ivf_files_reclaimed":$ivfFiles,""" +
         s""""layouts_reclaimed":$layouts,"snapshot_files_reclaimed":$snapshots,""" +
         s""""cache_dirs_reclaimed":$cacheDirs,"scratch_roots_reclaimed":$scratchRoots,""" +
         s""""ivf_geometry":$drift,"ivf_fragmentation":${fragJson(ivfFragmentation)},""" +
@@ -90,68 +92,32 @@ object Maintain {
           scratchAgeMs: Long = 7L * 24 * 3600 * 1000,
           compactIvfStore: Boolean = false): Report = {
     // Fragmentation probe FIRST (pre-sweep state — the signal that
-    // justifies action, reported as found): continuous ingest and
-    // append-accumulating builds add files per cell, so files/cell
-    // grows with history and serving latency becomes file-open
-    // overhead (measured, r15: 46 k slivers put ~15 s on every serving
-    // batch at sf10). Threshold 8 files/cell ≈ where the measured
-    // ~0.3 ms/open overhead reached scan parity.
-    import java.nio.file.{Files, Paths}
-    def countCellFiles(dataDir: java.nio.file.Path): (Long, Long) = {
-      var files = 0L
-      var cells = 0L
-      if (Files.isDirectory(dataDir)) {
-        val s = Files.list(dataDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.foreach { p =>
-            if (p.getFileName.toString.startsWith("cell=")) {
-              cells += 1
-              val c = Files.list(p)
-              try files += c.iterator().asScala
-                .count(_.getFileName.toString.endsWith(".parquet"))
-              finally c.close()
-            }
-          }
-        } finally s.close()
-      }
-      (files, cells)
-    }
-    def fragOf(fc: (Long, Long)): (Long, Long, Boolean) =
-      (fc._1, fc._2, fc._2 > 0 && fc._1 > fc._2 * 8)
-
-    // Probe + (under --compact-ivf, when fragmented) compact + version
-    // vacuum, PER SERVING STORE — all three families (float ivf, sq8,
-    // pq) carry versioned stores. Compaction stays GATED on the probe
-    // (an unconditional republish would full-rewrite the corpus per
-    // cron tick forever); with the default keepIvfVersions=2 the
-    // fragmented version survives one extra cycle for pinned readers —
-    // pass --keep-ivf 1 to reclaim it in the same run. A store with no
-    // versions reports no fragmentation; its vacuum still reclaims
-    // crashed-publish `.tmp-*` stagings.
-    case class StoreSweep(frag: Option[(Long, Long, Boolean)], versionsReclaimed: Int)
-    def sweepStore(kind: String, storeSub: String, dataSub: String,
-                   compact: String => Long): StoreSweep =
+    // justifies action, reported as found): continuous ingest adds
+    // files per cell, so files/cell grows with history and serving
+    // latency becomes file-open overhead (46 k slivers put ~15 s on
+    // every serving batch at sf10). Threshold 8 files/cell ≈ where the
+    // measured ~0.3 ms/open overhead reached scan parity. Compaction
+    // stays GATED on the probe (an unconditional one would rewrite the
+    // corpus per cron tick); with the default keepIvfVersions=2 the
+    // fragmented version survives one extra cycle for pinned readers.
+    case class StoreSweep(frag: Option[(Long, Long, Boolean)], filesReclaimed: Int)
+    def sweepStore(kind: String): StoreSweep =
       ServingLayouts.existingDirFor(kind, corpusDir) match {
         case None => StoreSweep(None, 0)
         case Some(home) =>
-          val store = s"$home/$storeSub"
-          val frag = graft.ops.Similarity.ivfVersions(spark, store).lastOption
-            .map(v => fragOf(countCellFiles(Paths.get(store, f"v$v%08d", dataSub))))
-          if (compactIvfStore && frag.exists(_._3)) compact(store)
-          StoreSweep(frag,
-            graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions))
+          val store = graft.ops.AnnServing.storeIn(home)
+          val frag = SnapshotTable.versions(spark, store).lastOption.map { _ =>
+            val parts = SnapshotTable.manifest(spark, store).collect().map(_.getString(1))
+            val (files, cells) = (parts.length.toLong, parts.distinct.length.toLong)
+            (files, cells, cells > 0 && files > cells * 8)
+          }
+          if (compactIvfStore && frag.exists(_._3)) SnapshotTable.compact(spark, store, 1)
+          StoreSweep(frag, SnapshotTable.vacuum(spark, store, keepIvfVersions))
       }
 
-    val ivfSweep = sweepStore("ivf", "ivf", "assigned",
-      s => graft.ops.Similarity.compactIvf(spark, s))
-    val sq8Sweep = sweepStore("sq8", "ivf", "assigned",
-      s => graft.ops.Similarity.compactIvf(spark, s))
-    val pqSweep = sweepStore("ivfpq", "pq", "codes",
-      s => graft.ops.Similarity.compactIvfPq(spark, s))
-    val frag = ivfSweep.frag
+    val Seq(ivfSweep, sq8Sweep, pqSweep) = Seq("ivf", "sq8", "ivfpq").map(sweepStore)
     val ivfReclaimed =
-      ivfSweep.versionsReclaimed + sq8Sweep.versionsReclaimed + pqSweep.versionsReclaimed
+      ivfSweep.filesReclaimed + sq8Sweep.filesReclaimed + pqSweep.filesReclaimed
     val layoutsReclaimed = ServingLayouts.vacuum(layoutAgeMs)
     val snapReclaimed = snapshotPaths.map(p =>
       SnapshotTable.vacuum(spark, p, snapshotKeep)).sum
@@ -183,7 +149,7 @@ object Maintain {
     // The report carries the PRE-sweep fragmentation (the condition
     // that was found and, under --compact-ivf, acted on in this run).
     Report(ivfReclaimed, layoutsReclaimed, snapReclaimed, cacheReclaimed, drift,
-      scratchReclaimed, frag, sq8Sweep.frag, pqSweep.frag)
+      scratchReclaimed, ivfSweep.frag, sq8Sweep.frag, pqSweep.frag)
   }
 
   def main(args: Array[String]): Unit = {
@@ -195,7 +161,7 @@ object Maintain {
     var cacheRoots = Vector.empty[String]
     var cacheTtlMs = 300000L
     var scratchAgeMs = 7L * 24 * 3600 * 1000
-    var compactIvf = false
+    var compact = false
     var i = 1
     while (i < args.length) {
       args(i) match {
@@ -205,14 +171,14 @@ object Maintain {
         case "--cache-root" => cacheRoots :+= args(i + 1); i += 2
         case "--cache-ttl-ms" => cacheTtlMs = args(i + 1).toLong; i += 2
         case "--scratch-age-ms" => scratchAgeMs = args(i + 1).toLong; i += 2
-        case "--compact-ivf" => compactIvf = true; i += 1
+        case "--compact-ivf" => compact = true; i += 1
         case other => sys.error(s"unknown flag: $other")
       }
     }
     val spark = GraftSession.builder(defaultCpus = "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val report = run(spark, corpusDir, layoutAgeMs, keepIvf,
-      snapshots, 2, cacheRoots, cacheTtlMs, scratchAgeMs, compactIvf)
+      snapshots, 2, cacheRoots, cacheTtlMs, scratchAgeMs, compact)
     println(report.json(corpusDir))
     spark.stop()
   }

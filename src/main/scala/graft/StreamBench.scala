@@ -227,59 +227,40 @@ object StreamBench {
     // can never be reused — it resolves to a different home and triggers
     // a fresh build (the r14 advisor's signature-validation concern,
     // answered by construction). The bench MUTATES its index (workload 2
-    // appends), so it clones the latest version into the work dir via
-    // hardlinks instead of appending into the shared store other
-    // processes serve from: parquet files are immutable, links cost
-    // nothing, and the store is never touched.
+    // appends), so it clones the store into the work dir by hardlinking
+    // its root (`data/` and `_manifests/`) instead of appending into the
+    // shared store other processes serve from: data files and manifests
+    // are immutable, links cost nothing, and the store is never touched.
+    // The latest manifest carries the centroids and the high-water mark
+    // the ingest's O(batch) redelivery guard needs.
     if (workloads("embedding") || workloads("query")) {
+      import graft.sources.SnapshotTable
       val embTable = Tables.embeddings(spark, sfDir)
       val emb = graft.ops.Similarity.prepared(embTable)
-      val store = graft.sources.ServingLayouts.dirFor("ivf", sfDir) + "/ivf"
-      val reused = graft.ops.Similarity.ivfVersions(spark, store).nonEmpty
+      val store = graft.ops.AnnServing.storeIn(
+        graft.sources.ServingLayouts.dirFor("ivf", sfDir))
+      val reused = SnapshotTable.versions(spark, store).nonEmpty
       if (!reused)
         graft.ops.Similarity.writeIvfVersioned(
           graft.ops.Similarity.buildIvf(embTable,
             graft.ops.LshGeometry.ivf(embTable.count())._1), store,
           geometryIntent = Some(false))
-      val vLatest = graft.ops.Similarity.ivfVersions(spark, store).last
-      val verDir = f"$store/v$vLatest%08d"
       val idxPath = s"$work/ivf_index"
-      def linkTree(srcDir: String, dstDir: String): Long = {
-        val src = Paths.get(srcDir)
-        var parquetFiles = 0L
-        val walk = Files.walk(src)
-        try {
-          walk.forEach { p =>
-            val dst = Paths.get(dstDir).resolve(src.relativize(p).toString)
-            if (Files.isDirectory(p)) Files.createDirectories(dst)
-            else {
-              if (p.getFileName.toString.endsWith(".parquet")) parquetFiles += 1
-              try Files.createLink(dst, p)
-              catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-                Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING) }
-            }
-          }
-        } finally walk.close()
-        parquetFiles
-      }
-      val clonedFiles = linkTree(s"$verDir/assigned", s"$idxPath/assigned")
-      linkTree(s"$verDir/centroids", s"$idxPath/centroids")
+      val walk = Files.walk(Paths.get(store))
+      try walk.forEach { src =>
+        val dst = Paths.get(idxPath).resolve(Paths.get(store).relativize(src).toString)
+        if (Files.isDirectory(src)) Files.createDirectories(dst)
+        else try Files.createLink(dst, src)
+        catch { case _: UnsupportedOperationException | _: java.io.IOException =>
+          Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING) }
+      } finally walk.close()
       // SERVED geometry — read back from the stored layout, never re-derived
-      val nCells = spark.read.parquet(s"$idxPath/centroids").count().toInt
+      val nCells = graft.ops.Similarity.loadIvfVersioned(spark, idxPath).nCells
       val nProbe = graft.ops.LshGeometry.ivfProbe(nCells)
       parts += s""""n_cells":$nCells"""
       parts += s""""n_probe":$nProbe"""
       parts += s""""index_reused":$reused"""
       val maxVec = emb.agg(max("vec_id")).head.getLong(0)
-      // stamp the clone with FULL meta, not just a version: the query
-      // drain's stamp-poll contract needs the version; the ingest's
-      // O(batch) redelivery guard needs the high-water mark (the clone
-      // holds exactly the corpus, so its stored max IS maxVec); the
-      // auto-compaction trigger needs the live file count (counted
-      // during the hardlink walk — no extra listing)
-      graft.ops.Similarity.writeIvfMeta(spark, idxPath,
-        graft.ops.Similarity.IvfMeta(version = 1L, hwm = Some(maxVec),
-          pending = None, gen = 0, files = clonedFiles))
 
       // ---- workload 2: embedding ingest (append into stored IVF cells) ----
       if (workloads("embedding")) {
@@ -291,7 +272,7 @@ object StreamBench {
         // stored ids (the r15 full anti-join read the entire stored
         // vec_id column — 3.0 M rows / 7.6 k files per batch at sf100);
         // these metrics are the proof the guard now costs ∝ batch
-        val ingestScanTap = new ScanTap("ivf_index/assigned")
+        val ingestScanTap = new ScanTap("ivf_index/data")
         val ingestStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
         spark.listenerManager.register(ingestScanTap)
         val embWall =
@@ -299,7 +280,7 @@ object StreamBench {
             // autoCompact armed at the measured 8-files/cell knee: the
             // bench drives enough batches to ratchet past it, so the
             // drain exercises (and times, via the stage sink) the
-            // generation-flip compaction a long-running ingest needs
+            // compaction a long-running ingest needs
             graft.streaming.EmbeddingStream.ingestOnce(spark, embSrc, idxPath,
               s"$work/emb_ckpt", maxFilesPerTrigger = 1,
               autoCompactFilesPerCell = 8,
@@ -311,9 +292,9 @@ object StreamBench {
         parts += s""""embedding_ingest_stage_ms":${stageJsonOf(ingestStages)}"""
         // post-ingest layout state: the auto-compact contract is that
         // file count stays bounded WITHOUT a manual maintenance step
-        val postMeta = graft.ops.Similarity.readIvfMeta(spark, idxPath)
-        parts += s""""index_files_after_ingest":${postMeta.files}"""
-        parts += s""""index_generation":${postMeta.gen}"""
+        parts += s""""index_files_after_ingest":${
+          SnapshotTable.manifest(spark, idxPath).collect().length}"""
+        parts += s""""index_version":${SnapshotTable.latestVersion(spark, idxPath)}"""
       }
 
       // ---- workload 3: ANN query serving over the (grown) index ----
@@ -323,7 +304,7 @@ object StreamBench {
         def drain(tag: String): (Long, Int, Long, Long, Double, Int, String, String) = {
           val qTap = new ProgressTap(touchWork)
           val qStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-          val scanTap = new ScanTap("ivf_index/assigned")
+          val scanTap = new ScanTap("ivf_index/data")
           spark.listenerManager.register(scanTap)
           var qLoads = 0
           val qWall =

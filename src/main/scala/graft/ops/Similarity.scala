@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
+import graft.sources.SnapshotTable
 
 /** Similarity search over an embedding column (SURVEY.md §2D):
   * brute-force cosine top-k as the exact baseline/oracle, and a
@@ -143,8 +144,8 @@ object Similarity {
     // (176.8 M pairs × 64 dims) ≈ 0.7 TB of joined/spilled bytes in ONE
     // plan, which out-sizes any single host and is pure waste even on a
     // cluster (all of it in flight at once). One cheap occupancy
-    // aggregation over the keyed rows (Σ C(occ,2) — the same measure
-    // LshStats occupancy mode records) bounds the candidate mass
+    // aggregation over the keyed rows (Σ C(occ,2) — the occupancy
+    // measure of the LSHSTATS_*.json artifacts) bounds the candidate mass
     // WITHOUT running the pair join; below the slice budget the
     // single-pass plan runs bit-for-bit as before (every driver-gate
     // corpus and sf1/sf10 land here), above it candidates are written
@@ -442,14 +443,15 @@ object Similarity {
   }
 
   /** The ONE derivation path for the auto hyperplane geometry — shared
-    * by [[embeddingNearDupsLshAuto]] and the LshStats diagnostic so the
-    * measured candidate load can never diverge from the operator's
-    * actual shuffle load (r10 advisor: the operator passed its 0.45
+    * by [[embeddingNearDupsLshAuto]] and LshGeometrySpec, so the
+    * specified candidate load can never diverge from the operator's
+    * actual shuffle load (the operator once passed its 0.45
     * verification threshold positionally into `dupSim`, silently
-    * deriving a ~2.7× more expensive geometry than the one LSHSTATS /
-    * LshGeometrySpec recorded). `dupSim` stays at its 0.85 default: the
-    * scale contract is the dup-level recall floor, not the
-    * threshold-level one (see [[LshGeometry.hyperplane]]).
+    * deriving a ~2.7× more expensive geometry than the one the
+    * LSHSTATS_*.json artifacts and LshGeometrySpec recorded). `dupSim`
+    * stays at its 0.85 default: the scale contract is the dup-level
+    * recall floor, not the threshold-level one (see
+    * [[LshGeometry.hyperplane]]).
     */
   def hyperplaneGeometryFor(n: Long): (Int, Int) = LshGeometry.hyperplane(n)
 
@@ -546,9 +548,10 @@ object Similarity {
       * frame itself, so a loaded layout is always queried at the
       * geometry it was built with, never at whatever today's derivation
       * would pick (derive-once: geometry is baked at build time).
-      * Counted once per instance; serving caches hold the instance.
+      * Built and loaded centroids are local relations, whose collect
+      * starts no Spark job; serving caches hold the instance.
       */
-    lazy val nCells: Int = centroids.count().toInt
+    lazy val nCells: Int = centroids.select(col("cell")).collect().length
   }
 
   /** Index-build phase: KMeans coarse quantizer over the corpus, one
@@ -653,8 +656,7 @@ object Similarity {
     * symmetric to dedup_incremental: a new embedding batch is assigned
     * to the EXISTING coarse quantizer (centroids are fixed model
     * metadata — no refit, no touch of the stored corpus) and appended.
-    * At 100 TB this is an append of new files into the affected `cell=`
-    * partitions of the [[writeIvfPartitioned]] layout; periodic refit
+    * [[appendToIvfPartitioned]] is the persisted form; periodic refit
     * is an offline rebuild, exactly like re-training any index. Cost
     * scales with the batch, never the corpus.
     */
@@ -663,200 +665,92 @@ object Similarity {
       index.assigned.unionByName(
         assignCells(index.centroids, prepared(newEmbeddings))))
 
-  /** Persist a built IVF index cell-partitioned — the billion-vector
-    * layout: probing nProbe of nCells reads ONLY those cells' files
-    * (partition pruning), so query I/O is nProbe/nCells of the corpus.
-    * Returns a loader whose `assigned` is the partition-pruned reader;
-    * compose it with [[queryIvf]] and only probed cells are scanned.
+  /** The persisted IVF store: a [[SnapshotTable]] partitioned by `cell`,
+    * so probing nProbe of nCells reads only those cells' files. The
+    * float store (which SQ8 serves over dequantized vectors) holds the
+    * assigned rows (vec_id, v, norm2); the PQ store holds (vec_id,
+    * codes). The model rides in the version properties and flips
+    * atomically with the data it describes:
+    *   - `centroids`: per-cell centroid doubles, a JSON array indexed by
+    *     cell (the PQ store also keeps `codebooks`, indexed sub → cid);
+    *     Double.toString round-trips every double exactly;
+    *   - `hwm`: the largest vec_id the float store holds, the monotone
+    *     redelivery guard of [[appendToIvfPartitioned]];
+    *   - `geometry_intent`: whether the quantizer geometry was an
+    *     explicit override ([[AnnServing.geometryIntentExplicit]]).
+    * A load builds the model frames as local relations from the log, so
+    * it and `nCells` start no Spark job. A serving reader keeps the
+    * version it loaded: data files are immutable and only
+    * [[SnapshotTable.vacuum]] deletes them, so a concurrent rebuild or
+    * append is invisible to it. Compaction is
+    * [[SnapshotTable.compact]]`(path, 1)`, which carries the properties
+    * forward.
     */
-  def writeIvfPartitioned(index: IvfIndex, path: String): IvfIndex = {
-    val spark = index.assigned.sparkSession
-    // ONE file per cell, not one per (task × cell): partitionBy from an
-    // unshuffled frame makes every task write a sliver into every cell
-    // dir — the r12 sf100 build produced 46 504 files for 2 M rows
-    // (43 rows/file), and the r15 serving bench measured the cost: a
-    // query batch's latency was ~95% file-open overhead (46 k opens
-    // ≈ 15 s) over ~650 MB of actual data. The cell shuffle moves the
-    // corpus once at build time; at real scale size multiple files per
-    // cell to a byte target instead (Sources.compactPartitions logic).
-    index.assigned.repartition(col("cell")).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/assigned")
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    // a fresh write resets the layout to generation 0 — retire any
-    // generation dirs a prior lifecycle left (overwrite semantics)
-    val old = readIvfMeta(spark, path)
-    if (old.gen > 0) {
-      val fs = metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (1 to old.gen).foreach { g =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, assignedDirName(g)), true)
-      }
-    }
-    // hwm + file count from a read-back of the two columns just written
-    // (never a re-execution of the input frame); one file per cell by
-    // construction of the cell shuffle above
-    val st = spark.read.parquet(s"$path/assigned")
-      .agg(max(col("vec_id")), countDistinct(col("cell"))).head()
-    writeIvfMeta(spark, path, IvfMeta(
-      version = math.max(0L, old.version) + 1,
-      hwm = if (st.isNullAt(0)) None else Some(st.getLong(0)),
-      pending = None, gen = 0, files = st.getLong(1)))
+  private val CentroidsKey = "centroids"
+  private val CodebooksKey = "codebooks"
+  private val HwmKey = "hwm"
+  private[graft] val GeometryIntentKey = "geometry_intent"
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Centroid rows (cell, centroid) as the JSON array a store keeps. */
+  private def centroidsJson(centroids: DataFrame): String = {
+    val rows = centroids.select(col("cell"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    require(rows.map(_._1).toSeq == rows.indices, "centroid cells must be 0 until nCells")
+    Json.writeValueAsString(rows.map(_._2))
+  }
+
+  private def centroidsFrame(spark: SparkSession, json: String): DataFrame = {
+    import spark.implicits._
+    Json.readValue(json, classOf[Array[Array[Double]]]).toSeq.zipWithIndex
+      .map { case (c, cell) => (cell, c) }.toDF("cell", "centroid")
+  }
+
+  private def storeProperty(props: Map[String, String], path: String, key: String): String =
+    props.getOrElse(key, throw new IllegalStateException(s"no IVF $key in the store at $path"))
+
+  /** Publish `index` as the next version of the float store at `path`
+    * (version 1 for a new store) with one overwrite commit. `geometryIntent`
+    * None keeps the intent the previous version declared.
+    */
+  def writeIvfVersioned(index: IvfIndex, path: String,
+                        geometryIntent: Option[Boolean] = None): Long = {
+    val top = index.assigned.agg(max(col("vec_id"))).head()
+    SnapshotTable.overwrite(index.assigned.sparkSession, path,
+      // one file per cell: a task-sliced partitionBy left 46 504 files
+      // for 2 M rows at sf100, and serving paid ~15 s/batch opening them
+      index.assigned.repartition(col("cell")), Seq("cell"),
+      Map(CentroidsKey -> centroidsJson(index.centroids),
+        HwmKey -> (if (top.isNullAt(0)) Long.MinValue else top.getLong(0)).toString) ++
+        geometryIntent.map(e => GeometryIntentKey -> (if (e) "explicit" else "derived")))
+  }
+
+  /** Load one version (latest by default) of a float store. */
+  def loadIvfVersioned(spark: SparkSession, path: String,
+                       version: Long = -1L): IvfIndex = {
+    val v = if (version >= 0) version else SnapshotTable.latestVersion(spark, path)
     IvfIndex(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/assigned"))
+      centroidsFrame(spark, storeProperty(SnapshotTable.properties(spark, path, v), path, CentroidsKey)),
+      SnapshotTable.read(spark, path, v))
   }
 
-  /** Metadata sidecar of a flat cell-partitioned layout — one tiny
-    * `_index_version` file carrying everything the continuous-ingest
-    * contract needs to stay O(batch):
-    *
-    *   - '''version''' (line 1): the change stamp a serving stream
-    *     polls instead of re-listing the (at scale, million-file)
-    *     assigned tree ([[graft.streaming.EmbeddingStream.queryOnce]]
-    *     reloads only on a change);
-    *   - '''hwm''': the high-water mark — the largest vec_id the
-    *     layout has ever absorbed. Under the monotone-producer
-    *     contract (upstream assigns strictly increasing ids — the
-    *     crawl→embed pipeline shape) the redelivery guard is a plain
-    *     `vec_id > hwm` filter: zero stored-id scan, where the r15
-    *     full anti-join read 3.0 M id-rows / 7.6 k files PER 100 k-row
-    *     batch at sf100;
-    *   - '''pending''': staked to the incoming batch's max id BEFORE
-    *     its append job runs and promoted into hwm after — a crash
-    *     between the two leaves `pending > hwm`, and the next append
-    *     resolves exactly that window with a narrow anti-join whose
-    *     stored-side scan parquet min/max stats bound to the files the
-    *     crashed batch could have written (every older file's ids are
-    *     ≤ hwm and is skipped whole);
-    *   - '''gen''': the live assigned-directory generation —
-    *     [[compactIvfFlat]] publishes the coalesced rewrite as gen+1
-    *     and retires gen−1, so a reader pinned to the previous
-    *     generation stays valid across one compaction cycle;
-    *   - '''files''': running count of data files in the live
-    *     generation (write: one per cell; append: one per affected
-    *     cell) — the fragmentation signal the auto-compaction trigger
-    *     reads without listing anything. -1 = unknown (legacy layout).
-    *
-    * A missing/torn file reads as `IvfMeta(-1, None, None, 0, -1)`:
-    * version -1 never matches a poller's held stamp (reload every
-    * batch), no hwm falls back to the exact full anti-join guard —
-    * conservative on every axis, never a wrong answer.
+  /** Offline coarse-quantizer RETRAIN of a float store: refit KMeans on
+    * the stored vectors, reassign, and publish as the next version.
+    * Readers pinned to the previous version keep it until vacuum.
     */
-  private[graft] case class IvfMeta(version: Long, hwm: Option[Long],
-                                    pending: Option[Long], gen: Int, files: Long)
-
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_index_version")
-
-  private[graft] def readIvfMeta(spark: SparkSession, path: String): IvfMeta = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      if (!fs.exists(p)) IvfMeta(-1L, None, None, 0, -1L)
-      else {
-        val in = fs.open(p)
-        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val lines = text.split("\n").map(_.trim).filter(_.nonEmpty)
-        val version = lines.headOption.map(_.toLong).getOrElse(-1L)
-        def kv(k: String): Option[Long] = lines.collectFirst {
-          case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
-        }
-        IvfMeta(version, kv("hwm"), kv("pending"),
-          kv("gen").map(_.toInt).getOrElse(0), kv("files").getOrElse(-1L))
-      }
-    } catch {
-      case _: java.io.IOException | _: NumberFormatException =>
-        IvfMeta(-1L, None, None, 0, -1L)
-    }
+  def rebuildIvf(spark: SparkSession, path: String, nCells: Int = 16): Long = {
+    val vectors = loadIvfVersioned(spark, path).assigned
+      .select(col("vec_id"), col("v").as("embedding"))
+    writeIvfVersioned(buildIvf(vectors, nCells), path)
   }
 
-  /** Single-writer append-owner discipline, like the append itself
-    * (parquet append is already not safe under concurrent writers).
-    */
-  private[graft] def writeIvfMeta(spark: SparkSession, path: String,
-                                  meta: IvfMeta): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = new StringBuilder
-    body.append(meta.version).append('\n')
-    meta.hwm.foreach(h => body.append(s"hwm=$h\n"))
-    meta.pending.foreach(h => body.append(s"pending=$h\n"))
-    if (meta.gen != 0) body.append(s"gen=${meta.gen}\n")
-    if (meta.files >= 0) body.append(s"files=${meta.files}\n")
-    val out = fs.create(p, true)
-    try out.write(body.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Change stamp of a flat cell-partitioned layout (the first line of
-    * the [[IvfMeta]] sidecar). Returns -1 for a stampless layout
-    * (pre-stamp builds): a poller must then reload every batch, which
-    * is exactly the legacy behavior.
-    */
-  def ivfStampOf(spark: SparkSession, path: String): Long =
-    readIvfMeta(spark, path).version
-
-  /** Name of generation `gen`'s assigned directory: generation 0 is the
-    * plain `assigned` every pre-generation layout already has.
-    */
-  private def assignedDirName(gen: Int): String =
-    if (gen == 0) "assigned" else f"assigned-g$gen%05d"
-
-  /** The LIVE assigned directory of a flat layout — readers resolve it
-    * through the meta sidecar so a compaction's generation flip is one
-    * stamp read away, never a re-list.
-    */
-  private[graft] def ivfAssignedDir(spark: SparkSession, path: String): String =
-    s"$path/${assignedDirName(readIvfMeta(spark, path).gen)}"
-
-  /** Load a flat cell-partitioned layout's current generation. */
-  def loadIvfFlat(spark: SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(ivfAssignedDir(spark, path)))
-
-  /** Append a new batch to a PERSISTED cell-partitioned index
-    * ([[writeIvfPartitioned]] layout): assign against the stored
-    * centroids, write new files into only the affected `cell=`
-    * directories (mode append — existing files never rewritten), and
-    * return the refreshed loader. The storage-level face of
-    * [[appendToIvf]]: continuous ingest touches O(batch) files while
-    * the corpus-sized index stays in place.
-    *
-    * Redelivery (idempotence) guard — parquet append is not atomic and
-    * ingest batches get replayed; re-appending an already-indexed
-    * vec_id would make it a duplicate candidate in every probe of its
-    * cell. Two forms:
-    *
-    *   - `monotoneIds = true` (the streaming-ingest contract: the
-    *     upstream embed stage assigns strictly increasing vec_ids):
-    *     rows at or under the layout's high-water mark are dropped by
-    *     a plain filter — NO stored-id scan, cost ∝ batch at any
-    *     corpus size. Crash safety is the [[IvfMeta]] pending
-    *     two-phase: the batch's max id is staked before the append job
-    *     and promoted after; an append that crashed between the two
-    *     leaves `pending > hwm`, and the next batch resolves exactly
-    *     that id window with an anti-join whose stored-side scan
-    *     parquet min/max stats bound to the crashed batch's possible
-    *     files (ids in every older file are ≤ hwm — skipped whole).
-    *     DO NOT pass true for an id space that interleaves with
-    *     already-stored ids: new low ids would read as redelivered and
-    *     be dropped.
-    *   - `monotoneIds = false` (default — the general API): the exact
-    *     anti-join against the stored id column, correct for any id
-    *     order at a per-batch cost ∝ corpus. A guarded append also
-    *     initializes the hwm (one extra max() over the same stored
-    *     scan when the layout lacks one), so a layout can be handed to
-    *     the monotone fast path afterwards.
-    */
-  /** O(batch) monotone-contract assertion (r16 verdict item 5): under
-    * `monotoneIds = true` a batch must be either all-new (min id > hwm)
-    * or a redelivery (max id ≤ hwm). A STRADDLING batch — min ≤ hwm <
-    * max — means the producer broke the contract (interleaved id
-    * landings), and the plain hwm filter would silently drop the low
-    * ids as "redelivered": data loss with no symptom (the failure mode
-    * the r16 stream bench itself hit before its source was restaged).
-    * Detection is one min/max aggregate over the batch (cost ∝ batch,
-    * preserving the guard's O(batch) contract); on violation the caller
-    * falls back to the exact stored-id anti-join — correct under any id
-    * order — and this helper says so loudly on stderr.
+  /** O(batch) monotone-contract check: under `monotoneIds = true` a batch
+    * must be all-new (min id > hwm) or a redelivery (max id ≤ hwm). A
+    * batch whose ids straddle the hwm means the producer broke the
+    * contract, and the hwm filter would silently drop its low new ids;
+    * the caller falls back to the exact anti-join and this says so on
+    * stderr. The batch comes from outside the program, so the check
+    * stays even though the hwm itself now commits atomically.
     */
   private def straddlesHwm(batch: DataFrame, h: Long, path: String): Boolean = {
     val mm = batch.agg(min(col("vec_id")), max(col("vec_id"))).head()
@@ -869,244 +763,40 @@ object Similarity {
     straddles
   }
 
+  /** Append a batch to the float store at `path`: assign it against the
+    * stored centroids and commit its rows, one file per affected cell,
+    * together with the raised `hwm` in ONE append commit. A crash before
+    * the publish leaves only unreferenced files, so a redelivered batch
+    * lands exactly once. Redelivery guard:
+    *   - `monotoneIds = true` (the upstream embed stage assigns strictly
+    *     increasing ids): rows at or below `hwm` are dropped by a plain
+    *     filter — no stored-id scan, cost ∝ batch. Do not pass true for
+    *     an id space that interleaves with stored ids.
+    *   - `monotoneIds = false`: the exact anti-join against the stored
+    *     ids, correct for any id order at a cost ∝ corpus.
+    * An empty batch after the guard publishes no version.
+    */
   def appendToIvfPartitioned(path: String, newEmbeddings: DataFrame,
                              monotoneIds: Boolean = false): IvfIndex = {
     val spark = newEmbeddings.sparkSession
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val meta = readIvfMeta(spark, path)
-    val aDir = s"$path/${assignedDirName(meta.gen)}"
+    val v = SnapshotTable.latestVersion(spark, path)
+    val props = SnapshotTable.properties(spark, path, v)
+    val hwm = storeProperty(props, path, HwmKey).toLong
     val preparedB = prepared(newEmbeddings)
-    def storedIds = spark.read.parquet(aDir).select(col("vec_id"))
-    val guarded = (if (monotoneIds) meta.hwm else None) match {
-      case Some(h) if straddlesHwm(preparedB, h, path) =>
-        // monotone contract violated (interleaved producer): the plain
-        // hwm filter would silently DROP the batch's low-but-new ids as
-        // "redelivered" — fall back to the exact anti-join, correct
-        // under any id order (see [[straddlesHwm]])
-        preparedB.join(storedIds, Seq("vec_id"), "left_anti")
-      case Some(h) =>
-        meta.pending match {
-          case Some(p) if p > h =>
-            // crash window: a prior append may have committed data for
-            // ids in (h, p] without promoting hwm — verify exactly that
-            // window; rows > p are provably new, rows ≤ h provably old
-            preparedB.filter(col("vec_id") > h)
-              .join(storedIds.filter(col("vec_id") > h),
-                Seq("vec_id"), "left_anti")
-          case _ => preparedB.filter(col("vec_id") > h)
-        }
-      case None =>
-        preparedB.join(storedIds, Seq("vec_id"), "left_anti")
-    }
-    val assignedNew = assignCells(centroids, guarded, spreadKernel = true).persist()
+    val guarded =
+      if (monotoneIds && !straddlesHwm(preparedB, hwm, path)) preparedB.filter(col("vec_id") > hwm)
+      else preparedB.join(SnapshotTable.read(spark, path, v).select(col("vec_id")),
+        Seq("vec_id"), "left_anti")
+    val assignedNew = assignCells(centroidsFrame(spark, storeProperty(props, path, CentroidsKey)),
+      guarded, spreadKernel = true).persist()
     try {
-      val st = assignedNew
-        .agg(max(col("vec_id")), countDistinct(col("cell")), count(lit(1))).head()
-      if (st.getLong(2) == 0L) {
-        // full redelivery (or empty batch): nothing lands, no version
-        // bump (no spurious serving reload). A pending mark this guard
-        // just verified resolves to its promoted hwm.
-        meta.pending match {
-          case Some(p) if meta.hwm.exists(p > _) =>
-            writeIvfMeta(spark, path, meta.copy(hwm = Some(p), pending = None))
-          case _ => ()
-        }
-      } else {
-        val batchMax = st.getLong(0)
-        val cellsTouched = st.getLong(1)
-        // legacy layouts carry no hwm: initialize it from the stored max
-        // (the one-time scan that retires the per-batch scan for good)
-        val storedMax = meta.hwm.orElse(meta.pending).getOrElse {
-          val r = spark.read.parquet(aDir).agg(max(col("vec_id"))).head()
-          if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        }
-        val newHwm = math.max(batchMax, storedMax)
-        writeIvfMeta(spark, path, meta.copy(pending = Some(newHwm)))
-        assignedNew
-          // one file per AFFECTED cell per batch (shuffle ∝ batch):
-          // without this every task sprays a sliver into every cell it
-          // touches, and a 20-batch ingest fragments the layout into
-          // tens of thousands of files whose open cost dominates serving
-          // latency (measured, r15 — see writeIvfPartitioned)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(aDir)
-        writeIvfMeta(spark, path, IvfMeta(
-          version = math.max(0L, meta.version) + 1,
-          hwm = Some(newHwm), pending = None, gen = meta.gen,
-          files = if (meta.files >= 0) meta.files + cellsTouched else -1L))
-      }
+      val st = assignedNew.agg(max(col("vec_id"))).head()
+      if (!st.isNullAt(0))
+        SnapshotTable.append(spark, path, assignedNew.repartition(col("cell")),
+          Map(HwmKey -> math.max(hwm, st.getLong(0)).toString))
     } finally assignedNew.unpersist()
-    IvfIndex(centroids, spark.read.parquet(aDir))
+    loadIvfVersioned(spark, path)
   }
-
-  /** Coalesce a FLAT layout's live generation in place-ish: rewrite the
-    * assigned tree one-file-per-cell as generation n+1, flip the meta
-    * sidecar (version bump → serving pollers reload), and retire
-    * generation n−1. Generation n stays on disk, so a reader pinned to
-    * the pre-compaction directory survives ONE compaction cycle — it
-    * re-resolves the live generation at its next stamp poll. The
-    * continuous-ingest maintenance op: appends add ~one file per
-    * affected cell per batch and the file count ratchets (measured r15:
-    * 1 056 → 10 794 files across a 20-batch sf100 ingest) until serving
-    * latency is file-open overhead; the [[IvfMeta.files]] counter gives
-    * the trigger without a listing. Also resolves hwm from the data
-    * itself (clearing any crashed append's pending mark). Single
-    * maintainer: run from the append owner between batches, never
-    * concurrently with another compaction.
-    */
-  def compactIvfFlat(spark: SparkSession, path: String): Int = {
-    val meta = readIvfMeta(spark, path)
-    val newGen = meta.gen + 1
-    val newDir = s"$path/${assignedDirName(newGen)}"
-    spark.read.parquet(s"$path/${assignedDirName(meta.gen)}")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(newDir)
-    val st = spark.read.parquet(newDir)
-      .agg(max(col("vec_id")), countDistinct(col("cell"))).head()
-    writeIvfMeta(spark, path, IvfMeta(
-      version = math.max(0L, meta.version) + 1,
-      hwm = if (st.isNullAt(0)) None else Some(st.getLong(0)),
-      pending = None, gen = newGen, files = st.getLong(1)))
-    if (newGen - 2 >= 0) {
-      val fs = metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path, assignedDirName(newGen - 2)), true)
-    }
-    newGen
-  }
-
-  /** Versioned home for a persisted IVF layout — the maintenance story
-    * [[appendToIvfPartitioned]] defers to ("periodic refit is an
-    * offline rebuild"): each version is a complete
-    * `v<00000001>/{centroids,assigned}` layout staged under a temp name
-    * and PUBLISHED with one atomic directory rename (the
-    * [[graft.sources.SnapshotTable]] publish primitive, conflicts
-    * detected the same way). A serving reader loads the latest version
-    * at plan time and keeps reading THAT directory for the life of its
-    * plan, so a concurrent rebuild is invisible to it — old-or-new,
-    * never a mix of one version's centroids with another's cells.
-    */
-  def ivfVersions(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d{8}")).map(_.drop(1).toLong).sorted
-  }
-
-  /** Publish `index` as the next version of the layout at `path`.
-    * `geometryIntent` (Some(explicit?)) stages a `_geometry_intent`
-    * marker INSIDE the version directory, so intent publishes
-    * atomically with the version it describes (r13 advisor: a
-    * store-level marker written after the rename could be lost on a
-    * crash between publish and marker, or torn by concurrent rebuilds).
-    * None writes no marker — readers fall back to the newest version
-    * that carries one.
-    */
-  def writeIvfVersioned(index: IvfIndex, path: String,
-                        geometryIntent: Option[Boolean] = None): Long = {
-    val spark = index.assigned.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = ivfVersions(spark, path).lastOption.getOrElse(0L) + 1
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
-    // one file per cell — see writeIvfPartitioned (the r12 sf100 build
-    // published 46 k slivers and serving paid ~15 s/batch opening them)
-    index.assigned.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$tmp/assigned")
-    index.centroids.write.parquet(s"$tmp/centroids")
-    geometryIntent.foreach { explicit =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_geometry_intent"), true)
-      try out.write((if (explicit) "explicit" else "derived").getBytes("UTF-8"))
-      finally out.close()
-    }
-    graft.sources.SnapshotTable.atomicPublishDir(fs, tmp,
-      new org.apache.hadoop.fs.Path(path, f"v$v%08d"))
-    v
-  }
-
-  /** Retention-K GC for a versioned IVF layout — the maintenance loop
-    * [[writeIvfVersioned]] leaves open (every rebuild doubles storage
-    * until superseded versions are reclaimed): delete all but the
-    * newest `keepVersions` version directories plus any `.tmp-*`
-    * staging a crashed rebuild left behind. The latest version is
-    * never deleted (`keepVersions >= 1` enforced); a reader pinned to
-    * a reclaimed older version fails on its next scan — the same
-    * retention trade as [[graft.sources.SnapshotTable.vacuum]], run it
-    * on the owner's cadence after pinned readers drain. Must not run
-    * concurrently with an in-flight rebuild (its staging would read as
-    * torn). Returns the number of directories reclaimed.
-    */
-  def vacuumIvfVersions(spark: SparkSession, path: String,
-                        keepVersions: Int = 1): Int = {
-    require(keepVersions >= 1, "must keep at least the latest version")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val drop = ivfVersions(spark, path).dropRight(keepVersions)
-    var deleted = 0
-    drop.foreach { v =>
-      if (fs.delete(new org.apache.hadoop.fs.Path(p, f"v$v%08d"), true)) deleted += 1
-    }
-    fs.listStatus(p).foreach { s =>
-      if (s.getPath.getName.startsWith(".tmp-")) {
-        fs.delete(s.getPath, true); deleted += 1
-      }
-    }
-    deleted
-  }
-
-  /** Load one version (latest by default) of a versioned IVF layout;
-    * the returned readers are pinned to that version's directory.
-    */
-  def loadIvfVersioned(spark: SparkSession, path: String,
-                       version: Long = -1L): IvfIndex = {
-    val vs = ivfVersions(spark, path)
-    require(vs.nonEmpty, s"no versioned IVF layout at $path")
-    val v = if (version >= 0) version else vs.last
-    val d = new org.apache.hadoop.fs.Path(path, f"v$v%08d").toString
-    IvfIndex(spark.read.parquet(s"$d/centroids"),
-      spark.read.parquet(s"$d/assigned"))
-  }
-
-  /** Offline coarse-quantizer RETRAIN of a versioned IVF layout — the
-    * maintenance op [[AnnServing.ivfCellStats]]'s drift dashboard calls
-    * for: refit KMeans on the STORED vectors (the latest version's
-    * assigned frame carries them — no re-read of the source corpus),
-    * reassign, and publish the result as version n+1 via the atomic
-    * rename. Serving readers pinned at n keep their directory; new
-    * loads get n+1; a crashed rebuild leaves only an inert `.tmp-*`
-    * staging (reclaim by deleting it). Old versions are kept for
-    * pinned readers until explicitly deleted — same retention trade as
-    * [[graft.sources.SnapshotTable.vacuum]].
-    */
-  def rebuildIvf(spark: SparkSession, path: String, nCells: Int = 16): Long = {
-    val current = loadIvfVersioned(spark, path)
-    val vectors = current.assigned.select(col("vec_id"), col("v").as("embedding"))
-    writeIvfVersioned(buildIvf(vectors, nCells), path)
-  }
-
-  /** COMPACT a versioned IVF layout without refitting: republish the
-    * latest version's rows as v+1 through the (cell-coalescing) write
-    * path — same centroids, same assignments, ~one file per cell. The
-    * maintenance pass continuous ingest makes necessary: every append
-    * adds files to the affected cells, and once a layout accumulates
-    * tens of thousands of slivers, serving latency is file-open
-    * overhead, not data (measured at sf100: 46 504 files for 2 M rows,
-    * ~15 s/batch before compaction). Cheap relative to [[rebuildIvf]]
-    * — one corpus read + one cell-shuffle write, no KMeans — and
-    * atomic like any version publish: pinned readers keep v, new
-    * loads get v+1, vacuum reclaims the fragmented version on the
-    * owner's cadence. The RESOLVED geometry intent is re-stamped into
-    * the new version explicitly: relying on the marker-inheritance
-    * fallback would lose an explicit intent once vacuum retires the
-    * last marker-carrying version (r15 review), flipping the drift
-    * dashboard to a permanent rebuild_recommended nag on a
-    * deliberately-chosen geometry.
-    */
-  def compactIvf(spark: SparkSession, path: String): Long =
-    writeIvfVersioned(loadIvfVersioned(spark, path), path,
-      geometryIntent = Some(AnnServing.geometryIntentExplicit(spark, path)))
 
   /** Query phase against a built index: each query probes its nProbe
     * nearest cells (L2, the training metric) and exactly reranks only
@@ -1402,70 +1092,43 @@ object Similarity {
     encodePq(pq, ivf.assigned)
       .join(ivf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
 
-  /** Read one PQ version directory: (centroids, model, codes reader) —
-    * geometry (mSubs, subDim) restored from the codebooks themselves.
-    * Compose with [[queryIvfPq]]; the codes reader partition-prunes on
-    * cell.
-    */
-  private def loadIvfPq(spark: SparkSession,
-                        path: String): (DataFrame, PqModel, DataFrame) = {
-    val codebooks = spark.read.parquet(s"$path/codebooks")
-    val mSubs = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
-    val subDim = codebooks.select(size(col("centroid"))).head().getInt(0)
-    (spark.read.parquet(s"$path/centroids"),
-      PqModel(codebooks, mSubs, subDim),
-      spark.read.parquet(s"$path/codes"))
-  }
-
-  /** Publish a PQ layout (centroids + codebooks + cell-partitioned
-    * codes) as the next version of the versioned store at `path` —
-    * the same `v<00000001>/…` + atomic-rename lifecycle as
-    * [[writeIvfVersioned]] (shared version listing, shared vacuum), so
-    * the SERVED compressed forms get the identical
-    * rebuild/compact/retire story as float IVF: pinned readers keep
-    * their version directory; new loads get v+1.
+  /** Publish a PQ layout as the next version of the PQ store at `path`:
+    * the cell-partitioned codes (vec_id, codes, cell) with the coarse
+    * `centroids` and the `codebooks` as version properties, one
+    * overwrite commit — the float store's lifecycle (see
+    * [[writeIvfVersioned]]).
     */
   def writeIvfPqVersioned(centroids: DataFrame, codebooks: DataFrame,
                           codes: DataFrame, path: String): Long = {
-    val spark = codes.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = ivfVersions(spark, path).lastOption.getOrElse(0L) + 1
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
-    centroids.write.parquet(s"$tmp/centroids")
-    codebooks.write.parquet(s"$tmp/codebooks")
-    // one file per cell — the m-bytes-per-candidate scan the PQ design
-    // argument is about only pays when it is not buried under per-file
-    // open overhead (the r12 sf100 PQ store: 22 k slivers, and the
-    // compressed form served 9.6× SLOWER than uncompressed float IVF)
-    codes.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$tmp/codes")
-    graft.sources.SnapshotTable.atomicPublishDir(fs, tmp,
-      new org.apache.hadoop.fs.Path(path, f"v$v%08d"))
-    v
+    val books = codebooks.select(col("sub"), col("cid"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.sortBy(_._2))
+    require(books.map(_.map(_._2).toSeq).forall(cids => cids == cids.indices),
+      "codebook cids must be 0 until kCentroids")
+    SnapshotTable.overwrite(codes.sparkSession, path,
+      // one file per cell: the r12 sf100 PQ store held 22 k slivers and
+      // served 9.6× slower than float IVF over the same cells
+      codes.repartition(col("cell")), Seq("cell"),
+      Map(CentroidsKey -> centroidsJson(centroids),
+        CodebooksKey -> Json.writeValueAsString(books.map(_.map(_._3)).toArray)))
   }
 
-  /** Load one version (latest by default) of a versioned PQ store;
-    * the returned readers are pinned to that version's directory.
+  /** Load one version (latest by default) of a PQ store: (centroids,
+    * model, codes reader). The geometry (mSubs, subDim) comes from the
+    * stored codebooks; compose with [[queryIvfPq]]. Starts no Spark job.
     */
   def loadIvfPqVersioned(spark: SparkSession, path: String,
                          version: Long = -1L): (DataFrame, PqModel, DataFrame) = {
-    val vs = ivfVersions(spark, path)
-    require(vs.nonEmpty, s"no versioned PQ layout at $path")
-    val v = if (version >= 0) version else vs.last
-    loadIvfPq(spark, new org.apache.hadoop.fs.Path(path, f"v$v%08d").toString)
-  }
-
-  /** COMPACT a versioned PQ store without re-encoding: republish the
-    * latest version's frames as v+1 through the cell-coalescing write.
-    * Same trade as [[compactIvf]]: one store read + one cell-shuffle
-    * write, no KMeans, atomic publish, vacuum retires the fragmented
-    * version on the owner's cadence.
-    */
-  def compactIvfPq(spark: SparkSession, path: String): Long = {
-    val (centroids, pq, codes) = loadIvfPqVersioned(spark, path)
-    writeIvfPqVersioned(centroids, pq.codebooks, codes, path)
+    import spark.implicits._
+    val v = if (version >= 0) version else SnapshotTable.latestVersion(spark, path)
+    val props = SnapshotTable.properties(spark, path, v)
+    val books = Json.readValue(storeProperty(props, path, CodebooksKey),
+      classOf[Array[Array[Array[Double]]]])
+    val codebooks = (for ((sub, s) <- books.toSeq.zipWithIndex; (c, cid) <- sub.toSeq.zipWithIndex)
+      yield (s, cid, c)).toDF("sub", "cid", "centroid")
+    (centroidsFrame(spark, storeProperty(props, path, CentroidsKey)),
+      PqModel(codebooks, books.length, books.head.head.length),
+      SnapshotTable.read(spark, path, v))
   }
 
   /** Random-hyperplane LSH ANN — the scale path. bands×bitsPerBand
@@ -1521,7 +1184,7 @@ object Similarity {
 /** Session-scoped ANN SERVING layer — the build-once/serve-many split the
   * FAISS deployment pattern means (train/encode offline, serve online):
   * the FIRST call per sf-dir builds the index family, publishes each as
-  * v1 of its versioned store ([[Similarity.writeIvfVersioned]] /
+  * v1 of its store ([[Similarity.writeIvfVersioned]] /
   * [[Similarity.writeIvfPqVersioned]] — the same layouts the equivalence
   * specs prove ≡ in-memory), and caches the loaders; every subsequent call
   * (bench rep, query endpoint hit) runs ONLY the query phase against the
@@ -1550,7 +1213,7 @@ object AnnServing {
     * per cached instance.
     */
   private case class PqLayout(centroids: DataFrame, pq: PqModel, codes: DataFrame) {
-    lazy val nCells: Int = centroids.count().toInt
+    lazy val nCells: Int = centroids.select(col("cell")).collect().length
   }
   private val pqCache  = new SessionCache[(String, PqLayout)]()
   private val exactCache = new SessionCache[DataFrame](df =>
@@ -1574,57 +1237,40 @@ object AnnServing {
     }
   }
 
-  // ALL THREE serving families serve from a VERSIONED store — the one
-  // served on-disk format — so the offline rebuild/compact ops compose
-  // with live serving (publish v+1, flip the cache; pinned readers keep
-  // their version directory). Anything else under a home is not read:
-  // a home without versions builds v1 from the corpus.
-  private def ivfStore(sfDir: String): String =
-    ServingLayouts.dirFor("ivf", sfDir) + "/ivf"
+  /** The store of a serving home: ALL THREE families serve from one
+    * [[SnapshotTable]] store under `<home>/table`, so the offline
+    * rebuild and compaction compose with live serving (publish v+1,
+    * flip the cache; pinned readers keep their version). Nothing else
+    * under a home is read: a home without a store builds v1 from the
+    * corpus, and older directories age out with the home.
+    */
+  private[graft] def storeIn(home: String): String = s"$home/table"
 
-  /** Cold-start a versioned store: publish v1 via `build` if no
-    * version exists. Tolerates losing a concurrent cold-start's publish
-    * race: if versions exist after the failure, serve those.
+  private def ivfStore(sfDir: String): String = storeIn(ServingLayouts.dirFor("ivf", sfDir))
+
+  /** Cold-start a store: publish v1 via `build` if no version exists.
+    * Tolerates losing a concurrent cold-start's publish race: if
+    * versions exist after the failure, serve those.
     */
   private def ensureVersioned(spark: SparkSession, store: String)
                              (build: => Long): Unit =
-    if (Similarity.ivfVersions(spark, store).isEmpty)
+    if (SnapshotTable.versions(spark, store).isEmpty)
       try build
       catch {
-        case NonFatal(e) if Similarity.ivfVersions(spark, store).isEmpty => throw e
+        case NonFatal(e) if SnapshotTable.versions(spark, store).isEmpty => throw e
         case NonFatal(_) => ()
       }
 
-  /** Whether the store's latest declared quantizer geometry used an
-    * EXPLICIT nCells override — read back by the drift dashboard
-    * ([[ivfCellStats]] / [[ivfGeometryDrift]]) so a store deliberately
-    * built with `rebuildServedIvf(nCells = …)` never nags
-    * `rebuild_recommended` just because the override differs from
-    * today's derivation (r12 advisor). The marker lives INSIDE each
-    * version directory (published atomically with it — r13 advisor);
-    * versions without one (generic [[rebuildIvf]] publishes) inherit
-    * from the newest older version that has one, else default to
-    * derived-intent.
+  /** Whether the store's quantizer geometry was an EXPLICIT nCells
+    * override — read back by the drift dashboard ([[ivfCellStats]] /
+    * [[ivfGeometryDrift]]) so a store deliberately built with
+    * `rebuildServedIvf(nCells = …)` never nags `rebuild_recommended`
+    * over the override. A version property: it publishes atomically
+    * with its version, and a publish that declares none carries the
+    * previous one forward. No declaration reads as derived.
     */
-  private[graft] def geometryIntentExplicit(spark: SparkSession,
-                                            store: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def readMarker(p: org.apache.hadoop.fs.Path): Option[Boolean] = {
-      val fs = p.getFileSystem(conf)
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          try Some(new String(in.readAllBytes(), "UTF-8").trim == "explicit")
-          finally in.close()
-        }
-      } catch { case _: java.io.IOException => None }
-    }
-    Similarity.ivfVersions(spark, store).reverseIterator
-      .map(v => readMarker(new org.apache.hadoop.fs.Path(store, f"v$v%08d/_geometry_intent")))
-      .collectFirst { case Some(b) => b }
-      .getOrElse(false)
-  }
+  private[graft] def geometryIntentExplicit(spark: SparkSession, store: String): Boolean =
+    SnapshotTable.properties(spark, store).get(Similarity.GeometryIntentKey).contains("explicit")
 
   /** BUILD-time geometry: explicit nCells wins; the ≤0 sentinel derives
     * from the corpus size ([[graft.ops.LshGeometry.ivf]] — the one
@@ -1647,10 +1293,7 @@ object AnnServing {
   private def servedIvf(spark: SparkSession, sfDir: String, nCells: Int): IvfIndex =
     servedValidated(ivfCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivf", sfDir)
-      val store = home + "/ivf"
-      // intent is staged inside the version dir → atomic with the
-      // publish; a marker failure fails the publish instead of leaving
-      // a published version with swallowed intent
+      val store = storeIn(home)
       ensureVersioned(spark, store)(Similarity.writeIvfVersioned(
         Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
           cellsForBuild(spark, sfDir, nCells)), store,
@@ -1662,7 +1305,7 @@ object AnnServing {
   /** Act on the [[ivfCellStats]] drift signal for the SERVED index:
     * retrain offline ([[Similarity.rebuildIvf]] — publishes version
     * n+1 atomically), then flip the serving cache to the new version.
-    * In-flight readers of the old version keep their directory; every
+    * In-flight readers of the old version keep its files; every
     * call after the flip serves the rebuilt quantizer. Returns the
     * published version.
     */
@@ -1712,13 +1355,13 @@ object AnnServing {
 
   /** IVF-SQ8 served from the persisted index over the int8-dequantized
     * corpus; queries keep full float precision (see [[Similarity.knnIvfSq8]]).
-    * Serves the latest version of the versioned store at `<home>/ivf`.
+    * Serves the latest version of the store under `<home>/table`.
     */
   def knnIvfSq8(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
                 nCells: Int = -1, nProbe: Int = -1): DataFrame = {
     val index = servedValidated(sq8Cache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("sq8", sfDir)
-      val store = home + "/ivf"
+      val store = storeIn(home)
       ensureVersioned(spark, store) {
         val deq = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
           .select(col("vec_id"), expr("transform(codes, c -> c * scale)").as("embedding"))
@@ -1745,7 +1388,7 @@ object AnnServing {
                kCentroids: Int = -1, rerank: Int = -1): DataFrame = {
     val layout = servedValidated(pqCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivfpq", sfDir)
-      val store = home + "/pq"
+      val store = storeIn(home)
       ensureVersioned(spark, store) {
         val emb = graft.Tables.embeddings(spark, sfDir)
         // one count() pays for all build-time derivations (cells +
@@ -1897,8 +1540,8 @@ object AnnServing {
     // drift report must judge. Newest-first; the first home holding a
     // published store is the one being served.
     ServingLayouts.homesFor("ivf", corpusDir).iterator
-      .map(_ + "/ivf")
-      .find(store => Similarity.ivfVersions(spark, store).nonEmpty)
+      .map(storeIn)
+      .find(store => SnapshotTable.versions(spark, store).nonEmpty)
       .map { store =>
         val stored = Similarity.loadIvfVersioned(spark, store).nCells
         val derived = graft.ops.LshGeometry.ivf(

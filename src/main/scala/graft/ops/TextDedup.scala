@@ -222,7 +222,7 @@ object TextDedup {
     * nature, reshuffles to match — CI-locked in TextDedupSpec). Band
     * geometry rides along in a one-row meta table so a query can never
     * run with mismatched bands/rows. Mirrors the cell-partitioned IVF
-    * persistence (Similarity.writeIvfPartitioned).
+    * persistence (Similarity.writeIvfVersioned).
     *
     * Bucketing metadata lives in the catalog, so tables are registered
     * as `<tablePrefix>_digests/_buckets/_shingles` with files at
@@ -351,8 +351,8 @@ object TextDedup {
   val DefaultSimhashHotCap = 256
 
   /** The hamming radius every simhash entry point defaults to — shared
-    * so diagnostics (graft.LshStats) reference the operator's default
-    * instead of re-hardcoding a literal (r12 advisor).
+    * so specs and callers reference the operator's default instead of
+    * re-hardcoding a literal.
     */
   val DefaultMaxHamming = 3
 
@@ -376,9 +376,8 @@ object TextDedup {
   val SimhashDirectMaxDocs = 100000L
 
   /** The candidate-pair stage of [[simhashNearDups]], exposed so the
-    * scale diagnostics (graft.LshStats) and the hot-bucket spec measure
-    * the operator's REAL shuffle load. Returns distinct
-    * (a_id, b_id, sim_a, sim_b) BEFORE hamming verification — a
+    * hot-bucket spec measures the operator's REAL shuffle load. Returns
+    * distinct (a_id, b_id, sim_a, sim_b) BEFORE hamming verification — a
     * guaranteed superset of the hamming ≤ `maxHamming` pairs at any
     * (blocks, hotCap), so geometry and cap move cost, never output.
     *
@@ -414,9 +413,8 @@ object TextDedup {
   }
 
   /** The (bkey, skey)-refined frame [[candidatesFromKeys]] self-joins
-    * on — exposed (private[graft]) so the scale diagnostics
-    * (graft.LshStats occupancy mode) measure bucket occupancy over the
-    * operator's REAL join keys: above `hotCap` the join key is
+    * on — exposed (private[graft]) so specs measure bucket occupancy
+    * over the operator's REAL join keys: above `hotCap` the join key is
     * (bkey, skey), so occupancy over bare bkey OVERSTATES hot-bucket
     * load (r12 advisor).
     */
@@ -448,9 +446,9 @@ object TextDedup {
   }
 
   /** The direct-vs-refined plan choice for an n-doc corpus — the ONE
-    * derivation shared by [[simhashCandidates]] and the LshStats
-    * occupancy diagnostic, so the measured load can never diverge from
-    * the cap the operator actually runs with.
+    * derivation [[simhashCandidates]] and its specs share, so a
+    * measured load can never diverge from the cap the operator actually
+    * runs with.
     */
   private[graft] def hotCapFor(n: Long): Int =
     if (n <= SimhashDirectMaxDocs) Int.MaxValue else DefaultSimhashHotCap
@@ -472,9 +470,8 @@ object TextDedup {
 
   /** The blocked-pigeonhole bucket table behind [[simhashNearDups]]:
     * (doc_id, sim, bkey), one row per (doc, table), table id packed
-    * into the key's high bits. Public so the scale diagnostics
-    * (graft.LshStats) measure the operator's REAL candidate shuffle,
-    * not a proxy.
+    * into the key's high bits. Public so specs and callers measure the
+    * operator's REAL candidate shuffle, not a proxy.
     */
   def simhashBuckets(documents: DataFrame, maxHamming: Int = DefaultMaxHamming,
                      blocks: Option[Int] = None): DataFrame = {

@@ -23,10 +23,16 @@ import scala.jdk.CollectionConverters._
   *
   * `manifest.json` holds the version's `entries` (`path`, relative to
   * the root, and `part`, the file's Hive partition subpath, "" when
-  * unpartitioned), the table's `partition_cols`, and its data `schema`
+  * unpartitioned), the table's `partition_cols`, its data `schema`
   * (Spark's StructType JSON, partition columns left out, every field
-  * nullable). The driver writes and reads it through the Hadoop
-  * FileSystem API, so no metadata operation starts a Spark job — the
+  * nullable) and the version's `properties`: a string map every commit
+  * carries forward from the version it builds on, overriding only the
+  * keys it sets (a manifest without the map reads as empty). Stores
+  * that must flip model metadata atomically with their data — the IVF
+  * centroids, PQ codebooks and ingest high-water mark of
+  * [[graft.ops.Similarity]], a stream sink's last committed batch per
+  * writer — keep it there. The driver writes and reads it through the
+  * Hadoop FileSystem API, so no metadata operation starts a Spark job — the
   * log design of Delta Lake (PROTOCOL.md), one self-contained snapshot
   * per version instead of a replayed chain of deltas.
   *
@@ -126,6 +132,14 @@ object SnapshotTable {
     versions(spark, path).lastOption.getOrElse(
       throw new IllegalStateException(s"no snapshot table at $path"))
 
+  /** The version properties of `version` (or latest; empty when no
+    * version exists). Read from the log alone: no Spark job.
+    */
+  def properties(spark: SparkSession, path: String, version: Long = -1L): Map[String, String] =
+    if (version >= 0) snapshotOf(spark, path, version).properties
+    else versions(spark, path).lastOption
+      .fold(Map.empty[String, String])(snapshotOf(spark, path, _).properties)
+
   /** Manifest rows of `version` (or latest): relative file path, the
     * file's partition subpath ("" when unpartitioned), and the table's
     * partition columns (comma-joined, repeated per row). A local
@@ -145,7 +159,7 @@ object SnapshotTable {
              partitionCols: Seq[String] = Nil): Long = {
     require(versions(spark, path).isEmpty, s"table already exists at $path")
     requireNoForeignFiles(spark, path)
-    publish(spark, path, 1L, Nil, writeCommit(spark, path, df, partitionCols))
+    publish(spark, path, 1L, Nil, writeCommit(spark, path, df, partitionCols), Map.empty)
   }
 
   /** Add `df`'s rows as new files; existing entries carry forward.
@@ -156,11 +170,29 @@ object SnapshotTable {
     * before any file lands — the producer-deployment contract the raw
     * append path already enforces, now on the transactional table.
     */
-  def append(spark: SparkSession, path: String, df: DataFrame): Long = {
+  def append(spark: SparkSession, path: String, df: DataFrame,
+             properties: Map[String, String] = Map.empty): Long = {
     val v = latestVersion(spark, path)
     val s = snapshotOf(spark, path, v)
     publish(spark, path, v + 1, s.entries,
-      writeCommit(spark, path, evolved(s, df), s.partitionCols))
+      writeCommit(spark, path, evolved(s, df), s.partitionCols), s.properties ++ properties)
+  }
+
+  /** Replace the table's rows with `df` as the next version (version 1
+    * when no table exists yet): the rebuild commit. `partitionCols` and
+    * `df`'s schema become the table's; properties carry forward with
+    * `properties` overriding. Older versions stay readable until
+    * [[vacuum]].
+    */
+  def overwrite(spark: SparkSession, path: String, df: DataFrame,
+                partitionCols: Seq[String] = Nil,
+                properties: Map[String, String] = Map.empty): Long = {
+    val v = versions(spark, path).lastOption.getOrElse {
+      requireNoForeignFiles(spark, path); 0L
+    }
+    val carried = if (v == 0L) Map.empty[String, String] else snapshotOf(spark, path, v).properties
+    publish(spark, path, v + 1, Nil, writeCommit(spark, path, df, partitionCols),
+      carried ++ properties)
   }
 
   /** `batch` evolved by [[Sources.evolveForAppend]] to the table schema
@@ -188,7 +220,7 @@ object SnapshotTable {
     */
   def upsertKeepLast(spark: SparkSession, path: String, updates: DataFrame,
                      keyCols: Seq[String], orderCol: String): Long =
-    merge(spark, path, latestVersion(spark, path), Nil, updates, keyCols, orderCol)
+    merge(spark, path, latestVersion(spark, path), Nil, updates, keyCols, orderCol, Map.empty)
 
   /** [[upsertKeepLast]] against a table that may not exist yet: the
     * first call publishes version 1 from the keep-last winners of the
@@ -197,15 +229,18 @@ object SnapshotTable {
     * sink needs — batch replays after a checkpoint recovery converge by
     * keep-last instead of duplicating. Two writers racing to version 1
     * resolve at publish like any other commit: the loser gets the
-    * retryable conflict [[retryOnConflict]] handles.
+    * retryable conflict [[retryOnConflict]] handles. `properties`
+    * override the carried-forward version properties in the same
+    * publish.
     */
   def upsertOrCreate(spark: SparkSession, path: String, updates: DataFrame,
                      keyCols: Seq[String], orderCol: String,
-                     partitionCols: Seq[String] = Nil): Long = {
+                     partitionCols: Seq[String] = Nil,
+                     properties: Map[String, String] = Map.empty): Long = {
     val v = versions(spark, path).lastOption.getOrElse {
       requireNoForeignFiles(spark, path); 0L
     }
-    merge(spark, path, v, partitionCols, updates, keyCols, orderCol)
+    merge(spark, path, v, partitionCols, updates, keyCols, orderCol, properties)
   }
 
   /** The one keep-last MERGE, from version `v` to v+1. Version 0 is the
@@ -214,8 +249,9 @@ object SnapshotTable {
     */
   private def merge(spark: SparkSession, path: String, v: Long,
                     newPartitionCols: Seq[String], updates: DataFrame,
-                    keyCols: Seq[String], orderCol: String): Long = {
-    val s = if (v == 0L) Snapshot(Nil, newPartitionCols, StructType(Nil))
+                    keyCols: Seq[String], orderCol: String,
+                    properties: Map[String, String]): Long = {
+    val s = if (v == 0L) Snapshot(Nil, newPartitionCols, StructType(Nil), Map.empty)
       else snapshotOf(spark, path, v)
     val (old, partitionCols) = (s.entries, s.partitionCols)
     // MERGE follows the same evolution contract as append: the batch
@@ -249,7 +285,8 @@ object SnapshotTable {
     val winners = merged
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__upd")
-    publish(spark, path, v + 1, kept, writeCommit(spark, path, winners, partitionCols))
+    publish(spark, path, v + 1, kept, writeCommit(spark, path, winners, partitionCols),
+      s.properties ++ properties)
   }
 
   /** Manifest `part` subpaths the batch touches. They must match the
@@ -323,7 +360,7 @@ object SnapshotTable {
           .repartition(tasks, partitionCols.map(col) :+ col("__bucket"): _*)
           .drop("__bucket")
       }
-    publish(spark, path, v + 1, Nil, writeCommit(spark, path, all, partitionCols))
+    publish(spark, path, v + 1, Nil, writeCommit(spark, path, all, partitionCols), s.properties)
   }
 
   /** Delete manifests older than the newest `keepVersions`, every data
@@ -339,6 +376,7 @@ object SnapshotTable {
     * count.
     */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1): Int = {
+    require(keepVersions >= 1, "vacuum must keep at least the latest version")
     val fs = fsOf(spark, path)
     val vs = versions(spark, path)
     val (drop, keep) = vs.splitAt((vs.length - keepVersions).max(0))
@@ -416,11 +454,12 @@ object SnapshotTable {
 
   private case class Entry(path: String, part: String)
 
-  /** One version's log record: its files, the table's partition columns
-    * and its data schema (partition columns excluded, fields nullable).
+  /** One version's log record: its files, the table's partition columns,
+    * its data schema (partition columns excluded, fields nullable) and
+    * its properties.
     */
   private case class Snapshot(entries: Seq[Entry], partitionCols: Seq[String],
-                              dataSchema: StructType)
+                              dataSchema: StructType, properties: Map[String, String])
 
   /** `data/<commit>` — the commit subtree an entry's file lives in. */
   private def commitOf(e: Entry): String = e.path.split("/").take(2).mkString("/")
@@ -443,7 +482,9 @@ object SnapshotTable {
       node.get("entries").elements().asScala
         .map(e => Entry(e.get("path").asText, e.get("part").asText)).toSeq,
       strings(node.get("partition_cols")),
-      DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType])
+      DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType],
+      Option(node.get("properties")).fold(Map.empty[String, String])(
+        _.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap))
   }
 
   private def readSnapshot(spark: SparkSession, path: String, v: Long,
@@ -494,15 +535,17 @@ object SnapshotTable {
       }
     }
     Snapshot(out.result(), partitionCols, Shims.asNullable(
-      StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))))
+      StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))), Map.empty)
   }
 
   /** Publish version `v`: the `kept` entries carried forward, then the
     * commit's own, at the commit's schema — the newest commit is written
-    * at the full table schema, so its schema is the version's.
+    * at the full table schema, so its schema is the version's — with
+    * `properties` as the version's whole property map.
     */
   private def publish(spark: SparkSession, root: String, v: Long,
-                      kept: Seq[Entry], commit: Snapshot): Long = {
+                      kept: Seq[Entry], commit: Snapshot,
+                      properties: Map[String, String]): Long = {
     val fs = fsOf(spark, root)
     val doc = Json.createObjectNode()
     val es = doc.putArray("entries")
@@ -510,6 +553,8 @@ object SnapshotTable {
     val pcols = doc.putArray("partition_cols")
     commit.partitionCols.foreach(c => pcols.add(c))
     doc.set[JsonNode]("schema", Json.readTree(commit.dataSchema.json))
+    val props = doc.putObject("properties")
+    properties.toSeq.sortBy(_._1).foreach { case (k, x) => props.put(k, x) }
     val tmp = new Path(root, s"$ManifestDir/.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
     val out = fs.create(new Path(tmp, ManifestFile), false)
     try out.write(Json.writeValueAsBytes(doc)) finally out.close()

@@ -3,12 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Similarity
+import graft.sources.SnapshotTable
 
 /** Continuous vector ingest — the streaming face of
   * [[graft.ops.Similarity.appendToIvfPartitioned]]: embedding batches
   * land as files and each micro-batch is assigned against the stored
-  * coarse quantizer and appended into only the affected `cell=`
-  * partitions of the persisted IVF index. This is how a vector store
+  * coarse quantizer and committed as new files of only the affected
+  * `cell=` partitions of the persisted IVF store — the one store layout
+  * ([[graft.ops.Similarity.writeIvfVersioned]]: a
+  * [[graft.sources.SnapshotTable]] partitioned by `cell`, with the
+  * centroids and high-water mark as version properties). This is how a vector store
   * grows under continuous embedding production (the crawl→embed→index
   * tail of the pipeline) without ever rebuilding or re-shuffling the
   * indexed corpus: per-batch cost ∝ batch size, and serving queries
@@ -18,17 +22,18 @@ import graft.ops.Similarity
   * Exactly-once is layered: the checkpoint makes each FILE processed
   * once per checkpoint lineage, and the append's high-water-mark
   * redelivery guard ([[graft.ops.Similarity.appendToIvfPartitioned]],
-  * monotone form — one filter against the layout's stored hwm, cost
+  * monotone form — one filter against the store's `hwm` property, cost
   * ∝ batch and never corpus) makes redelivery with a fresh/lost
-  * checkpoint a no-op rather than a duplicate-candidate source — both
-  * layers are spec-driven. The quantizer stays FIXED across appends
+  * checkpoint a no-op rather than a duplicate-candidate source. The
+  * rows and the raised hwm publish in one commit, so a crash between
+  * them cannot exist — both layers are spec-driven. The quantizer stays FIXED across appends
   * (spec-proven ≡ KMeans.transform); drift shows up in ivf_cell_stats
   * and triggers an offline retrain, never an in-stream one.
   */
 object EmbeddingStream {
 
   /** Drain all staged embedding files into the persisted index at
-    * `indexPath` ([[graft.ops.Similarity.writeIvfPartitioned]] layout).
+    * `indexPath` (a [[graft.ops.Similarity.writeIvfVersioned]] store).
     * `Trigger.AvailableNow` processes the backlog and terminates; a
     * live deployment swaps in a processing-time trigger on the same
     * DAG and checkpoint.
@@ -47,16 +52,18 @@ object EmbeddingStream {
     *
     * `autoCompactFilesPerCell > 0` arms the fragmentation trigger: an
     * append leaves up to one new file per affected cell, so a
-    * long-running ingest ratchets the layout's file count (measured
-    * r15: 1 056 → 10 794 files over a 20-batch sf100 ingest) and
-    * serving latency silently degrades into file-open overhead. When
-    * the layout's running file count exceeds `threshold × nCells`, the
-    * batch is followed by [[graft.ops.Similarity.compactIvfFlat]] — a
-    * generation-flip rewrite concurrent readers survive (they hold the
-    * previous generation, retired only one compaction later). 8 ≈
-    * where the measured ~0.3 ms/open overhead reaches scan parity.
-    * 0 disables (default): compaction cost sits on the ingest lane, so
-    * it is the operator's explicit choice here or via Maintain.
+    * long-running ingest ratchets the store's file count (1 056 →
+    * 10 794 files over a 20-batch sf100 ingest) and serving latency
+    * silently degrades into file-open overhead. When the latest
+    * manifest lists more than `threshold × nCells` files, the batch is
+    * followed by [[graft.sources.SnapshotTable.compact]]`(path, 1)` and
+    * a vacuum keeping two versions: a reader pinned to any version
+    * since the previous compaction keeps its files (appends carry every
+    * entry forward, so the pre-compaction version references them all)
+    * until the next compaction. 8 ≈ where the measured ~0.3 ms/open
+    * overhead reaches scan parity. 0 disables (default): compaction
+    * cost sits on the ingest lane, so it is the operator's explicit
+    * choice here or via Maintain.
     */
   def ingestOnce(spark: SparkSession, srcDir: String, indexPath: String,
                  checkpointDir: String, maxFilesPerTrigger: Int = 0,
@@ -67,8 +74,7 @@ object EmbeddingStream {
     val reader = spark.readStream.schema(schema)
     // the trigger denominator: cells are fixed model metadata (the
     // quantizer never refits in-stream), so count them once per drain
-    lazy val nCells =
-      spark.read.parquet(s"$indexPath/centroids").count()
+    lazy val nCells = Similarity.loadIvfVersioned(spark, indexPath).nCells
     (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     else reader)
@@ -87,13 +93,13 @@ object EmbeddingStream {
         staged("append") {
           Similarity.appendToIvfPartitioned(indexPath, batch, monotoneIds)
         }
-        if (autoCompactFilesPerCell > 0) {
-          val meta = Similarity.readIvfMeta(spark, indexPath)
-          if (nCells > 0 && meta.files > autoCompactFilesPerCell * nCells)
-            staged("auto_compact") {
-              Similarity.compactIvfFlat(spark, indexPath)
-            }
-        }
+        if (autoCompactFilesPerCell > 0 &&
+            SnapshotTable.manifest(spark, indexPath).collect().length >
+              autoCompactFilesPerCell * nCells)
+          staged("auto_compact") {
+            SnapshotTable.compact(spark, indexPath, 1)
+            SnapshotTable.vacuum(spark, indexPath, keepVersions = 2)
+          }
         ()
       }
       .start()
@@ -105,16 +111,14 @@ object EmbeddingStream {
     * stored cell-partitioned index ([[graft.ops.Similarity.queryIvf]] —
     * centroids broadcast, only probed `cell=` partitions read) and the
     * top-k neighbor rows append to `destPath`. The index is reloaded
-    * ONLY when its change stamp moves ([[graft.ops.Similarity.ivfStampOf]]
-    * — every [[ingestOnce]] append bumps it): an unchanged-stamp batch
-    * reuses the held reader, so steady-state serving pays one tiny
-    * stamp read per micro-batch instead of re-listing the (at scale,
-    * million-file) `assigned/` tree — the 100× form of the
-    * ingest-while-serving loop, with the index directory the only
-    * coupling. Appends are visible at the NEXT micro-batch after their
-    * bump, exactly as with the old per-batch re-read; a stampless
-    * legacy layout reads as -1, which never matches a held stamp, so
-    * it conservatively reloads every batch (the old behavior). A
+    * ONLY when the store's latest version moves
+    * ([[graft.sources.SnapshotTable.latestVersion]] — every
+    * [[ingestOnce]] append and compaction publishes one): an
+    * unchanged-version batch reuses the held reader, so steady-state
+    * serving pays one `_manifests` listing per micro-batch instead of
+    * reloading the (at scale, million-file) index — the 100× form of
+    * the ingest-while-serving loop, with the store the only coupling.
+    * Appends are visible at the NEXT micro-batch after their publish. A
     * query's result depends on nothing but itself and the index
     * snapshot, so batching never changes any row (spec: drained
     * stream ≡ batch query set when the index is quiescent). Results
@@ -122,7 +126,7 @@ object EmbeddingStream {
     * replayed batch (mid-commit crash, lost offset) rewrites its
     * directory instead of appending duplicates.
     *
-    * Returns the number of index (re)loads performed — the stamp-poll
+    * Returns the number of index (re)loads performed — the version-poll
     * spec's observable (1 for a fully quiescent drain).
     */
   def queryOnce(spark: SparkSession, srcDir: String, indexPath: String,
@@ -137,7 +141,7 @@ object EmbeddingStream {
     else reader).parquet(srcDir)
     // foreachBatch runs on the driver, sequentially per batch — plain
     // vars are safe and live for this query run only
-    var servedStamp = Long.MinValue
+    var servedVersion = Long.MinValue
     var served: Similarity.IvfIndex = null
     var loads = 0
     src.writeStream
@@ -153,17 +157,12 @@ object EmbeddingStream {
           timingSink(batchId, stage, (System.nanoTime() - t0) / 1e6)
           r
         }
-        val stamp = staged("stamp_poll")(Similarity.ivfStampOf(spark, indexPath))
-        if (served == null || stamp < 0 || stamp != servedStamp) {
+        val version = staged("stamp_poll")(SnapshotTable.latestVersion(spark, indexPath))
+        if (served == null || version != servedVersion) {
           staged("index_load") {
-            // loadIvfFlat, not a bare `assigned` read: the live
-            // generation is resolved through the meta sidecar, so a
-            // compaction's generation flip (stamp bump) lands here like
-            // any append — and a reader pinned to the PREVIOUS
-            // generation stays valid until the compaction after next
-            served = Similarity.loadIvfFlat(spark, indexPath)
+            served = Similarity.loadIvfVersioned(spark, indexPath, version)
           }
-          servedStamp = stamp
+          servedVersion = version
           loads += 1
         }
         val index = served

@@ -541,6 +541,14 @@ object EventStream {
     * micro-batch publishes one version (keep-last on the batch id
     * `__v`), written beside the files its plan reads, so a crash
     * mid-commit leaves the previous version whole.
+    *
+    * Exactly-once per writer: the commit records `txn.<queryId>` =
+    * batch id as a version property, where the query id is the stream
+    * id the checkpoint persists. A batch at or below its writer's
+    * recorded id — a replay after a crash between the store commit and
+    * the checkpoint's commit log — is skipped from the log alone, with
+    * no Spark job; without the guard the sum would count it twice. A
+    * fresh or lost checkpoint is a new writer and replays everything.
     */
   def hllIngestOnce(spark: SparkSession, srcDir: String, storePath: String,
                     checkpointDir: String, lgK: Int = 12,
@@ -556,7 +564,9 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        val txn = "txn." + spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        val committed = SnapshotTable.properties(spark, storePath).get(txn).exists(_.toLong >= batchId)
+        if (!committed && !batch.isEmpty) {
           val daily = batch
             .filter(col("user_id").isNotNull && col("ts").isNotNull)
             .groupBy(col("event_type"),
@@ -570,7 +580,8 @@ object EventStream {
               sum(col("n_events")).as("n_events"))
             .withColumn("__v", lit(batchId))
           SnapshotTable.upsertOrCreate(spark, storePath, merged,
-            keyCols = Seq("event_type", "day"), orderCol = "__v"): Unit
+            keyCols = Seq("event_type", "day"), orderCol = "__v",
+            properties = Map(txn -> batchId.toString)): Unit
         }
       }
       .start()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
-import graft.ops.Similarity
+import graft.ops.{AnnServing, Similarity}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
@@ -31,11 +31,11 @@ class MaintainSpec extends SparkSpec {
     Files.setLastModifiedTime(Paths.get(crashedStage),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10_000_000))
 
-    // ---- versioned IVF store with superseded versions, inside the
-    // live ivf layout home of a corpus ----
+    // ---- IVF store with superseded versions, inside the live ivf
+    // layout home of a corpus ----
     val ivfCorpus = Files.createTempDirectory("graft_mt_ivf").toString
     val ivfHome = ServingLayouts.dirFor("ivf", ivfCorpus)
-    val store = ivfHome + "/ivf"
+    val store = AnnServing.storeIn(ivfHome)
     val emb = Tables.embeddings(spark, sfDir)
     val index = Similarity.buildIvf(emb, 4)
     Similarity.writeIvfVersioned(index, store)
@@ -43,7 +43,8 @@ class MaintainSpec extends SparkSpec {
     Similarity.writeIvfVersioned(index, store)
     ServingLayouts.markComplete(ivfHome)
     ServingLayouts.touch(ivfHome)
-    assert(Similarity.ivfVersions(spark, store).length === 3)
+    assert(SnapshotTable.versions(spark, store).length === 3)
+    val filesPerVersion = SnapshotTable.manifest(spark, store).collect().length
 
     // ---- snapshot table whose history contains an UNREFERENCED file:
     // the upsert rewrites partition a, orphaning v1's a-file ----
@@ -72,8 +73,10 @@ class MaintainSpec extends SparkSpec {
       snapshotPaths = Seq(snap), snapshotKeep = 1,
       cacheRoots = Seq(cacheRoot), cacheTtlMs = 1000L)
 
-    assert(report.ivfVersions === 2, "two superseded quantizer versions reclaimed")
-    assert(Similarity.ivfVersions(spark, store) === Seq(3L), "latest version survives")
+    assert(report.ivfFiles === 2 * filesPerVersion,
+      "the files of two superseded quantizer versions reclaimed")
+    assert(SnapshotTable.versions(spark, store) === Seq(3L), "latest version survives")
+    assert(Similarity.loadIvfVersioned(spark, store).assigned.count() === emb.count())
     assert(report.layouts >= 2, "stale layout + crashed stage reclaimed")
     assert(!Files.exists(Paths.get(staleDir)), "stale layout gone")
     assert(!Files.exists(Paths.get(crashedStage)), "crashed stage gone")
@@ -131,21 +134,25 @@ class MaintainSpec extends SparkSpec {
 
   test("ivf fragmentation signal: a slivered store recommends compaction, a compact one is quiet") {
     val corpus = Files.createTempDirectory("graft_mt_frag").toString
-    // all three serving families: (layout kind, store dir, cell-partitioned data dir)
-    val stores = Seq(("ivf", "ivf", "assigned"), ("sq8", "ivf", "assigned"),
-      ("ivfpq", "pq", "codes"))
-    def writeVersion(kind: String, store: String, data: String, v: Int,
-                     filesPerCell: Int): Unit = {
-      val d = Paths.get(ServingLayouts.dirFor(kind, corpus), store, f"v$v%08d", data)
-      for (c <- 0 until 4) {
-        Files.createDirectories(d.resolve(s"cell=$c"))
-        for (f <- 0 until filesPerCell)
-          Files.write(d.resolve(s"cell=$c/part-$f.parquet"), Array[Byte](1))
+    val kinds = Seq("ivf", "sq8", "ivfpq")
+    // the probe reads files per cell from the store's latest manifest:
+    // publish version `v` naming `filesPerCell` files in each of 4 cells
+    def writeVersion(kind: String, v: Int, filesPerCell: Int): Unit = {
+      val store = Paths.get(AnnServing.storeIn(ServingLayouts.dirFor(kind, corpus)))
+      val entries = for (c <- 0 until 4; f <- 0 until filesPerCell) yield {
+        val rel = s"data/commit-v$v/cell=$c/part-$f.parquet"
+        Files.createDirectories(store.resolve(rel).getParent)
+        Files.write(store.resolve(rel), Array[Byte](1))
+        s"""{"path":"$rel","part":"cell=$c"}"""
       }
+      val manifest = store.resolve(f"_manifests/v$v%08d/manifest.json")
+      Files.createDirectories(manifest.getParent)
+      Files.write(manifest, (s"""{"entries":[${entries.mkString(",")}],""" +
+        """"partition_cols":["cell"],"schema":{"type":"struct","fields":[]}}""").getBytes)
     }
     // a fragmented latest version: 4 cells x 12 sliver files (the shape
-    // continuous ingest leaves without the cell-coalescing write)
-    stores.foreach { case (k, st, d) => writeVersion(k, st, d, 1, 12) }
+    // continuous ingest leaves without compaction)
+    kinds.foreach(writeVersion(_, 1, 12))
     val r = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue)
     for ((name, f) <- Seq("ivf" -> r.ivfFragmentation, "sq8" -> r.sq8Fragmentation,
                           "pq" -> r.pqFragmentation))
@@ -153,9 +160,9 @@ class MaintainSpec extends SparkSpec {
         s"slivered $name store must recommend compaction, got $f")
     // a compacted NEWER version (one file per cell) clears the signal —
     // the probe reads the latest version, which is what serving loads
-    stores.foreach { case (k, st, d) => writeVersion(k, st, d, 2, 1) }
+    kinds.foreach(writeVersion(_, 2, 1))
     // --compact-ivf on an already-compact store must SKIP the
-    // republish (an ungated compact would full-rewrite the corpus on
+    // compaction (an ungated compact would full-rewrite the corpus on
     // every cron tick): these fixture files are not real parquet, so
     // an attempted compaction here would throw — the gate not throwing
     // IS the assertion, plus no new version appearing
@@ -164,21 +171,22 @@ class MaintainSpec extends SparkSpec {
     for ((name, f) <- Seq("ivf" -> r2.ivfFragmentation, "sq8" -> r2.sq8Fragmentation,
                           "pq" -> r2.pqFragmentation))
       assert(f === Some((4L, 4L, false)), s"compact latest $name version must be quiet, got $f")
-    stores.foreach { case (k, st, _) =>
-      assert(Similarity.ivfVersions(spark, ServingLayouts.dirFor(k, corpus) + "/" + st)
+    kinds.foreach { k =>
+      assert(SnapshotTable.versions(spark, AnnServing.storeIn(ServingLayouts.dirFor(k, corpus)))
         === Seq(1L, 2L),
         s"an already-compact $k store must not gain a version from --compact-ivf")
     }
   }
 
   test("Maintain leaves a home holding only flat directories alone") {
-    // Only versioned stores are maintained. Data dirs at a home's top
-    // level (the older flat shape) are neither probed, compacted nor
-    // reclaimed: they age out with the home under ServingLayouts.vacuum.
-    // The fixture files are not real parquet, so any read would throw.
+    // Only the store under `<home>/table` is maintained. Data dirs at a
+    // home's top level (the older flat shape) and pre-table `v<N>`
+    // stores are neither probed, compacted nor reclaimed: they age out
+    // with the home under ServingLayouts.vacuum. The fixture files are
+    // not real parquet, so any read would throw.
     val corpus = Files.createTempDirectory("graft_mt_flat").toString
-    val flat = Seq(("sq8", Seq("assigned", "centroids")),
-      ("ivfpq", Seq("codes", "codebooks", "centroids")))
+    val flat = Seq(("sq8", Seq("assigned", "centroids", "ivf/v00000001/assigned")),
+      ("ivfpq", Seq("codes", "codebooks", "centroids", "pq/v00000001/codes")))
     val written = flat.flatMap { case (kind, dirs) =>
       val home = ServingLayouts.dirFor(kind, corpus)
       ServingLayouts.markComplete(home)
@@ -196,9 +204,9 @@ class MaintainSpec extends SparkSpec {
       compactIvfStore = true)
     assert(r.sq8Fragmentation === None && r.pqFragmentation === None,
       "a home without versions reports no fragmentation")
-    assert(r.ivfVersions === 0)
-    assert(Similarity.ivfVersions(spark, ServingLayouts.dirFor("sq8", corpus) + "/ivf").isEmpty &&
-      Similarity.ivfVersions(spark, ServingLayouts.dirFor("ivfpq", corpus) + "/pq").isEmpty,
+    assert(r.ivfFiles === 0)
+    assert(Seq("sq8", "ivfpq").forall(k => SnapshotTable.versions(spark,
+      AnnServing.storeIn(ServingLayouts.dirFor(k, corpus))).isEmpty),
       "maintenance must not publish a version from flat dirs")
     assert(written.forall(Files.exists(_)), "every flat file is left in place")
   }
@@ -210,6 +218,6 @@ class MaintainSpec extends SparkSpec {
     assert(before.isEmpty)
     assert(ServingLayouts.existingDirFor("ivf", empty).isEmpty,
       "a maintenance probe must not manufacture layout homes")
-    assert(report.ivfVersions === 0 && report.snapshots === 0 && report.cacheDirs === 0)
+    assert(report.ivfFiles === 0 && report.snapshots === 0 && report.cacheDirs === 0)
   }
 }

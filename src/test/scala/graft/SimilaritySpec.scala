@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Similarity
+import graft.sources.SnapshotTable
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -9,6 +10,17 @@ class SimilaritySpec extends SparkSpec {
     * are keyed by corpus directory and shared across processes, so a
     * spec that publishes into a serving store gets a corpus of its own.
     */
+  /** Publish `index` as v1 of a fresh float store and load it back. */
+  private def persisted(index: Similarity.IvfIndex, store: String): Similarity.IvfIndex = {
+    Similarity.writeIvfVersioned(index, store)
+    Similarity.loadIvfVersioned(spark, store)
+  }
+
+  /** Files per `cell=` partition in the store's latest manifest. */
+  private def filesPerCell(store: String): Map[String, Int] =
+    SnapshotTable.manifest(spark, store).collect().groupBy(_.getString(1))
+      .map { case (cell, rows) => cell -> rows.length }
+
   private def isolatedCorpus(prefix: String): String = {
     import java.nio.file.{Files, Path, Paths}
     val corpus = Files.createTempDirectory(prefix)
@@ -133,7 +145,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_served").toString
-    val index = Similarity.writeIvfPartitioned(Similarity.buildIvf(e), dir)
+    val index = persisted(Similarity.buildIvf(e), dir)
     val queries = index.assigned.filter(col("vec_id") < 7)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
     // identical rows: the served form may only change the scan set,
@@ -169,66 +181,37 @@ class SimilaritySpec extends SparkSpec {
   test("IVF writes coalesce per cell; appends bound fragmentation; compactIvf restores it") {
     import org.apache.spark.sql.functions.{col, max => smax}
     val e = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_frag").toString
-    def filesPerCell(assigned: String): Map[String, Int] = {
-      val root = java.nio.file.Paths.get(assigned)
-      val s = java.nio.file.Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(p => p.getFileName.toString.startsWith("cell="))
-          .map { p =>
-            val c = java.nio.file.Files.list(p)
-            try p.getFileName.toString ->
-              c.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-            finally c.close()
-          }.toMap
-      } finally s.close()
-    }
+    val store = java.nio.file.Files.createTempDirectory("graft_ivf_frag").toString + "/ivf"
     // fresh build: ONE file per cell (the write path shuffles by cell —
     // without it every task writes a sliver into every cell dir; the
     // r12 sf100 build left 46 504 files for 2 M rows and serving paid
     // ~15 s/batch opening them)
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(e), dir)
-    val fresh = filesPerCell(s"$dir/assigned")
+    Similarity.writeIvfVersioned(Similarity.buildIvf(e), store)
+    val fresh = filesPerCell(store)
     assert(fresh.nonEmpty && fresh.values.forall(_ == 1),
       s"fresh layout must be one file per cell, got $fresh")
     // three appends: at most one NEW file per affected cell per batch
     val maxId = e.agg(smax("vec_id")).head.getLong(0)
     (1 to 3).foreach { i =>
-      Similarity.appendToIvfPartitioned(dir,
+      Similarity.appendToIvfPartitioned(store,
         e.withColumn("vec_id", col("vec_id") + (maxId + 1) * i))
     }
-    val grown = filesPerCell(s"$dir/assigned")
+    val grown = filesPerCell(store)
     assert(grown.values.forall(_ <= 4),
       s"3 appends may add at most 3 files per cell, got ${grown.values.max}")
-    // fabricate a fragmented STORE version (the flat layout above, with
-    // its per-append files, is exactly the shape continuous ingest
-    // leaves) and compact it: v2 is ~one file per cell, rows identical
-    val store = java.nio.file.Files.createTempDirectory("graft_ivf_store").toString + "/ivf"
-    val v1 = java.nio.file.Paths.get(store, "v00000001")
-    java.nio.file.Files.createDirectories(v1)
-    def cp(src: String, dst: java.nio.file.Path): Unit = {
-      val s = java.nio.file.Paths.get(src)
-      val w = java.nio.file.Files.walk(s)
-      try w.forEach { p =>
-        val d = dst.resolve(s.relativize(p).toString)
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(d)
-        else java.nio.file.Files.copy(p, d)
-      } finally w.close()
-    }
-    cp(s"$dir/assigned", v1.resolve("assigned"))
-    cp(s"$dir/centroids", v1.resolve("centroids"))
+    assert(grown.values.max > 1, "the appends must actually fragment the store")
+    // compaction folds the fragmented store back to one file per cell
+    // without changing a row, and the model properties carry forward
     val before = Similarity.loadIvfVersioned(spark, store)
     val rowsBefore = before.assigned.orderBy(col("vec_id")).collect().map(_.toSeq).toSeq
-    val v2 = Similarity.compactIvf(spark, store)
-    assert(v2 === 2L)
-    val compacted = filesPerCell(
-      java.nio.file.Paths.get(store, "v00000002", "assigned").toString)
+    assert(SnapshotTable.compact(spark, store, 1) === 5L)
+    val compacted = filesPerCell(store)
     assert(compacted.values.forall(_ == 1),
       s"compacted version must be one file per cell, got $compacted")
     val after = Similarity.loadIvfVersioned(spark, store)
     assert(after.assigned.orderBy(col("vec_id")).collect().map(_.toSeq).toSeq === rowsBefore,
       "compaction must not change a single row")
+    assert(after.centroids.collect().toSeq === before.centroids.collect().toSeq)
   }
 
   test("int8 quantization bounds codes and round-trip error") {
@@ -251,7 +234,7 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
     val built = Similarity.buildIvf(e)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    val loaded = Similarity.writeIvfPartitioned(built, dir)
+    val loaded = persisted(built, dir)
     // results through the persisted index match the in-memory index
     def q(ix: Similarity.IvfIndex) = ix.assigned.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
@@ -269,8 +252,7 @@ class SimilaritySpec extends SparkSpec {
       scan.metadata.mkString("\n"))
     val files = scan.relation.location.listFiles(scan.partitionFilters, Nil)
       .flatMap(_.files)
-    val allFiles = new java.io.File(s"$dir/assigned").listFiles()
-      .count(_.getName.startsWith("cell="))
+    val allFiles = filesPerCell(dir).size
     assert(files.nonEmpty && allFiles > 1)
     assert(files.forall(_.getPath.toString.contains("cell=0")),
       files.map(_.getPath.toString).mkString("\n"))
@@ -341,7 +323,7 @@ class SimilaritySpec extends SparkSpec {
     // the persisted layout appends the same way: half written, half
     // appended file-level ≡ the full in-memory index
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
-    Similarity.writeIvfPartitioned(
+    Similarity.writeIvfVersioned(
       Similarity.IvfIndex(built.centroids,
         built.assigned.join(half.select("vec_id"), Seq("vec_id"), "left_semi")), dir)
     val appended = Similarity.appendToIvfPartitioned(dir, rest)
@@ -531,7 +513,7 @@ class SimilaritySpec extends SparkSpec {
 
     // retrain with a different geometry and publish as v2
     assert(Similarity.rebuildIvf(spark, store, nCells = 8) === 2L)
-    assert(Similarity.ivfVersions(spark, store) === Seq(1L, 2L))
+    assert(SnapshotTable.versions(spark, store) === Seq(1L, 2L))
 
     // the pinned reader still evaluates against v1 — old-or-new, no mix
     val after = Similarity.queryIvf(pinned, q(pinned), excludeSelf = true)
@@ -559,50 +541,61 @@ class SimilaritySpec extends SparkSpec {
     assert(recalls.sum / recalls.size >= 0.8,
       s"post-rebuild recall ${recalls.sum / recalls.size}")
 
-    // a crashed rebuild (inert staging dir) changes nothing for readers
+    // a crashed rebuild (data files written, manifest never published)
+    // changes nothing for readers
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(store, ".tmp-crashed"))
-    assert(Similarity.ivfVersions(spark, store) === Seq(1L, 2L))
+    val v1Files = SnapshotTable.manifest(spark, store, 1).collect().map(_.getString(0))
+    val stray = new org.apache.hadoop.fs.Path(store, "data/commit-crashed/cell=0/part-0.parquet")
+    fs.mkdirs(stray.getParent)
+    fs.copyFromLocalFile(new org.apache.hadoop.fs.Path(s"$store/${v1Files.head}"), stray)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(store, "_manifests/.tmp-crashed"))
+    assert(SnapshotTable.versions(spark, store) === Seq(1L, 2L))
     assert(Similarity.loadIvfVersioned(spark, store).centroids.count() === 8L)
 
-    // GC: superseded v1 and the torn staging reclaim; v2 stays served
-    assert(Similarity.vacuumIvfVersions(spark, store) === 2,
-      "vacuum must reclaim the superseded version AND the torn staging")
-    assert(Similarity.ivfVersions(spark, store) === Seq(2L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store, ".tmp-crashed")))
+    // GC: superseded v1's files and the crashed commit reclaim; v2 stays served
+    assert(SnapshotTable.vacuum(spark, store) === v1Files.length + 1,
+      "vacuum must reclaim the superseded version's files AND the crashed commit's")
+    assert(SnapshotTable.versions(spark, store) === Seq(2L))
+    assert(!fs.exists(stray.getParent) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(store, "_manifests/.tmp-crashed")))
     val survivor = Similarity.loadIvfVersioned(spark, store)
     assert(survivor.centroids.count() === 8L &&
       survivor.assigned.count() === e.count(),
       "the retained latest version must stay fully readable")
     // idempotent when nothing is reclaimable; never deletes the latest
-    assert(Similarity.vacuumIvfVersions(spark, store) === 0)
+    assert(SnapshotTable.vacuum(spark, store) === 0)
     intercept[IllegalArgumentException] {
-      Similarity.vacuumIvfVersions(spark, store, keepVersions = 0)
+      SnapshotTable.vacuum(spark, store, keepVersions = 0)
     }
-    assert(Similarity.ivfVersions(spark, store) === Seq(2L))
+    assert(SnapshotTable.versions(spark, store) === Seq(2L))
   }
 
   test("geometry intent publishes atomically inside the version directory") {
     import graft.ops.AnnServing
-    // r13 advisor: a store-level marker written AFTER the version
-    // rename could be lost on a crash between publish and marker (an
-    // explicit-geometry store then nags rebuild_recommended forever)
-    // and torn by concurrent rebuilds. Staged inside the version dir,
-    // intent and version publish under ONE atomic rename.
+    // A store-level marker written AFTER the version publish could be
+    // lost on a crash between publish and marker (an explicit-geometry
+    // store then nags rebuild_recommended forever) and torn by
+    // concurrent rebuilds. As a version property, intent and version
+    // publish in ONE manifest (`_manifests/v<N>/manifest.json`).
     val store = java.nio.file.Files.createTempDirectory("graft_intent").toString + "/ivf"
     val e = Tables.embeddings(spark, sfDir)
     Similarity.writeIvfVersioned(Similarity.buildIvf(e, 16), store)
     assert(!AnnServing.geometryIntentExplicit(spark, store),
-      "a marker-less store defaults to derived intent")
+      "a store without a declared intent defaults to derived intent")
     Similarity.writeIvfVersioned(Similarity.buildIvf(e, 8), store,
       geometryIntent = Some(true))
-    assert(new java.io.File(s"$store/v00000002/_geometry_intent").exists(),
-      "the marker must live inside the version it describes")
+    assert(SnapshotTable.properties(spark, store, 2).get(Similarity.GeometryIntentKey) ===
+      Some("explicit") &&
+      !SnapshotTable.properties(spark, store, 1).contains(Similarity.GeometryIntentKey),
+      "the intent must live in the manifest of the version it describes")
     assert(AnnServing.geometryIntentExplicit(spark, store))
-    // a marker-less later publish (generic rebuildIvf) inherits the
-    // newest DECLARED intent instead of silently flipping it
+    // a later publish that declares none (generic rebuildIvf) carries the
+    // DECLARED intent forward instead of silently flipping it, and so
+    // does a compaction
     assert(Similarity.rebuildIvf(spark, store, nCells = 8) === 3L)
+    assert(AnnServing.geometryIntentExplicit(spark, store))
+    SnapshotTable.compact(spark, store, 1)
     assert(AnnServing.geometryIntentExplicit(spark, store))
     // a later derived-intent publish re-arms drift flagging
     Similarity.writeIvfVersioned(Similarity.buildIvf(e, 8), store,
@@ -722,27 +715,31 @@ class SimilaritySpec extends SparkSpec {
     pq.codebooks.write.parquet(s"$pqHome/codebooks")
     index.centroids.write.parquet(s"$pqHome/centroids")
     ServingLayouts.markComplete(pqHome)
+    // and a pre-table `v<N>` store beside them, equally never read
+    index.assigned.write.partitionBy("cell").parquet(s"$sq8Home/ivf/v00000001/assigned")
+    index.centroids.write.parquet(s"$sq8Home/ivf/v00000001/centroids")
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     val sq8Clean = rows(AnnServing.knnIvfSq8(spark, cleanDir))
     val pqClean = rows(AnnServing.knnIvfPq(spark, cleanDir))
     val sq8Flat = rows(AnnServing.knnIvfSq8(spark, flatDir))
     val pqFlat = rows(AnnServing.knnIvfPq(spark, flatDir))
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
-      "first serve must build v1 of the versioned store")
-    assert(Similarity.ivfVersions(spark, s"$pqHome/pq") === Seq(1L))
+    assert(SnapshotTable.versions(spark, AnnServing.storeIn(sq8Home)) === Seq(1L),
+      "first serve must build v1 of the store")
+    assert(SnapshotTable.versions(spark, AnnServing.storeIn(pqHome)) === Seq(1L))
     assert(sq8Flat.nonEmpty && sq8Flat === sq8Clean,
       "a flat-only home must serve row-for-row like a clean home")
     assert(pqFlat.nonEmpty && pqFlat === pqClean)
     // v1 carries the corpus-derived geometry, not the flat dirs' 4 cells
-    val sq8Cells = Similarity.loadIvfVersioned(spark, s"$sq8Home/ivf").centroids.count()
-    assert(sq8Cells > 4L && sq8Cells === Similarity.loadIvfVersioned(spark,
-      ServingLayouts.dirFor("sq8", cleanDir) + "/ivf").centroids.count())
-    val (pqCentroids, pqModel, _) = Similarity.loadIvfPqVersioned(spark, s"$pqHome/pq")
+    val sq8Cells = Similarity.loadIvfVersioned(spark, AnnServing.storeIn(sq8Home)).nCells
+    assert(sq8Cells > 4 && sq8Cells === Similarity.loadIvfVersioned(spark,
+      AnnServing.storeIn(ServingLayouts.dirFor("sq8", cleanDir))).nCells)
+    val (pqCentroids, pqModel, _) = Similarity.loadIvfPqVersioned(spark, AnnServing.storeIn(pqHome))
     assert(pqCentroids.count() > 4L && pqModel.mSubs != 4)
     assert(Files.exists(Paths.get(sq8Home, "assigned")) &&
-      Files.exists(Paths.get(pqHome, "codes")),
-      "serving must leave the flat dirs alone")
+      Files.exists(Paths.get(pqHome, "codes")) &&
+      Files.exists(Paths.get(sq8Home, "ivf", "v00000001", "assigned")),
+      "serving must leave the flat and pre-table dirs alone")
   }
 
   test("lsh bucket cache: a second call retires exactly the previous occupant") {

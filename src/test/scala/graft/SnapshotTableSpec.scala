@@ -579,4 +579,123 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(rowsOf(t, 1L).size === 5, "the current-format version still reads")
   }
+
+  test("version properties carry forward across append, upsert, compact and vacuum") {
+    val t = tmpTable("graft_snap_props")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    assert(SnapshotTable.properties(spark, t) === Map.empty)
+    SnapshotTable.append(spark, t, Seq((6L, "c", 2L)).toDF("k", "part_col", "ord"),
+      Map("a" -> "1", "b" -> "x"))
+    val want = Map("a" -> "1", "b" -> "x")
+    assert(SnapshotTable.properties(spark, t, 1L) === Map.empty, "time travel reads its own")
+    SnapshotTable.upsertKeepLast(spark, t, Seq((1L, "a", 3L)).toDF("k", "part_col", "ord"),
+      Seq("k"), "ord")
+    assert(SnapshotTable.properties(spark, t) === want, "upsert")
+    SnapshotTable.compact(spark, t)
+    assert(SnapshotTable.properties(spark, t) === want, "compact")
+    SnapshotTable.vacuum(spark, t, keepVersions = 1)
+    assert(SnapshotTable.properties(spark, t) === want, "vacuum")
+    SnapshotTable.append(spark, t, Seq((7L, "d", 4L)).toDF("k", "part_col", "ord"))
+    assert(SnapshotTable.properties(spark, t) === want, "append without properties")
+  }
+
+  test("a commit overrides only the properties it sets") {
+    val t = tmpTable("graft_snap_props_ovr")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    SnapshotTable.append(spark, t, seed.limit(1), Map("a" -> "1", "b" -> "2"))
+    SnapshotTable.upsertOrCreate(spark, t, seed.limit(1), Seq("k"), "ord",
+      properties = Map("b" -> "3", "c" -> "4"))
+    assert(SnapshotTable.properties(spark, t) === Map("a" -> "1", "b" -> "3", "c" -> "4"))
+    SnapshotTable.overwrite(spark, t, seed, Seq("part_col"), Map("a" -> "5"))
+    assert(SnapshotTable.properties(spark, t) === Map("a" -> "5", "b" -> "3", "c" -> "4"))
+    assert(rowsOf(t) === rowsOf(t, 1L), "overwrite replaces the rows")
+    assert(SnapshotTable.properties(spark, t, 3L) === Map("a" -> "1", "b" -> "3", "c" -> "4"))
+  }
+
+  test("a manifest without properties reads as empty; the next commit adds them") {
+    val t = tmpTable("graft_snap_props_old")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    // version 1 as the previous manifest.json writer left it: no `properties`
+    val mf = java.nio.file.Paths.get(t, "_manifests", "v00000001", "manifest.json")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(mf.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("properties")
+    java.nio.file.Files.write(mf, node.toString.getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(mf.resolveSibling(".manifest.json.crc"))
+    assert(!new String(java.nio.file.Files.readAllBytes(mf), "UTF-8").contains("properties"))
+    assert(SnapshotTable.properties(spark, t) === Map.empty)
+    assert(rowsOf(t).size === 5)
+    SnapshotTable.append(spark, t, seed.limit(1), Map("k" -> "v"))
+    assert(SnapshotTable.properties(spark, t) === Map("k" -> "v"))
+  }
+
+  test("IVF centroid doubles round-trip bit-exactly, subnormals and signed zeros") {
+    import graft.ops.Similarity
+    val rnd = new scala.util.Random(7)
+    val special = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      java.lang.Double.longBitsToDouble(0x000fffffffffffffL), java.lang.Double.MIN_NORMAL,
+      Double.MaxValue, Double.MinValue, 0.1, 1.0 / 3, -2.5e-300, 123456.789e10)
+    val random = Iterator.continually(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+      .filter(d => !d.isNaN && !d.isInfinite).take(52).toSeq
+    val cells = (special ++ random).grouped(8).toSeq.map(_.toArray)
+    val centroids = cells.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
+    val assigned = cells.indices.map(i => (i.toLong, Array.fill(8)(1.0), 8.0, i))
+      .toDF("vec_id", "v", "norm2", "cell")
+    val store = tmpTable("graft_snap_centroids")
+    Similarity.writeIvfVersioned(Similarity.IvfIndex(centroids, assigned), store)
+    val back = Similarity.loadIvfVersioned(spark, store).centroids.collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
+    assert(back.length === cells.length)
+    back.foreach { case (cell, c) =>
+      assert(c.map(java.lang.Double.doubleToRawLongBits) ===
+        cells(cell).toSeq.map(java.lang.Double.doubleToRawLongBits), s"cell $cell")
+    }
+  }
+
+  test("a crashed IVF append's stray commit is invisible; redelivery lands once") {
+    import graft.ops.Similarity
+    val emb = Tables.embeddings(spark, sfDir)
+    val n = emb.count()
+    val base = emb.filter(col("vec_id") < n / 2)
+    val batch = emb.filter(col("vec_id") >= n / 2)
+    val store = tmpTable("graft_snap_ivf_crash")
+    val built = Similarity.buildIvf(base)
+    Similarity.writeIvfVersioned(built, store)
+    // the crashed append: its rows written under a commit subtree, the
+    // manifest (and with it the raised hwm) never published
+    Similarity.appendToIvf(Similarity.IvfIndex(built.centroids, built.assigned.limit(0)), batch)
+      .assigned.write.partitionBy("cell").parquet(s"$store/data/commit-crashed")
+    assert(SnapshotTable.versions(spark, store) === Seq(1L))
+    assert(SnapshotTable.read(spark, store).count() === n / 2, "stray files are invisible")
+    assert(SnapshotTable.properties(spark, store).get("hwm") === Some(s"${n / 2 - 1}"))
+    // redelivery under the monotone guard lands every row exactly once
+    Similarity.appendToIvfPartitioned(store, batch, monotoneIds = true)
+    val grown = SnapshotTable.read(spark, store)
+    assert(grown.count() === n && grown.select("vec_id").distinct().count() === n)
+    assert(SnapshotTable.properties(spark, store).get("hwm") === Some(s"${n - 1}"))
+    // ≡ the in-memory append cell-for-cell, and vacuum reclaims the stray files
+    val mem = Similarity.appendToIvf(Similarity.loadIvfVersioned(spark, store, 1), batch)
+    assert(grown.select("vec_id", "cell").as[(Long, Int)].collect().toSet ===
+      mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet)
+    SnapshotTable.vacuum(spark, store, keepVersions = 2)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "data", "commit-crashed")))
+  }
+
+  test("loading an IVF and a PQ store and taking nCells runs no Spark job") {
+    import graft.ops.Similarity
+    val emb = Tables.embeddings(spark, sfDir)
+    val ivf = Similarity.buildIvf(emb)
+    val pq = Similarity.trainPq(emb)
+    val ivfStore = tmpTable("graft_snap_ivf_jobs")
+    val pqStore = tmpTable("graft_snap_pq_jobs")
+    Similarity.writeIvfVersioned(ivf, ivfStore)
+    Similarity.writeIvfPqVersioned(ivf.centroids, pq.codebooks, Similarity.pqCodesOf(ivf, pq), pqStore)
+    val ((cells, pqCells, mSubs), n) = JobCount.of(spark.sparkContext) {
+      val loaded = Similarity.loadIvfVersioned(spark, ivfStore)
+      val (centroids, model, _) = Similarity.loadIvfPqVersioned(spark, pqStore)
+      (loaded.nCells, centroids.collect().length, model.mSubs)
+    }
+    assert(n === 0, s"loading the stores started $n jobs")
+    assert(cells === 16 && pqCells === 16 && mSubs === pq.mSubs)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.Ingest
 import graft.streaming.EventStream
+import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSpec {
@@ -591,6 +592,31 @@ class StreamingSpec extends SparkSpec {
     assert(EventStream.hllServe(spark, store).collect().toSeq === snapshot)
   }
 
+  test("hll ingest: a batch replayed after a lost commit-log entry counts once") {
+    import graft.streaming.EventStream
+    val ev = Tables.events(spark, sfDir)
+    val src = java.nio.file.Files.createTempDirectory("graft_hllr_src").toString
+    val store = java.nio.file.Files.createTempDirectory("graft_hllr_store").toString + "/store"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_hllr_ck").toString
+    ev.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("overwrite").parquet(src)
+    Thread.sleep(1100)
+    ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(src)
+    EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1)
+    def counts() = EventStream.hllServe(spark, store).select("event_type", "day", "n_events")
+      .collect().map(_.toSeq).toSeq
+    val control = counts()
+    // a crash after batch 1's store commit but before the stream's own
+    // commit log entry: the restart re-runs batch 1 under the same query id
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    java.nio.file.Files.delete(commits.resolve("1"))
+    java.nio.file.Files.deleteIfExists(commits.resolve(".1.crc"))
+    EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1)
+    assert(java.nio.file.Files.exists(commits.resolve("1")), "batch 1 must have re-run")
+    assert(counts() === control, "the replayed batch must not be counted twice")
+    assert(SnapshotTable.versions(spark, store) === Seq(1L, 2L),
+      "the replay must publish no version")
+  }
+
   test("embedding ingest stream grows the persisted IVF index like the in-memory append") {
     import spark.implicits._
     import graft.ops.Similarity
@@ -600,32 +626,28 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < n / 2)
     val late = emb.filter(col("vec_id") >= n / 2)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idxPath)
+    Similarity.writeIvfVersioned(Similarity.buildIvf(base), idxPath)
     val src = java.nio.file.Files.createTempDirectory("graft_emb_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_emb_ckpt").toString
     late.coalesce(1).write.mode("overwrite").parquet(src)
 
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    val grown = spark.read.parquet(s"$idxPath/assigned")
+    val grown = SnapshotTable.read(spark, idxPath)
     assert(grown.count() === n)
     // stream-grown persisted assignment ≡ the in-memory append against
     // the same stored centroids (cell-for-cell)
-    val mem = Similarity.appendToIvf(
-      Similarity.IvfIndex(
-        spark.read.parquet(s"$idxPath/centroids"),
-        spark.read.parquet(s"$idxPath/assigned").filter(col("vec_id") < n / 2)),
-      late)
+    val mem = Similarity.appendToIvf(Similarity.loadIvfVersioned(spark, idxPath, 1), late)
     val got = grown.select("vec_id", "cell").as[(Long, Int)].collect().toSet
     val want = mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet
     assert(got === want)
     // layer 1: same checkpoint → files already committed → no-op
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
+    assert(SnapshotTable.read(spark, idxPath).count() === n)
     // layer 2: LOST checkpoint (redelivery) → the vec_id anti-join
     // guard drops the whole replayed batch before any file lands
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_emb_ckpt2").toString
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt2)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
+    assert(SnapshotTable.read(spark, idxPath).count() === n)
   }
 
   test("streamed ANN queries against the persisted index equal the batch query set") {
@@ -633,7 +655,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.EmbeddingStream
     val emb = Tables.embeddings(spark, sfDir)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_qivf_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(emb), idxPath)
+    Similarity.writeIvfVersioned(Similarity.buildIvf(emb), idxPath)
     val queries = emb.filter(col("vec_id") < 10)
     val src = java.nio.file.Files.createTempDirectory("graft_qivf_src").toString
     val dest = java.nio.file.Files.createTempDirectory("graft_qivf_dest").toString + "/out"
@@ -647,9 +669,7 @@ class StreamingSpec extends SparkSpec {
       "quiescent index: unchanged-stamp micro-batches must skip the reload")
     val streamed = spark.read.parquet(dest).drop("batch_id")
       .orderBy("query_id", "rnk").collect().toSeq
-    val index = Similarity.IvfIndex(
-      spark.read.parquet(s"$idxPath/centroids"),
-      spark.read.parquet(s"$idxPath/assigned"))
+    val index = Similarity.loadIvfVersioned(spark, idxPath)
     val batchQ = Similarity.prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm2").as("qn2"))
@@ -672,8 +692,8 @@ class StreamingSpec extends SparkSpec {
     val half = emb.filter(col("vec_id") % 2 === 0)
     val rest = emb.filter(col("vec_id") % 2 === 1)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_poll_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(half), idxPath)
-    assert(Similarity.ivfStampOf(spark, idxPath) === 1L, "fresh layout stamps at 1")
+    Similarity.writeIvfVersioned(Similarity.buildIvf(half), idxPath)
+    assert(SnapshotTable.latestVersion(spark, idxPath) === 1L, "fresh store is version 1")
     val queries = emb.filter(col("vec_id") < 6)
     val src = java.nio.file.Files.createTempDirectory("graft_poll_src").toString
     queries.repartition(3).write.mode("overwrite").parquet(src)
@@ -684,7 +704,7 @@ class StreamingSpec extends SparkSpec {
       "three quiescent micro-batches, one load")
     // grow the index: the append bumps the stamp
     Similarity.appendToIvfPartitioned(idxPath, rest)
-    assert(Similarity.ivfStampOf(spark, idxPath) === 2L, "append must bump the stamp")
+    assert(SnapshotTable.latestVersion(spark, idxPath) === 2L, "append must publish a version")
     // a new drain of the same queries must serve the GROWN snapshot
     val dest2 = java.nio.file.Files.createTempDirectory("graft_poll_d2").toString + "/out"
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_poll_c2").toString
@@ -692,9 +712,7 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerTrigger = 1) === 1)
     val streamed2 = spark.read.parquet(dest2).drop("batch_id")
       .orderBy("query_id", "rnk").collect().toSeq
-    val full = Similarity.IvfIndex(
-      spark.read.parquet(s"$idxPath/centroids"),
-      spark.read.parquet(s"$idxPath/assigned"))
+    val full = Similarity.loadIvfVersioned(spark, idxPath)
     val batch2 = Similarity.queryIvf(full, Similarity.prepared(queries)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
           col("norm2").as("qn2")))
@@ -743,19 +761,19 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < n / 2)
     val late = emb.filter(col("vec_id") >= n / 2)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_hwm_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idxPath)
-    assert(Similarity.readIvfMeta(spark, idxPath).hwm === Some(n / 2 - 1),
-      "a fresh write must record the layout's high-water mark")
+    Similarity.writeIvfVersioned(Similarity.buildIvf(base), idxPath)
+    assert(SnapshotTable.properties(spark, idxPath).get("hwm") === Some(s"${n / 2 - 1}"),
+      "a fresh write must record the store's high-water mark")
     val src = java.nio.file.Files.createTempDirectory("graft_hwm_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_hwm_ck").toString
     late.coalesce(1).write.mode("overwrite").parquet(src)
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
-    assert(Similarity.readIvfMeta(spark, idxPath).hwm === Some(n - 1),
-      "the append must promote the high-water mark")
+    assert(SnapshotTable.read(spark, idxPath).count() === n)
+    assert(SnapshotTable.properties(spark, idxPath).get("hwm") === Some(s"${n - 1}"),
+      "the append must raise the high-water mark")
     // lost checkpoint → full redelivery. Tap every executed scan of the
-    // stored assigned tree: the hwm guard must produce the no-op from
-    // the metadata sidecar alone.
+    // stored data files: the hwm guard must produce the no-op from the
+    // version properties alone.
     val scannedRows = new java.util.concurrent.atomic.AtomicLong(0)
     val tap = new org.apache.spark.sql.util.QueryExecutionListener {
       private def walk(p: org.apache.spark.sql.execution.SparkPlan)
@@ -770,7 +788,7 @@ class StreamingSpec extends SparkSpec {
                              ns: Long): Unit =
         walk(qe.executedPlan).foreach {
           case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains(s"$idxPath/assigned")) =>
+            if s.relation.location.rootPaths.exists(_.toString.contains(s"$idxPath/data")) =>
             scannedRows.addAndGet(s.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
           case _ => ()
         }
@@ -786,7 +804,7 @@ class StreamingSpec extends SparkSpec {
       // beat before reading the accumulated scan mass
       Thread.sleep(2000)
     } finally spark.listenerManager.unregister(tap)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n,
+    assert(SnapshotTable.read(spark, idxPath).count() === n,
       "redelivery must be a no-op")
     assert(scannedRows.get() === 0L,
       s"the hwm guard must not scan stored ids on redelivery, scanned ${scannedRows.get()}")
@@ -808,7 +826,7 @@ class StreamingSpec extends SparkSpec {
     val late = emb.filter(col("vec_id") >= n / 2)
     def freshIndex(): String = {
       val p = java.nio.file.Files.createTempDirectory("graft_mono_idx").toString
-      Similarity.writeIvfPartitioned(Similarity.buildIvf(base), p)
+      Similarity.writeIvfVersioned(Similarity.buildIvf(base), p)
       p
     }
     def stage(parts: Seq[org.apache.spark.sql.DataFrame]): String = {
@@ -832,7 +850,7 @@ class StreamingSpec extends SparkSpec {
     EmbeddingStream.ingestOnce(spark, okSrc, idx1,
       java.nio.file.Files.createTempDirectory("graft_mono_ck1").toString,
       maxFilesPerTrigger = 1)
-    assert(spark.read.parquet(s"$idx1/assigned").count() === n,
+    assert(SnapshotTable.read(spark, idx1).count() === n,
       "an ascending multi-file backlog must fully land under the hwm guard")
     // the SAME rows interleaved (high range first) — contract violated:
     // the exact anti-join form must land them all
@@ -842,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     EmbeddingStream.ingestOnce(spark, badSrc, idx2,
       java.nio.file.Files.createTempDirectory("graft_mono_ck2").toString,
       maxFilesPerTrigger = 1, monotoneIds = false)
-    assert(spark.read.parquet(s"$idx2/assigned").count() === n,
+    assert(SnapshotTable.read(spark, idx2).count() === n,
       "an out-of-order backlog must fully land under the anti-join form")
   }
 
@@ -859,8 +877,8 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < n / 2 &&
       !(col("vec_id") >= n / 4 && col("vec_id") < n / 3))
     val idx = java.nio.file.Files.createTempDirectory("graft_straddle_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx)
-    assert(Similarity.readIvfMeta(spark, idx).hwm === Some(n / 2 - 1))
+    Similarity.writeIvfVersioned(Similarity.buildIvf(base), idx)
+    assert(SnapshotTable.properties(spark, idx).get("hwm") === Some(s"${n / 2 - 1}"))
     // the violating batch: the hole (ids ≤ hwm, NOT stored) + new high
     // ids + a stored redelivered slice — straddles the hwm
     val batch = emb.filter(
@@ -868,54 +886,10 @@ class StreamingSpec extends SparkSpec {
         col("vec_id") >= n / 2 ||                            // new, high
         col("vec_id") < n / 8)                               // redelivered
     Similarity.appendToIvfPartitioned(idx, batch, monotoneIds = true)
-    val assigned = spark.read.parquet(s"$idx/assigned")
+    val assigned = SnapshotTable.read(spark, idx)
     assert(assigned.count() === n, "the hole's rows must land exactly once")
     assert(assigned.select("vec_id").distinct().count() === n,
       "redelivered rows must not duplicate under the fallback")
-  }
-
-  test("hwm pending two-phase: a crash between data commit and promote still dedups exactly") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    val emb = Tables.embeddings(spark, sfDir)
-    val n = emb.count()
-    val base = emb.filter(col("vec_id") < n / 2)
-    val batchA = emb.filter(col("vec_id") >= n / 2)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pend_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx)
-    val h = n / 2 - 1
-    // CASE 1 — crash AFTER the append's data job committed, BEFORE the
-    // promote: batchA's rows are on disk, hwm still h, pending staked.
-    Similarity.appendToIvfPartitioned(idx, batchA, monotoneIds = true)
-    val done = Similarity.readIvfMeta(spark, idx)
-    assert(done.hwm === Some(n - 1) && done.pending.isEmpty)
-    Similarity.writeIvfMeta(spark, idx,
-      done.copy(hwm = Some(h), pending = Some(n - 1)))
-    // redelivery: the recovery anti-join verifies exactly the (h, n-1]
-    // window — nothing lands twice, and the mark resolves
-    Similarity.appendToIvfPartitioned(idx, batchA, monotoneIds = true)
-    val assigned = spark.read.parquet(s"$idx/assigned")
-    assert(assigned.count() === n, "no duplicates after crash-window redelivery")
-    assert(assigned.select("vec_id").distinct().count() === n)
-    val resolved = Similarity.readIvfMeta(spark, idx)
-    assert(resolved.hwm === Some(n - 1) && resolved.pending.isEmpty,
-      "the verified pending mark must promote into hwm")
-    // CASE 2 — crash BEFORE the data job: pending staked, no rows on
-    // disk. Redelivery must land the batch exactly once.
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_pend_idx2").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx2)
-    val m2 = Similarity.readIvfMeta(spark, idx2)
-    Similarity.writeIvfMeta(spark, idx2, m2.copy(pending = Some(n - 1)))
-    Similarity.appendToIvfPartitioned(idx2, batchA, monotoneIds = true)
-    assert(spark.read.parquet(s"$idx2/assigned").count() === n,
-      "a staked-but-uncommitted batch must land on redelivery")
-    // and the grown layout equals the in-memory append cell-for-cell
-    val mem = Similarity.appendToIvf(Similarity.IvfIndex(
-      spark.read.parquet(s"$idx2/centroids"),
-      spark.read.parquet(s"$idx2/assigned").filter(col("vec_id") < n / 2)), batchA)
-    assert(spark.read.parquet(s"$idx2/assigned").select("vec_id", "cell")
-        .as[(Long, Int)].collect().toSet ===
-      mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet)
   }
 
   test("auto-compaction bounds the layout's file count; a pinned reader survives the flip") {
@@ -926,13 +900,14 @@ class StreamingSpec extends SparkSpec {
     val n = emb.count()
     val base = emb.filter(col("vec_id") < n / 4)
     val idx = java.nio.file.Files.createTempDirectory("graft_ac_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx)
-    val nCells = spark.read.parquet(s"$idx/centroids").count()
-    // a reader loaded BEFORE any compaction — generation 0
-    val pinned = Similarity.loadIvfFlat(spark, idx)
+    Similarity.writeIvfVersioned(Similarity.buildIvf(base), idx)
+    // a reader loaded BEFORE any compaction — version 1
+    val pinned = Similarity.loadIvfVersioned(spark, idx)
+    val nCells = pinned.nCells
+    val v1Files = SnapshotTable.manifest(spark, idx).collect().map(_.getString(0))
     // three single-file batches at threshold 2: files/cell walks
-    // 1→2→3 (trigger: 3 > 2) → compact to gen 1 → 1→2 — exactly one
-    // flip, so the pinned gen-0 reader must stay valid throughout
+    // 1→2→3 (trigger: 3 > 2) → compact → 1→2 — exactly one
+    // compaction, so the pinned v1 reader must stay valid throughout
     val src = java.nio.file.Files.createTempDirectory("graft_ac_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ac_ck").toString
     (1 to 3).foreach { i =>
@@ -942,33 +917,35 @@ class StreamingSpec extends SparkSpec {
     }
     EmbeddingStream.ingestOnce(spark, src, idx, ckpt, maxFilesPerTrigger = 1,
       autoCompactFilesPerCell = 2)
-    val meta = Similarity.readIvfMeta(spark, idx)
-    assert(meta.gen === 1, s"expected exactly one generation flip, got ${meta.gen}")
-    assert(meta.files <= 2 * nCells,
-      s"file count must stay bounded without a manual step: ${meta.files} files / $nCells cells")
-    // the pinned pre-compaction reader still serves (its directory is
-    // retained until the compaction after next)
-    assert(pinned.assigned.count() >= base.count())
-    // the live generation holds every row exactly once
-    val live = Similarity.loadIvfFlat(spark, idx)
+    // v2, v3 appends; v4 the compaction, whose vacuum keeps v3 and v4;
+    // v5 the last append
+    assert(SnapshotTable.versions(spark, idx) === Seq(3L, 4L, 5L),
+      "expected exactly one compaction, after the second append")
+    val files = SnapshotTable.manifest(spark, idx).collect().length
+    assert(files <= 2 * nCells,
+      s"file count must stay bounded without a manual step: $files files / $nCells cells")
+    // the pinned pre-compaction reader still serves: the kept
+    // pre-compaction version references every file it reads
+    assert(pinned.assigned.count() === base.count())
+    // the live version holds every row exactly once
+    val live = Similarity.loadIvfVersioned(spark, idx)
     assert(live.assigned.count() === base.count() + 3 * n)
     assert(live.assigned.select("vec_id").distinct().count() === base.count() + 3 * n)
-    // rows survived the flip cell-for-cell ≡ the in-memory append
+    // rows survived the compaction cell-for-cell ≡ the in-memory append
     val mem = Similarity.appendToIvf(
-      Similarity.IvfIndex(pinned.centroids,
-        Similarity.loadIvfFlat(spark, idx).assigned.limit(0)),
+      Similarity.IvfIndex(pinned.centroids, pinned.assigned.limit(0)),
       emb.withColumn("vec_id", col("vec_id") + n))
     val memSet = mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet
     val liveSet = live.assigned.filter(col("vec_id") >= n && col("vec_id") < 2 * n)
       .select("vec_id", "cell").as[(Long, Int)].collect().toSet
     assert(liveSet === memSet, "compaction must preserve assignments exactly")
-    // ONE MORE compaction retires generation 0 — the documented
-    // retention: a reader more than one compaction behind rebuilds
-    Similarity.compactIvfFlat(spark, idx)
-    assert(Similarity.readIvfMeta(spark, idx).gen === 2)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "assigned")),
-      "generation n-2 must be retired")
-    assert(Similarity.loadIvfFlat(spark, idx).assigned.count() === base.count() + 3 * n)
+    // ONE MORE compaction retires version 1's files — the documented
+    // retention: a reader more than one compaction behind reloads
+    SnapshotTable.compact(spark, idx, 1)
+    SnapshotTable.vacuum(spark, idx, keepVersions = 2)
+    assert(v1Files.forall(f => !java.nio.file.Files.exists(java.nio.file.Paths.get(idx, f))),
+      "version 1's files must be retired")
+    assert(Similarity.loadIvfVersioned(spark, idx).assigned.count() === base.count() + 3 * n)
   }
 
   test("served-query backfill fallback (equi-join form) equals the pruned served form") {
@@ -981,7 +958,7 @@ class StreamingSpec extends SparkSpec {
     // through each side of the boundary and compare outputs exactly.
     val emb = Tables.embeddings(spark, sfDir)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_fb_idx").toString
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(emb), idxPath)
+    Similarity.writeIvfVersioned(Similarity.buildIvf(emb), idxPath)
     val queries = emb.filter(col("vec_id") < 12)
     val src = java.nio.file.Files.createTempDirectory("graft_fb_src").toString
     queries.repartition(2).write.mode("overwrite").parquet(src)
