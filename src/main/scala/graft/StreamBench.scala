@@ -320,7 +320,7 @@ object StreamBench {
           // (probe-cell collect + scored write) and the file source
           // re-counts its input rows once per action — the progress
           // metric double-counts while the output is the truth
-          val qServed = spark.read.parquet(s"$work/query_dest_$tag")
+          val qServed = SnapshotTable.read(spark, s"$work/query_dest_$tag")
             .select("query_id").distinct().count()
           (qServed, qBatches, qP50, qP99, qWall, qLoads,
             stageJsonOf(qStages), scanTap.json)
@@ -354,7 +354,7 @@ object StreamBench {
         // that include the appended vectors are the point of the
         // stamp-bump reload
         if (workloads("embedding")) {
-          val res = spark.read.parquet(s"$work/query_dest_cold")
+          val res = SnapshotTable.read(spark, s"$work/query_dest_cold")
           val nQ = res.select("query_id").distinct().count()
           val twins = res.filter(col("rnk") <= 2 &&
               col("neighbor_id") === col("query_id") + maxVec + 1)

@@ -158,24 +158,26 @@ object SnapshotTable {
   def create(spark: SparkSession, path: String, df: DataFrame,
              partitionCols: Seq[String] = Nil): Long = {
     require(versions(spark, path).isEmpty, s"table already exists at $path")
-    requireNoForeignFiles(spark, path)
-    publish(spark, path, 1L, Nil, writeCommit(spark, path, df, partitionCols), Map.empty)
+    overwrite(spark, path, df, partitionCols)
   }
 
   /** Add `df`'s rows as new files; existing entries carry forward.
-    * Schema evolution follows the [[Sources.evolveForAppend]] gate:
-    * ADDED nullable columns merge in (older commits null-fill at
-    * read — every branch reads under the version's stored schema),
-    * MISSING columns null-fill in the batch, and a TYPE CHANGE throws
-    * before any file lands — the producer-deployment contract the raw
-    * append path already enforces, now on the transactional table.
+    * With no table yet, publishes version 1 (unpartitioned) from `df`
+    * alone — the [[upsertOrCreate]] contract, so a sink's first batch
+    * needs no branch. Schema evolution follows the
+    * [[Sources.evolveForAppend]] gate: ADDED nullable columns merge in
+    * (older commits null-fill at read — every branch reads under the
+    * version's stored schema), MISSING columns null-fill in the batch,
+    * and a TYPE CHANGE throws before any file lands — the
+    * producer-deployment contract the raw append path already enforces,
+    * now on the transactional table.
     */
   def append(spark: SparkSession, path: String, df: DataFrame,
              properties: Map[String, String] = Map.empty): Long = {
-    val v = latestVersion(spark, path)
-    val s = snapshotOf(spark, path, v)
+    val (v, s) = latestOrEmpty(spark, path, Nil)
     publish(spark, path, v + 1, s.entries,
-      writeCommit(spark, path, evolved(s, df), s.partitionCols), s.properties ++ properties)
+      writeCommit(spark, path, if (v == 0L) df else evolved(s, df), s.partitionCols),
+      s.properties ++ properties)
   }
 
   /** Replace the table's rows with `df` as the next version (version 1
@@ -187,13 +189,38 @@ object SnapshotTable {
   def overwrite(spark: SparkSession, path: String, df: DataFrame,
                 partitionCols: Seq[String] = Nil,
                 properties: Map[String, String] = Map.empty): Long = {
-    val v = versions(spark, path).lastOption.getOrElse {
-      requireNoForeignFiles(spark, path); 0L
-    }
-    val carried = if (v == 0L) Map.empty[String, String] else snapshotOf(spark, path, v).properties
+    val (v, s) = latestOrEmpty(spark, path, partitionCols)
     publish(spark, path, v + 1, Nil, writeCommit(spark, path, df, partitionCols),
-      carried ++ properties)
+      s.properties ++ properties)
   }
+
+  /** The exactly-once commit of a stream micro-batch — the `txn` action
+    * of the Delta protocol (PROTOCOL.md, "Transaction Identifiers").
+    * A `foreachBatch` sink is at-least-once: a batch whose commit landed
+    * before the checkpoint's commit log recorded it runs again on
+    * restart. The writer is the running stream's query id, which the
+    * checkpoint persists, so it is stable across restarts. When the
+    * latest version's `txn.<writer>` is at or above `batchId` the batch
+    * is skipped from the log alone, with no Spark job, and this returns
+    * false. Otherwise `commit` runs with `txn.<writer> -> batchId`,
+    * which it must pass as the properties of its one commit (or make
+    * none, for an empty batch), so the record publishes in the same
+    * manifest as the data. A fresh or lost checkpoint is a new writer
+    * and replays everything.
+    */
+  def commitBatch(spark: SparkSession, path: String, batchId: Long)(
+      commit: Map[String, String] => Unit): Boolean = {
+    val txn = "txn." + streamWriter(spark)
+    if (properties(spark, path).get(txn).exists(_.toLong >= batchId)) false
+    else { commit(Map(txn -> batchId.toString)); true }
+  }
+
+  /** The query id of the stream whose micro-batch is running on this
+    * thread; refuses the call outside a running stream.
+    */
+  def streamWriter(spark: SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")).getOrElse(
+      throw new IllegalStateException("no stream is running on this thread"))
 
   /** `batch` evolved by [[Sources.evolveForAppend]] to the table schema
     * the version stores — its data columns, then its partition columns.
@@ -219,8 +246,10 @@ object SnapshotTable {
     * rewrite fully (one "partition").
     */
   def upsertKeepLast(spark: SparkSession, path: String, updates: DataFrame,
-                     keyCols: Seq[String], orderCol: String): Long =
-    merge(spark, path, latestVersion(spark, path), Nil, updates, keyCols, orderCol, Map.empty)
+                     keyCols: Seq[String], orderCol: String): Long = {
+    val v = latestVersion(spark, path)
+    merge(spark, path, v, snapshotOf(spark, path, v), updates, keyCols, orderCol, Map.empty)
+  }
 
   /** [[upsertKeepLast]] against a table that may not exist yet: the
     * first call publishes version 1 from the keep-last winners of the
@@ -237,22 +266,30 @@ object SnapshotTable {
                      keyCols: Seq[String], orderCol: String,
                      partitionCols: Seq[String] = Nil,
                      properties: Map[String, String] = Map.empty): Long = {
-    val v = versions(spark, path).lastOption.getOrElse {
-      requireNoForeignFiles(spark, path); 0L
-    }
-    merge(spark, path, v, partitionCols, updates, keyCols, orderCol, properties)
+    val (v, s) = latestOrEmpty(spark, path, partitionCols)
+    merge(spark, path, v, s, updates, keyCols, orderCol, properties)
   }
 
-  /** The one keep-last MERGE, from version `v` to v+1. Version 0 is the
-    * empty table, partitioned by `newPartitionCols`; an existing table
-    * keeps its own partitioning.
+  /** The latest version and its snapshot, or version 0 — the empty
+    * table, partitioned by `partitionCols` — when none is published yet
+    * and the root holds no foreign files.
     */
-  private def merge(spark: SparkSession, path: String, v: Long,
-                    newPartitionCols: Seq[String], updates: DataFrame,
-                    keyCols: Seq[String], orderCol: String,
+  private def latestOrEmpty(spark: SparkSession, path: String,
+                            partitionCols: Seq[String]): (Long, Snapshot) =
+    versions(spark, path).lastOption match {
+      case Some(v) => (v, snapshotOf(spark, path, v))
+      case None =>
+        requireNoForeignFiles(spark, path)
+        (0L, Snapshot(Nil, partitionCols, StructType(Nil), Map.empty))
+    }
+
+  /** The one keep-last MERGE, from version `v` (snapshot `s`) to v+1.
+    * Version 0 is the empty table; an existing table keeps its own
+    * partitioning.
+    */
+  private def merge(spark: SparkSession, path: String, v: Long, s: Snapshot,
+                    updates: DataFrame, keyCols: Seq[String], orderCol: String,
                     properties: Map[String, String]): Long = {
-    val s = if (v == 0L) Snapshot(Nil, newPartitionCols, StructType(Nil), Map.empty)
-      else snapshotOf(spark, path, v)
     val (old, partitionCols) = (s.entries, s.partitionCols)
     // MERGE follows the same evolution contract as append: the batch
     // evolves against the table's schema (type changes refuse, missing

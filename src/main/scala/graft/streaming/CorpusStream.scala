@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.{TextAnalysis, TextDedup}
+import graft.sources.SnapshotTable
 
 /** Continuous corpus ingest — the streaming twin of
   * [[graft.ops.TextDedup.dedupIncremental]]: documents land as files,
@@ -78,8 +79,9 @@ object CorpusStream {
     * [[graft.ops.TextDedup.spanDedupIncremental]] with the cross-batch
     * first-occurrence contract made DURABLE: each micro-batch is
     * rewritten against the persisted span index (reloaded per batch, so
-    * it sees every prior batch's appends), cleaned rows append to
-    * `destPath`, and the batch's new span digests append to the index
+    * it sees every prior batch's appends), cleaned rows append to the
+    * [[graft.sources.SnapshotTable]] at `destPath`, and the batch's new
+    * span digests append to the index
     * ([[graft.ops.TextDedup.appendToSpanIndex]] — bucketed, anti-join
     * idempotent). A span first seen in batch N is therefore removed
     * from batch N+k for any k — unlike the near-dup stream (whose index
@@ -89,6 +91,13 @@ object CorpusStream {
     * arrive in doc_id order the drained output equals the BATCH
     * span_dedup of everything, restricted to the streamed docs
     * (spec-asserted) — one semantics, two cadences.
+    *
+    * Exactly-once: the destination commit goes first, through
+    * [[graft.sources.SnapshotTable.commitBatch]], then the digest
+    * append. A replayed batch skips the destination commit — it must:
+    * rewritten again, against an index that now holds the batch's own
+    * spans, it would lose its own first occurrences — and re-runs only
+    * the idempotent digest append.
     */
   def spanRewriteOnce(spark: SparkSession, srcDir: String,
                       tablePrefix: String, indexPath: String,
@@ -103,7 +112,7 @@ object CorpusStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // The previous batch's digest append ran through the MICRO-BATCH
         // session (frames built from `batch` carry its cloned session),
         // which invalidates only that clone's relation cache — this
@@ -112,9 +121,10 @@ object CorpusStream {
         // listing and misses batch N's spans.
         spark.catalog.refreshTable(s"${tablePrefix}_spans")
         val index = TextDedup.loadSpanIndex(spark, tablePrefix, indexPath)
-        TextDedup.spanDedupIncremental(index, batch)
-          .write.mode("append").parquet(destPath)
+        SnapshotTable.commitBatch(spark, destPath, batchId)(
+          SnapshotTable.append(spark, destPath, TextDedup.spanDedupIncremental(index, batch), _))
         TextDedup.appendToSpanIndex(index, tablePrefix, batch)
+        FaultInjection.maybeHalt(batchId)
       }
       .start()
       .awaitTermination()
@@ -125,17 +135,17 @@ object CorpusStream {
     * micro-batch is scored against the PERSISTED importance model
     * ([[graft.ops.Corpus.writeDsirModel]] — trained offline on a
     * corpus snapshot, like any index build) and scored rows append to
-    * `destPath`. A document's score depends only on its own tokens and
-    * the static model, so the drained stream equals the batch scoring
-    * row-for-row regardless of batching (spec-asserted) — no state
-    * stores, no cross-batch contract caveats. The model is MATERIALIZED
-    * once up front (1024 rows to the driver, rebuilt as a local frame),
-    * so micro-batches neither re-read the path nor observe a concurrent
-    * retrain mid-drain; each batch pays only its own token explode +
-    * broadcast join. Each batch writes its own `batch_id=` directory
-    * with overwrite, so a replay after a mid-commit failure REWRITES
-    * the same directory instead of appending duplicates — the sink is
-    * idempotent per batch, not merely once-per-checkpoint-lineage.
+    * the [[graft.sources.SnapshotTable]] at `destPath`. A document's
+    * score depends only on its own tokens and the static model, so the
+    * drained stream equals the batch scoring row-for-row regardless of
+    * batching (spec-asserted) — no state stores, no cross-batch
+    * contract caveats. The model is MATERIALIZED once up front (1024
+    * rows to the driver, rebuilt as a local frame), so micro-batches
+    * neither re-read the path nor observe a concurrent retrain
+    * mid-drain; each batch pays only its own token explode + broadcast
+    * join. Each batch is one [[graft.sources.SnapshotTable.commitBatch]]
+    * append, so a replay after a crash between the commit and the
+    * checkpoint's commit log publishes nothing.
     */
   def dsirScoreOnce(spark: SparkSession, srcDir: String, modelPath: String,
                     destPath: String, checkpointDir: String,
@@ -153,33 +163,42 @@ object CorpusStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Corpus.dsirScore(batch, model)
-          .write.mode("overwrite").parquet(s"$destPath/batch_id=$batchId")
+        SnapshotTable.commitBatch(spark, destPath, batchId)(
+          SnapshotTable.append(spark, destPath, graft.ops.Corpus.dsirScore(batch, model), _))
+        FaultInjection.maybeHalt(batchId)
       }
       .start()
       .awaitTermination()
   }
 
   /** Drain all staged document files through the ingest pipeline into
-    * `destPath` (parquet append), exactly-once per file via the
-    * checkpoint. `Trigger.AvailableNow` processes the backlog and
-    * terminates — rerunning with the same checkpoint is a no-op; a
-    * live deployment swaps the trigger for a processing-time one and
-    * keeps the same DAG. If `statsPath` is set, each micro-batch also
-    * appends its one-row funnel report ([[acceptBatchWithReport]])
-    * tagged with the batch id — the ingest-health history a crawl
-    * operator dashboards.
-    */
-  /** `timingSink(batchId, stage, ms)` — optional per-batch stage
+    * the [[graft.sources.SnapshotTable]] at `destPath`.
+    * `Trigger.AvailableNow` processes the backlog and terminates —
+    * rerunning with the same checkpoint is a no-op; a live deployment
+    * swaps the trigger for a processing-time one and keeps the same
+    * DAG. If `statsPath` is set,
+    * each micro-batch also appends its one-row funnel report
+    * ([[acceptBatchWithReport]]) to the table there, tagged with
+    * `run_id` (the stream's query id: stable across restarts of one
+    * checkpoint, fresh when the checkpoint path is deleted and reused)
+    * and `batch_id` — the ingest-health history a crawl operator
+    * dashboards.
+    *
+    * Exactly-once: the destination and the report are each one
+    * [[graft.sources.SnapshotTable.commitBatch]] append, which records
+    * the batch id in the same manifest as the rows. A batch replayed
+    * after a crash between a commit and the checkpoint's commit log
+    * (StreamCrashCheck-gated) skips every commit that already landed,
+    * and the gate runs only if one of them did not.
+    *
+    * `timingSink(batchId, stage, ms)` — optional per-batch stage
     * attribution for the bench/ops loop (stages: "gate" = quality +
     * dedup-vs-index incl. the eager survivor materialization inside
-    * dedupIncremental; "append" = the destination write, which on the
-    * first batch also carries the redelivery-guard anti-join;
-    * "report" = the funnel-stats write when statsPath is set). No-op
-    * by default: production pays nothing, StreamBench aggregates the
-    * p50/p99 per stage so a latency tail is attributable instead of
-    * guessed at (r11: corpus-ingest p99 was 2.6× p50, attributed only
-    * by hypothesis).
+    * dedupIncremental; "append" = the destination commit; "report" =
+    * the funnel-stats commit when statsPath is set; a skipped replay
+    * records neither). No-op by default: production pays nothing,
+    * StreamBench aggregates the p50/p99 per stage so a latency tail is
+    * attributable instead of guessed at.
     */
   def ingestOnce(spark: SparkSession, srcDir: String,
                  index: TextDedup.DedupIndex, destPath: String,
@@ -188,45 +207,6 @@ object CorpusStream {
                  timingSink: (Long, String, Double) => Unit = (_, _, _) => ()): Unit = {
     val schema = spark.read.parquet(srcDir).schema
     val reader = spark.readStream.schema(schema)
-    // Redelivery window (StreamCrashCheck-gated): a driver that dies
-    // after a batch's append lands but before the engine's commit log
-    // records it gets the SAME batch replayed on restart — foreachBatch
-    // is at-least-once, the sink must be idempotent. Only the FIRST
-    // batch executed per query start can be such a replay (restart
-    // resumes at the first uncommitted batch; everything after it is
-    // first-time), so only that batch pays the guard: an anti-join on
-    // the already-ingested doc_ids (a columnar id-only scan of dest,
-    // like the embedding ingest's vec_id guard). A live deployment
-    // folds accepted docs into the incremental dedup index, which
-    // subsumes this; the backlog-drain entry guards against its own
-    // output. The funnel history gets the same first-batch guard keyed
-    // by (run_id, batch_id) — run_id is the checkpoint's OWN query id
-    // (the uuid the engine persists in <checkpoint>/metadata at first
-    // start): stable across restarts of the same checkpoint, so a
-    // crash-replayed batch keeps its key and the guard dedups it, and
-    // FRESH whenever the path is deleted and reused for a new backlog,
-    // so a new run's batch numbering cannot collide with a previous
-    // run's history in a shared statsPath. Resolved lazily in-batch
-    // because the metadata file exists only once the query has
-    // started; the path hash is only the fallback for a filesystem
-    // that hides the file (same-path reuse then shares run_ids — the
-    // guard may drop the new run's batch-0 report row).
-    val replayWindow = new java.util.concurrent.atomic.AtomicBoolean(true)
-    lazy val runId: String = {
-      val fallback = java.security.MessageDigest.getInstance("MD5")
-        .digest(checkpointDir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      try {
-        val meta = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-        val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(meta)) fallback
-        else {
-          val in = fs.open(meta)
-          val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-          """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse(fallback)
-        }
-      } catch { case _: java.io.IOException => fallback }
-    }
     (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     else reader)
@@ -243,38 +223,20 @@ object CorpusStream {
         // diff so pre-existing pins (the index's own caches) survive
         val sc = spark.sparkContext
         val before = sc.getPersistentRDDs.keySet
-        val maybeReplay = replayWindow.getAndSet(false)
-        def dedupAgainstDest(accepted: DataFrame): DataFrame =
-          if (!maybeReplay) accepted
-          else try accepted.join(spark.read.parquet(destPath).select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          catch { case _: org.apache.spark.sql.AnalysisException => accepted }
-        def timedMs[T](stage: String)(f: => T): T = {
-          val t0 = System.nanoTime()
-          val r = f
-          timingSink(batchId, stage, (System.nanoTime() - t0) / 1e6)
-          r
-        }
-        if (statsPath.isEmpty) {
-          val accepted = timedMs("gate")(acceptBatch(index, batch, threshold))
-          timedMs("append")(
-            dedupAgainstDest(accepted).write.mode("append").parquet(destPath))
-        } else {
-          val (accepted, report) =
-            timedMs("gate")(acceptBatchWithReport(index, batch, threshold))
-          timedMs("append")(
-            dedupAgainstDest(accepted).write.mode("append").parquet(destPath))
-          val newReport = report
-            .withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-          val guardedReport =
-            if (!maybeReplay) newReport
-            else try newReport.join(
-              spark.read.parquet(statsPath).select("run_id", "batch_id"),
-              Seq("run_id", "batch_id"), "left_anti")
-            catch { case _: org.apache.spark.sql.AnalysisException => newReport }
-          timedMs("report")(
-            guardedReport.coalesce(1).write.mode("append").parquet(statsPath))
-        }
+        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
+        // the gate runs only when a commit below needs it (a replayed
+        // batch whose commits both landed skips it), timed apart from
+        // the commit that forces it
+        lazy val (accepted, report) = staged("gate")(acceptBatchWithReport(index, batch, threshold))
+        def commit(path: String, stage: String)(rows: => DataFrame): Unit =
+          SnapshotTable.commitBatch(spark, path, batchId) { txn =>
+            val df = rows
+            staged(stage)(SnapshotTable.append(spark, path, df, txn))
+          }
+        commit(destPath, "append")(accepted)
+        if (statsPath.nonEmpty) commit(statsPath, "report")(report
+          .withColumn("run_id", lit(SnapshotTable.streamWriter(spark)))
+          .withColumn("batch_id", lit(batchId)).coalesce(1))
         sc.getPersistentRDDs.filterNot { case (id, _) => before.contains(id) }
           .foreach { case (_, rdd) => rdd.unpersist(false) }
         FaultInjection.maybeHalt(batchId)

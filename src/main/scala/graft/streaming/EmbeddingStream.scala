@@ -84,12 +84,7 @@ object EmbeddingStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        def staged[T](stage: String)(body: => T): T = {
-          val t0 = System.nanoTime()
-          val r = body
-          timingSink(batchId, stage, (System.nanoTime() - t0) / 1e6)
-          r
-        }
+        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
         staged("append") {
           Similarity.appendToIvfPartitioned(indexPath, batch, monotoneIds)
         }
@@ -121,10 +116,11 @@ object EmbeddingStream {
     * Appends are visible at the NEXT micro-batch after their publish. A
     * query's result depends on nothing but itself and the index
     * snapshot, so batching never changes any row (spec: drained
-    * stream ≡ batch query set when the index is quiescent). Results
-    * land in per-`batch_id=` directories written with overwrite: a
-    * replayed batch (mid-commit crash, lost offset) rewrites its
-    * directory instead of appending duplicates.
+    * stream ≡ batch query set when the index is quiescent). Each
+    * batch's results are one [[graft.sources.SnapshotTable.commitBatch]]
+    * append to the table at `destPath`, so a batch replayed after a
+    * crash between the commit and the checkpoint's commit log publishes
+    * nothing and runs no probe.
     *
     * Returns the number of index (re)loads performed — the version-poll
     * spec's observable (1 for a fully quiescent drain).
@@ -149,14 +145,8 @@ object EmbeddingStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-stage attribution (r14 verdict item 3: the serving-latency
-        // slope needs an owner) — same sink contract as CorpusStream
-        def staged[T](stage: String)(body: => T): T = {
-          val t0 = System.nanoTime()
-          val r = body
-          timingSink(batchId, stage, (System.nanoTime() - t0) / 1e6)
-          r
-        }
+        // per-stage attribution, so a serving-latency slope has an owner
+        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
         val version = staged("stamp_poll")(SnapshotTable.latestVersion(spark, indexPath))
         if (served == null || version != servedVersion) {
           staged("index_load") {
@@ -184,17 +174,20 @@ object EmbeddingStream {
         // serving sizes it is noise next to the probed scan (measured:
         // sf1 batch p50 878 ms with it vs 891 before it existed).
         staged("probe_score_write") {
-          val nQ = batch.count()
-          // `scored`, not `served`: the outer `var served` two scopes up
-          // is the cached IvfIndex — shadowing it here invited a future
-          // edit to silently grab the DataFrame instead (r15 advisor)
-          // servedPairBound parameterized so the fallback-equivalence
-          // spec can force each side of the boundary on one batch size
-          val scored =
-            if (nQ * nProbe <= servedPairBound) Similarity.queryIvfServed(index, queries, k, nProbe)
-            else Similarity.queryIvf(index, queries, k, nProbe)
-          scored.write.mode("overwrite").parquet(s"$destPath/batch_id=$batchId")
+          SnapshotTable.commitBatch(spark, destPath, batchId) { txn =>
+            val nQ = batch.count()
+            // `scored`, not `served`: the outer `var served` two scopes
+            // up is the cached IvfIndex — shadowing it here invites an
+            // edit that silently grabs the DataFrame instead.
+            // servedPairBound is a parameter so the fallback-equivalence
+            // spec can force each side of the boundary on one batch size
+            val scored =
+              if (nQ * nProbe <= servedPairBound) Similarity.queryIvfServed(index, queries, k, nProbe)
+              else Similarity.queryIvf(index, queries, k, nProbe)
+            SnapshotTable.append(spark, destPath, scored, txn)
+          }
         }
+        FaultInjection.maybeHalt(batchId)
       }
       .start()
       .awaitTermination()

@@ -538,17 +538,14 @@ object EventStream {
     * pre-aggregation that makes "distinct users this week" a
     * sketch-merge instead of a 100 TB rescan, kept fresh per batch.
     * The store is a [[graft.sources.SnapshotTable]]: each non-empty
-    * micro-batch publishes one version (keep-last on the batch id
-    * `__v`), written beside the files its plan reads, so a crash
-    * mid-commit leaves the previous version whole.
-    *
-    * Exactly-once per writer: the commit records `txn.<queryId>` =
-    * batch id as a version property, where the query id is the stream
-    * id the checkpoint persists. A batch at or below its writer's
-    * recorded id — a replay after a crash between the store commit and
-    * the checkpoint's commit log — is skipped from the log alone, with
-    * no Spark job; without the guard the sum would count it twice. A
-    * fresh or lost checkpoint is a new writer and replays everything.
+    * micro-batch publishes one version by `overwrite` — the batch's
+    * frame already holds every stored (event_type, day) key folded with
+    * the batch — written beside the files its plan reads, so a crash
+    * mid-commit leaves the previous version whole. The commit goes
+    * through [[graft.sources.SnapshotTable.commitBatch]]: a batch
+    * replayed after a crash between the store commit and the
+    * checkpoint's commit log is skipped from the log alone, where an
+    * unguarded replay would count its events twice.
     */
   def hllIngestOnce(spark: SparkSession, srcDir: String, storePath: String,
                     checkpointDir: String, lgK: Int = 12,
@@ -564,25 +561,26 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val txn = "txn." + spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-        val committed = SnapshotTable.properties(spark, storePath).get(txn).exists(_.toLong >= batchId)
-        if (!committed && !batch.isEmpty) {
-          val daily = batch
-            .filter(col("user_id").isNotNull && col("ts").isNotNull)
-            .groupBy(col("event_type"),
-              to_date(col("ts").cast("timestamp")).as("day"))
-            .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
-              count(lit(1)).as("n_events"))
-          val merged = (if (SnapshotTable.versions(spark, storePath).isEmpty) daily
-            else SnapshotTable.read(spark, storePath).drop("__v").unionByName(daily))
-            .groupBy(col("event_type"), col("day"))
-            .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
-              sum(col("n_events")).as("n_events"))
-            .withColumn("__v", lit(batchId))
-          SnapshotTable.upsertOrCreate(spark, storePath, merged,
-            keyCols = Seq("event_type", "day"), orderCol = "__v",
-            properties = Map(txn -> batchId.toString)): Unit
+        SnapshotTable.commitBatch(spark, storePath, batchId) { txn =>
+          if (!batch.isEmpty) {
+            val daily = batch
+              .filter(col("user_id").isNotNull && col("ts").isNotNull)
+              .groupBy(col("event_type"),
+                to_date(col("ts").cast("timestamp")).as("day"))
+              .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
+                count(lit(1)).as("n_events"))
+            // the four store columns: a store written with a lineage
+            // column still folds in
+            val merged = (if (SnapshotTable.versions(spark, storePath).isEmpty) daily
+              else SnapshotTable.read(spark, storePath)
+                .select("event_type", "day", "sketch", "n_events").unionByName(daily))
+              .groupBy(col("event_type"), col("day"))
+              .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
+                sum(col("n_events")).as("n_events"))
+            SnapshotTable.overwrite(spark, storePath, merged, properties = txn): Unit
+          }
         }
+        FaultInjection.maybeHalt(batchId)
       }
       .start()
       .awaitTermination()

@@ -7,9 +7,13 @@ package graft.streaming
   * finishes its writes — INSIDE the window where the sink's output is
   * durable but the streaming commit log has not yet recorded the
   * batch. On restart the engine replays exactly that batch; absorbing
-  * the redelivery is the sink guard's job, and graft.StreamCrashCheck
-  * gates it. Unset (the default), the cost is one long compare per
-  * micro-batch.
+  * the redelivery is the sink guard's job
+  * ([[graft.sources.SnapshotTable.commitBatch]]). The sinks that call
+  * it: [[CorpusStream.ingestOnce]], [[CorpusStream.spanRewriteOnce]],
+  * [[CorpusStream.dsirScoreOnce]], [[EmbeddingStream.queryOnce]] and
+  * [[EventStream.hllIngestOnce]]; graft.StreamCrashCheck drives the
+  * corpus-ingest and HLL sinks through it. Unset (the default), the
+  * cost is one long compare per micro-batch.
   */
 object FaultInjection {
   val HaltExit = 7

@@ -205,6 +205,49 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.versions(spark, t).isEmpty)
   }
 
+  test("append and overwrite publish version 1 on a fresh path and refuse a foreign directory") {
+    val a = tmpTable("graft_snap_app1")
+    assert(SnapshotTable.append(spark, a, seed) === 1L)
+    assert(SnapshotTable.manifest(spark, a).select("partition_cols").as[String].collect().toSet === Set(""))
+    assert(rowsOf(a) === seed.as[(Long, String, Long)].collect().toSet)
+    val o = tmpTable("graft_snap_ow1")
+    assert(SnapshotTable.overwrite(spark, o, seed, Seq("part_col")) === 1L)
+    assert(rowsOf(o) === rowsOf(a))
+    val raw = tmpTable("graft_snap_app_raw")
+    seed.write.parquet(raw)
+    intercept[IllegalArgumentException](SnapshotTable.append(spark, raw, seed))
+    intercept[IllegalArgumentException](SnapshotTable.overwrite(spark, raw, seed))
+    assert(SnapshotTable.versions(spark, raw).isEmpty)
+  }
+
+  test("commitBatch commits once per (writer, batch), skips from the log with no job, refuses outside a stream") {
+    val t = tmpTable("graft_snap_txn")
+    val sc = spark.sparkContext
+    def commit(batchId: Long, df: org.apache.spark.sql.DataFrame): Boolean =
+      SnapshotTable.commitBatch(spark, t, batchId)(SnapshotTable.append(spark, t, df, _))
+    intercept[IllegalStateException](commit(0L, seed))
+    assert(SnapshotTable.versions(spark, t).isEmpty)
+    def asWriter[T](writer: String)(body: => T): T = {
+      sc.setLocalProperty("sql.streaming.queryId", writer)
+      try body finally sc.setLocalProperty("sql.streaming.queryId", null)
+    }
+    asWriter("w1") {
+      assert(commit(0L, seed.filter($"k" <= 2L)))
+      assert(SnapshotTable.properties(spark, t) === Map("txn.w1" -> "0"))
+      // a replay of batch 0, or of any earlier batch, is skipped from the log
+      val (again, n) = JobCount.of(sc)(SnapshotTable.commitBatch(spark, t, 0L)(
+        _ => fail("a committed batch must not run its commit")))
+      assert(!again && n === 0, s"the skip started $n jobs")
+      assert(commit(1L, seed.filter($"k" === 3L)))
+    }
+    // another stream writes its own record beside w1's
+    asWriter("w2")(assert(commit(0L, seed.filter($"k" >= 4L))))
+    assert(SnapshotTable.properties(spark, t) === Map("txn.w1" -> "1", "txn.w2" -> "0"))
+    assert(asWriter("w1")(!commit(1L, seed)))
+    assert(SnapshotTable.versions(spark, t) === Seq(1L, 2L, 3L))
+    assert(rowsOf(t) === seed.as[(Long, String, Long)].collect().toSet)
+  }
+
   test("upsert ties on orderCol resolve deterministically with the update winning") {
     val t = tmpTable("graft_snap_tie")
     SnapshotTable.create(spark, t, Seq((1L, "stored", 5L)).toDF("k", "v", "ord"))

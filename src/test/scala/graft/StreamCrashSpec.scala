@@ -1,16 +1,17 @@
 package graft
 
-/** CI lock for driver-crash stream recovery (r11): forks
-  * `graft.StreamCrashCheck` — which itself runs the corpus-ingest
-  * stream in a child JVM, `halt()`s it inside a micro-batch's
-  * post-write / pre-commit window, resumes the checkpoint in a fresh
-  * JVM, and diffs against an undisturbed control. A subprocess (the
-  * LocalClusterSpec pattern) because the suite JVM holds a shared
-  * SparkContext and because separate driver processes are the point.
-  * sf0.01, not sf0.001: the staged docs are corpus near-dups by
-  * construction and the ingest funnel drops most of them — the larger
-  * corpus guarantees a non-vacuous accepted set (~96 rows) spread
-  * across batches, so the replayed batch really has rows to double.
+/** CI lock for driver-crash stream recovery: forks
+  * `graft.StreamCrashCheck` — which itself runs each of its sinks (the
+  * corpus-ingest stream and the HLL store) in a child JVM, `halt()`s it
+  * inside a micro-batch's post-commit / pre-commit-log window, resumes
+  * the checkpoint in a fresh JVM, and diffs against an undisturbed
+  * control. A subprocess (the LocalClusterSpec pattern) because the
+  * suite JVM holds a shared SparkContext and because separate driver
+  * processes are the point. sf0.01, not sf0.001: the staged docs are
+  * corpus near-dups by construction and the ingest funnel drops most of
+  * them — the larger corpus guarantees a non-vacuous accepted set (~96
+  * rows) spread across batches, so the replayed batch really has rows
+  * to double.
   */
 class StreamCrashSpec extends SparkSpec {
 
@@ -30,7 +31,10 @@ class StreamCrashSpec extends SparkSpec {
     assert(r.exit === 0,
       s"crash recovery failed or produced duplicates:\n${r.log.takeRight(4000)}")
     val json = new String(java.nio.file.Files.readAllBytes(out.toPath))
-    assert(json.contains("\"crashed_mid_stream\":true"), s"halt never landed mid-stream: $json")
-    assert(json.contains("\"match\":true"), s"artifact shows mismatch: $json")
+    for (sink <- Seq("corpus", "hll")) {
+      val obj = json.drop(json.indexOf(s"\"$sink\":{")).takeWhile(_ != '}')
+      assert(obj.contains("\"crashed_mid_stream\":true"), s"$sink: halt never landed mid-stream: $json")
+      assert(obj.contains("\"match\":true"), s"$sink: artifact shows mismatch: $json")
+    }
   }
 }

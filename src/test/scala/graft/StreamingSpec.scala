@@ -16,6 +16,20 @@ class StreamingSpec extends SparkSpec {
     dir
   }
 
+  /** A crash between a sink's commit and the stream's own commit-log
+    * entry: delete the checkpoint's last `commits/<n>` (and its `.crc`),
+    * `rerun` the stream on the same checkpoint, and check batch n ran
+    * again — under the same query id, so the sink sees a replay.
+    */
+  private def replayLastBatch(ckpt: String)(rerun: => Unit): Unit = {
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    val last = commits.toFile.list().filter(_.matches("\\d+")).map(_.toLong).max
+    java.nio.file.Files.delete(commits.resolve(last.toString))
+    java.nio.file.Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    rerun
+    assert(java.nio.file.Files.exists(commits.resolve(last.toString)), s"batch $last must have re-run")
+  }
+
   test("streaming ingest equals the batch pipeline's windowed aggregate") {
     val got = EventStream.runOnce(spark, stagedDir, "stream_out")
 
@@ -476,7 +490,7 @@ class StreamingSpec extends SparkSpec {
     batch.coalesce(1).write.mode("overwrite").parquet(src)
 
     CorpusStream.ingestOnce(spark, src, index, dest, ckpt)
-    val got = spark.read.parquet(dest).select("doc_id").as[Long].collect().sorted
+    val got = SnapshotTable.read(spark, dest).select("doc_id").as[Long].collect().sorted
     assert(got.toSeq === Seq(100004L), s"accepted $got")
     // the stream applies acceptBatch per micro-batch — same function,
     // same result
@@ -485,7 +499,7 @@ class StreamingSpec extends SparkSpec {
     assert(direct.toSeq === got.toSeq)
     // same checkpoint → file offsets committed → replay adds nothing
     CorpusStream.ingestOnce(spark, src, index, dest, ckpt)
-    assert(spark.read.parquet(dest).count() === 1)
+    assert(SnapshotTable.read(spark, dest).count() === 1)
 
     // with a stats path, each micro-batch appends its one-row funnel
     // report; the planted batch attributes 5 = 1 junk + 2 corpus dups +
@@ -494,7 +508,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_corpus_ck2").toString
     val stats = java.nio.file.Files.createTempDirectory("graft_corpus_st").toString + "/stats"
     CorpusStream.ingestOnce(spark, src, index, dest2, ckpt2, statsPath = stats)
-    val rep = spark.read.parquet(stats).collect()
+    val rep = SnapshotTable.read(spark, stats).collect()
     assert(rep.length === 1, rep.mkString(";"))
     val r = rep.head
     assert(r.getAs[Long]("n_in") === 5L &&
@@ -503,19 +517,49 @@ class StreamingSpec extends SparkSpec {
       r.getAs[Long]("n_batch_dup") === 1L &&
       r.getAs[Long]("n_accepted") === 1L, r.toString)
     CorpusStream.ingestOnce(spark, src, index, dest2, ckpt2, statsPath = stats)
-    assert(spark.read.parquet(stats).count() === 1)
+    assert(SnapshotTable.read(spark, stats).count() === 1)
 
     // deleting and REUSING the same checkpoint path for a new drain is a
     // new run (fresh engine query id in <ckpt>/metadata), so its batch-0
     // funnel row must land in the shared statsPath despite reproducing
-    // (path, batch_id=0) — the advisor-flagged collision of a
-    // path-derived run_id
+    // (path, batch_id=0): the writer, and so the run_id, is the query id,
+    // never the path
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt2))
     val dest3 = java.nio.file.Files.createTempDirectory("graft_corpus_d3").toString + "/out"
     CorpusStream.ingestOnce(spark, src, index, dest3, ckpt2, statsPath = stats)
-    val rep2 = spark.read.parquet(stats).select("run_id").as[String].collect()
+    val rep2 = SnapshotTable.read(spark, stats).select("run_id").as[String].collect()
     assert(rep2.length === 2, s"new run's report row must survive: ${rep2.toSeq}")
     assert(rep2.distinct.length === 2, "checkpoint reuse must mint a fresh run_id")
+  }
+
+  test("corpus ingest: a batch replayed after a lost commit-log entry lands once, one report row per batch") {
+    import spark.implicits._
+    import graft.streaming.CorpusStream
+    val index = graft.ops.TextDedup.buildDedupIndex(Tables.documents(spark, sfDir))
+    def doc(id: Long, word: String) = (id, (1 to 30).map(i => s"$word$i")
+      .mkString("the data and ", " ", " of it"))
+    val src = java.nio.file.Files.createTempDirectory("graft_cr_src").toString
+    val dest = java.nio.file.Files.createTempDirectory("graft_cr_dest").toString + "/out"
+    val stats = java.nio.file.Files.createTempDirectory("graft_cr_st").toString + "/stats"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cr_ck").toString
+    // two staged files → two micro-batches, one clean novel doc each
+    Seq(doc(200001L, "fresh"), doc(200002L, "novel")).zipWithIndex.foreach { case (d, i) =>
+      Seq(d).toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("crawl"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .coalesce(1).write.mode(if (i == 0) "overwrite" else "append").parquet(src)
+      Thread.sleep(1100)
+    }
+    def drain(): Unit = CorpusStream.ingestOnce(spark, src, index, dest, ckpt,
+      statsPath = stats, maxFilesPerTrigger = 1)
+    drain()
+    val landed = SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq
+    assert(landed.map(_.getAs[Long]("doc_id")) === Seq(200001L, 200002L))
+    replayLastBatch(ckpt)(drain())
+    assert(SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq === landed,
+      "the replayed batch must not append its docs again")
+    assert(SnapshotTable.read(spark, stats).select("batch_id").as[Long].collect().sorted.toSeq ===
+      Seq(0L, 1L), "one report row per batch")
   }
 
   test("span rewrite stream: durable cross-batch first-occurrence = the batch rewrite") {
@@ -538,7 +582,7 @@ class StreamingSpec extends SparkSpec {
       b2.coalesce(1).write.mode("append").parquet(src)
       CorpusStream.spanRewriteOnce(spark, src, "span_stream_spec", idxPath,
         dest, ckpt, maxFilesPerTrigger = 1)
-      val drained = spark.read.parquet(dest)
+      val drained = SnapshotTable.read(spark, dest)
       assert(drained.count() === 200)
       // batches arrive in doc_id order, so the drained union must equal
       // the one-shot BATCH rewrite of everything, restricted to the
@@ -555,9 +599,45 @@ class StreamingSpec extends SparkSpec {
       val nDigests = spark.table("span_stream_spec_spans").count()
       CorpusStream.spanRewriteOnce(spark, src, "span_stream_spec", idxPath,
         dest, ckpt, maxFilesPerTrigger = 1)
-      assert(spark.read.parquet(dest).count() === 200)
+      assert(SnapshotTable.read(spark, dest).count() === 200)
       assert(spark.table("span_stream_spec_spans").count() === nDigests)
     } finally spark.sql("DROP TABLE IF EXISTS span_stream_spec_spans")
+  }
+
+  test("span rewrite stream: a batch replayed after a lost commit-log entry is not rewritten again") {
+    import graft.ops.TextDedup
+    import graft.streaming.CorpusStream
+    val all = Tables.documents(spark, sfDir)
+    val idxPath = java.nio.file.Files.createTempDirectory("graft_spanr_sidx").toString
+    val src = java.nio.file.Files.createTempDirectory("graft_spanr_src").toString
+    val dest = java.nio.file.Files.createTempDirectory("graft_spanr_dst").toString + "/out"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_spanr_ck").toString
+    try {
+      TextDedup.writeSpanIndex(TextDedup.buildSpanIndex(all.filter(col("doc_id") < 300)),
+        "span_replay_spec", idxPath)
+      all.filter(col("doc_id") >= 300 && col("doc_id") < 400)
+        .coalesce(1).write.mode("overwrite").parquet(src)
+      Thread.sleep(1100)
+      all.filter(col("doc_id") >= 400).coalesce(1).write.mode("append").parquet(src)
+      def drain(): Unit = CorpusStream.spanRewriteOnce(spark, src, "span_replay_spec",
+        idxPath, dest, ckpt, maxFilesPerTrigger = 1)
+      drain()
+      val drained = SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq
+      assert(drained.length === 200)
+      // the stream's digest appends ran through micro-batch sessions:
+      // refresh this session's cached listing before counting
+      def digests(): Long = {
+        spark.catalog.refreshTable("span_replay_spec_spans")
+        spark.table("span_replay_spec_spans").count()
+      }
+      val nDigests = digests()
+      // batch 1 re-runs against an index that already holds its spans:
+      // rewritten again, it would lose its own first occurrences
+      replayLastBatch(ckpt)(drain())
+      assert(SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq === drained,
+        "the replayed batch must leave the destination unchanged")
+      assert(digests() === nDigests)
+    } finally spark.sql("DROP TABLE IF EXISTS span_replay_spec_spans")
   }
 
   test("hll ingest stream: register-merged store = one-shot batch sketches, replay no-op") {
@@ -607,11 +687,7 @@ class StreamingSpec extends SparkSpec {
     val control = counts()
     // a crash after batch 1's store commit but before the stream's own
     // commit log entry: the restart re-runs batch 1 under the same query id
-    val commits = java.nio.file.Paths.get(ckpt, "commits")
-    java.nio.file.Files.delete(commits.resolve("1"))
-    java.nio.file.Files.deleteIfExists(commits.resolve(".1.crc"))
-    EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1)
-    assert(java.nio.file.Files.exists(commits.resolve("1")), "batch 1 must have re-run")
+    replayLastBatch(ckpt)(EventStream.hllIngestOnce(spark, src, store, ckpt, maxFilesPerTrigger = 1))
     assert(counts() === control, "the replayed batch must not be counted twice")
     assert(SnapshotTable.versions(spark, store) === Seq(1L, 2L),
       "the replay must publish no version")
@@ -667,7 +743,7 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerTrigger = 1)
     assert(loads === 1,
       "quiescent index: unchanged-stamp micro-batches must skip the reload")
-    val streamed = spark.read.parquet(dest).drop("batch_id")
+    val streamed = SnapshotTable.read(spark, dest)
       .orderBy("query_id", "rnk").collect().toSeq
     val index = Similarity.loadIvfVersioned(spark, idxPath)
     val batchQ = Similarity.prepared(queries)
@@ -678,7 +754,27 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batch)
     // exactly-once: rerun with the same checkpoint appends nothing
     EmbeddingStream.queryOnce(spark, src, idxPath, dest, ckpt)
-    assert(spark.read.parquet(dest).count() === batch.size)
+    assert(SnapshotTable.read(spark, dest).count() === batch.size)
+  }
+
+  test("streamed ANN queries: a batch replayed after a lost commit-log entry lands once") {
+    import graft.ops.Similarity
+    import graft.streaming.EmbeddingStream
+    val emb = Tables.embeddings(spark, sfDir)
+    val idxPath = java.nio.file.Files.createTempDirectory("graft_qr_idx").toString
+    Similarity.writeIvfVersioned(Similarity.buildIvf(emb), idxPath)
+    val src = java.nio.file.Files.createTempDirectory("graft_qr_src").toString
+    val dest = java.nio.file.Files.createTempDirectory("graft_qr_dest").toString + "/out"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_qr_ckpt").toString
+    emb.filter(col("vec_id") < 10).repartition(3).write.mode("overwrite").parquet(src)
+    def drain(): Unit = EmbeddingStream.queryOnce(spark, src, idxPath, dest, ckpt,
+      maxFilesPerTrigger = 1): Unit
+    drain()
+    val served = SnapshotTable.read(spark, dest).orderBy("query_id", "rnk").collect().toSeq
+    assert(served.nonEmpty)
+    replayLastBatch(ckpt)(drain())
+    assert(SnapshotTable.read(spark, dest).orderBy("query_id", "rnk").collect().toSeq === served,
+      "the replayed batch must not append its results again")
   }
 
   test("stream_ann_query index poll: reload only on version bump, appends visible after it") {
@@ -710,7 +806,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_poll_c2").toString
     assert(EmbeddingStream.queryOnce(spark, src, idxPath, dest2, ckpt2,
       maxFilesPerTrigger = 1) === 1)
-    val streamed2 = spark.read.parquet(dest2).drop("batch_id")
+    val streamed2 = SnapshotTable.read(spark, dest2)
       .orderBy("query_id", "rnk").collect().toSeq
     val full = Similarity.loadIvfVersioned(spark, idxPath)
     val batch2 = Similarity.queryIvf(full, Similarity.prepared(queries)
@@ -736,7 +832,7 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(3).write.mode("overwrite").parquet(src)
     CorpusStream.dsirScoreOnce(spark, src, modelPath, dest, ckpt,
       maxFilesPerTrigger = 1)
-    val streamed = spark.read.parquet(dest).drop("batch_id")
+    val streamed = SnapshotTable.read(spark, dest)
       .orderBy("doc_id").collect().toSeq
     val batch = graft.ops.Corpus.dsirScore(docs,
       graft.ops.Corpus.loadDsirModel(spark, modelPath))
@@ -744,7 +840,26 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batch)
     // rerunning with the same checkpoint is a no-op (exactly-once)
     CorpusStream.dsirScoreOnce(spark, src, modelPath, dest, ckpt)
-    assert(spark.read.parquet(dest).count() === batch.size)
+    assert(SnapshotTable.read(spark, dest).count() === batch.size)
+  }
+
+  test("streamed DSIR scoring: a batch replayed after a lost commit-log entry lands once") {
+    import graft.streaming.CorpusStream
+    val docs = Tables.documents(spark, sfDir)
+    val modelPath = java.nio.file.Files.createTempDirectory("graft_dsirr_m").toString + "/m"
+    graft.ops.Corpus.writeDsirModel(graft.ops.Corpus.dsirModel(docs), modelPath)
+    val src = java.nio.file.Files.createTempDirectory("graft_dsirr_src").toString
+    val dest = java.nio.file.Files.createTempDirectory("graft_dsirr_dest").toString + "/out"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_dsirr_ckpt").toString
+    docs.repartition(3).write.mode("overwrite").parquet(src)
+    def drain(): Unit = CorpusStream.dsirScoreOnce(spark, src, modelPath, dest, ckpt,
+      maxFilesPerTrigger = 1)
+    drain()
+    val scored = SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq
+    assert(scored.length === docs.count())
+    replayLastBatch(ckpt)(drain())
+    assert(SnapshotTable.read(spark, dest).orderBy("doc_id").collect().toSeq === scored,
+      "the replayed batch must not append its scores again")
   }
 
   test("monotone hwm guard: lost-checkpoint redelivery is a no-op with ZERO stored-id scan") {
@@ -967,7 +1082,7 @@ class StreamingSpec extends SparkSpec {
       val ckpt = java.nio.file.Files.createTempDirectory(s"graft_fb_ck_$tag").toString
       EmbeddingStream.queryOnce(spark, src, idxPath, dest, ckpt,
         maxFilesPerTrigger = 1, servedPairBound = bound)
-      spark.read.parquet(dest).drop("batch_id")
+      SnapshotTable.read(spark, dest)
         .orderBy("query_id", "rnk").collect().toSeq.map(_.toSeq)
     }
     val served = drained("served", Long.MaxValue) // every batch under the bound

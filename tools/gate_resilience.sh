@@ -10,9 +10,12 @@
 #      shapes under two 640 MB executors; everything must complete via
 #      disk spill (gate fails if nothing spilled — vacuous pressure).
 #   3. DRIVER CRASH MID-STREAM (graft.StreamCrashCheck): halt() the
-#      driver JVM inside a micro-batch's post-write window, resume the
-#      checkpoint in a fresh process; output must be bit-identical and
-#      duplicate-free (the at-least-once foreachBatch redelivery).
+#      driver JVM inside a micro-batch's post-commit window, resume the
+#      checkpoint in a fresh process; output must equal an undisturbed
+#      control (the at-least-once foreachBatch redelivery). Two sinks:
+#      the corpus-ingest stream (CorpusStream.ingestOnce: bit-identical,
+#      unique doc_ids) and the HLL store (EventStream.hllIngestOnce:
+#      served estimates and event counts).
 #
 # All write one-line JSON artifacts and exit non-zero on any mismatch.
 set -euo pipefail
