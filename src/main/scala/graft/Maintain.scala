@@ -21,8 +21,9 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   *      other directory under a home is left alone and ages out with
   *      the home;
   *   2. '''serving layouts''' ([[ServingLayouts.vacuum]]): dedup/ANN
-  *      layout homes no process has served from within the retention
-  *      window, plus crashed builders' `.stage-*`/`.debris-*` dirs;
+  *      homes no process has served from within the retention window
+  *      (home mtime), unpublished `layout-*` builds idle as long inside
+  *      live homes, and the `.trash-*` a stopped vacuum left;
   *   3. '''snapshot tables''' ([[SnapshotTable.vacuum]], per `--snapshot`
   *      path): manifests beyond the newest `keepVersions` and every
   *      unreferenced data file;
@@ -49,8 +50,8 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   *
   * Prints ONE JSON line of reclaimed counts. Liveness contract: every
   * swept store is revalidated by its serving path on each serve
-  * (markers are touched per serve; caches rebuild on a vanished
-  * layout), so a sweep racing a live server costs a rebuild, never a
+  * (homes are touched per serve; caches rebuild on a vanished
+  * home), so a sweep racing a live server costs a rebuild, never a
   * wrong answer — the same trade each vacuum documents individually.
   */
 object Maintain {

@@ -1219,24 +1219,6 @@ object AnnServing {
   private val exactCache = new SessionCache[DataFrame](df =>
     df.unpersist(blocking = false)) // drop pinned blocks when an entry is superseded
 
-  /** Serve-with-liveness: get-or-build the cached (dir, value), then
-    * revalidate the layout marker ON EVERY SERVE — if a vacuum raced a
-    * long-lived server and reclaimed the files, the entry is evicted
-    * and rebuilt instead of failing every later call — and touch the
-    * marker so a live layout can never age out under the server.
-    */
-  private def servedValidated[V](cache: SessionCache[(String, V)],
-                                 spark: SparkSession, sfDir: String)
-                                (make: () => (String, V)): V = {
-    val (dir, v) = cache.getOrBuild(spark, sfDir)(make())
-    if (ServingLayouts.isComplete(dir)) { ServingLayouts.touch(dir); v }
-    else {
-      cache.invalidate(sfDir)
-      val (d2, v2) = cache.getOrBuild(spark, sfDir)(make())
-      ServingLayouts.touch(d2); v2
-    }
-  }
-
   /** The store of a serving home: ALL THREE families serve from one
     * [[SnapshotTable]] store under `<home>/table`, so the offline
     * rebuild and compaction compose with live serving (publish v+1,
@@ -1291,14 +1273,13 @@ object AnnServing {
     if (nProbe > 0) nProbe else graft.ops.LshGeometry.ivfProbe(servedCells)
 
   private def servedIvf(spark: SparkSession, sfDir: String, nCells: Int): IvfIndex =
-    servedValidated(ivfCache, spark, sfDir) { () =>
+    ServingLayouts.served(ivfCache, spark, sfDir) {
       val home = ServingLayouts.dirFor("ivf", sfDir)
       val store = storeIn(home)
       ensureVersioned(spark, store)(Similarity.writeIvfVersioned(
         Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
           cellsForBuild(spark, sfDir, nCells)), store,
         geometryIntent = Some(nCells > 0)))
-      ServingLayouts.markComplete(home)
       (home, Similarity.loadIvfVersioned(spark, store))
     }
 
@@ -1359,7 +1340,7 @@ object AnnServing {
     */
   def knnIvfSq8(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
                 nCells: Int = -1, nProbe: Int = -1): DataFrame = {
-    val index = servedValidated(sq8Cache, spark, sfDir) { () =>
+    val index = ServingLayouts.served(sq8Cache, spark, sfDir) {
       val home = ServingLayouts.dirFor("sq8", sfDir)
       val store = storeIn(home)
       ensureVersioned(spark, store) {
@@ -1368,7 +1349,6 @@ object AnnServing {
         Similarity.writeIvfVersioned(
           Similarity.buildIvf(deq, cellsForBuild(spark, sfDir, nCells)), store)
       }
-      ServingLayouts.markComplete(home)
       (home, Similarity.loadIvfVersioned(spark, store))
     }
     val queries = queriesOf(Similarity.prepared(graft.Tables.embeddings(spark, sfDir)), nQueries)
@@ -1386,7 +1366,7 @@ object AnnServing {
   def knnIvfPq(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
                nCells: Int = -1, nProbe: Int = -1, mSubs: Int = -1,
                kCentroids: Int = -1, rerank: Int = -1): DataFrame = {
-    val layout = servedValidated(pqCache, spark, sfDir) { () =>
+    val layout = ServingLayouts.served(pqCache, spark, sfDir) {
       val home = ServingLayouts.dirFor("ivfpq", sfDir)
       val store = storeIn(home)
       ensureVersioned(spark, store) {
@@ -1404,7 +1384,6 @@ object AnnServing {
         Similarity.writeIvfPqVersioned(index.centroids, pq.codebooks,
           Similarity.pqCodesOf(index, pq), store)
       }
-      ServingLayouts.markComplete(home)
       (home, {
         val (c, p, cd) = Similarity.loadIvfPqVersioned(spark, store)
         PqLayout(c, p, cd)

@@ -677,16 +677,16 @@ object TextDedup {
   * crawl actually pays. At sf1 the inline composition spent ~2× its
   * time recomputing corpus shingles+minhash per call (SCALE.md §3).
   *
-  * Lifecycle (round-9 hardening): the layout lives at a PROCESS-STABLE
-  * per-(user, corpus) directory ([[graft.sources.ServingLayouts]]), so
-  * a second JVM re-registers the bucket specs in its own catalog and
-  * reuses the files instead of rebuilding — and /tmp holds at most one
-  * layout per corpus ever, reclaimable by ServingLayouts.vacuum. The
-  * in-memory cache is keyed by (session, corpus): a cached
-  * [[TextDedup.DedupIndex]] holds DataFrames and catalog-table
-  * references bound to the session that built it, so a NEW session in
-  * the same JVM (the advisor's stopped-session hazard) re-registers
-  * and reloads rather than serving dead frames.
+  * Lifecycle: the layout is published once per corpus version as
+  * `<home>/layout` of a process-stable home
+  * ([[graft.sources.ServingLayouts.publishedLayout]]), so a second JVM
+  * re-registers the bucket specs in its own catalog and reuses the
+  * files instead of rebuilding, and idle homes are reclaimed by
+  * ServingLayouts.vacuum. The in-memory cache is keyed by (session,
+  * corpus): a cached [[TextDedup.DedupIndex]] holds DataFrames and
+  * catalog-table references bound to the session that built it, so a
+  * NEW session in the same JVM re-registers and reloads rather than
+  * serving dead frames.
   */
 object DedupServing {
   import graft.sources.{ServingLayouts, SessionCache}
@@ -718,43 +718,28 @@ object DedupServing {
     TextDedup.loadDedupIndex(spark, prefix, dir)
   }
 
-  /** Stage-build the layout (never in place on the shared path — the
-    * r9 advisor's concurrent-overwrite find), atomically publish via
-    * [[ServingLayouts.acquire]], and register it in THIS catalog. If a
-    * stored layout exists but fails to reload here, build into a
-    * PRIVATE stage and serve that, leaving the shared dir untouched
-    * for whoever can still read it.
+  /** The home's published layout, registered in THIS catalog. If it
+    * fails to reload here, a fresh unpublished build serves instead,
+    * leaving the shared layout untouched for whoever can still read it.
     */
   private def make(spark: SparkSession, sfDir: String): (String, TextDedup.DedupIndex) = {
-    def buildInto(stage: String): Unit = {
+    def build(dir: String): Unit = {
       TextDedup.writeDedupIndex(
-        TextDedup.buildDedupIndexAuto(corpusOf(spark, sfDir)), prefixOf(sfDir), stage)
+        TextDedup.buildDedupIndexAuto(corpusOf(spark, sfDir)), prefixOf(sfDir), dir)
       ()
     }
-    val dir = ServingLayouts.acquire("dedup", sfDir)(buildInto)
-    try (dir, reload(spark, sfDir, dir))
+    val home = ServingLayouts.dirFor("dedup", sfDir)
+    val layout = ServingLayouts.publishedLayout(home)(build)
+    try (layout, reload(spark, sfDir, layout))
     catch {
       case NonFatal(_) =>
-        val priv = ServingLayouts.privateStage("dedup", sfDir)
-        buildInto(priv)
-        ServingLayouts.markComplete(priv)
-        (priv, reload(spark, sfDir, priv))
+        val own = ServingLayouts.unpublishedLayout(home)(build)
+        (own, reload(spark, sfDir, own))
     }
   }
 
-  def servedIndex(spark: SparkSession, sfDir: String): TextDedup.DedupIndex = {
-    val (dir, idx) = cache.getOrBuild(spark, sfDir)(make(spark, sfDir))
-    // liveness + staleness on EVERY serve: touch keeps vacuum away from
-    // a live layout; a vacuumed-under-us layout evicts and rebuilds
-    // instead of failing every later scan (r9 advisor's liveness find)
-    if (ServingLayouts.isComplete(dir)) { ServingLayouts.touch(dir); idx }
-    else {
-      cache.invalidate(sfDir)
-      val (d2, i2) = cache.getOrBuild(spark, sfDir)(make(spark, sfDir))
-      ServingLayouts.touch(d2)
-      i2
-    }
-  }
+  def servedIndex(spark: SparkSession, sfDir: String): TextDedup.DedupIndex =
+    ServingLayouts.served(cache, spark, sfDir)(make(spark, sfDir))
 
   /** [[TextDedup.dedupIncremental]] of the arriving batch against the
     * served (persisted, bucketed) corpus index. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.{TextAnalysis, TextDedup}
 import graft.sources.SnapshotTable
 
@@ -102,33 +101,21 @@ object CorpusStream {
   def spanRewriteOnce(spark: SparkSession, srcDir: String,
                       tablePrefix: String, indexPath: String,
                       destPath: String, checkpointDir: String,
-                      maxFilesPerTrigger: Int = 0): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader).parquet(srcDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The previous batch's digest append ran through the MICRO-BATCH
-        // session (frames built from `batch` carry its cloned session),
-        // which invalidates only that clone's relation cache — this
-        // session's cached file listing for the index table is stale.
-        // Refresh before reloading or batch N+1 reads the pre-append
-        // listing and misses batch N's spans.
-        spark.catalog.refreshTable(s"${tablePrefix}_spans")
-        val index = TextDedup.loadSpanIndex(spark, tablePrefix, indexPath)
-        SnapshotTable.commitBatch(spark, destPath, batchId)(
-          SnapshotTable.append(spark, destPath, TextDedup.spanDedupIncremental(index, batch), _))
-        TextDedup.appendToSpanIndex(index, tablePrefix, batch)
-        FaultInjection.maybeHalt(batchId)
-      }
-      .start()
-      .awaitTermination()
-  }
+                      maxFilesPerTrigger: Int = 0): Unit =
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      // The previous batch's digest append ran through the MICRO-BATCH
+      // session (frames built from `batch` carry its cloned session),
+      // which invalidates only that clone's relation cache — this
+      // session's cached file listing for the index table is stale.
+      // Refresh before reloading or batch N+1 reads the pre-append
+      // listing and misses batch N's spans.
+      spark.catalog.refreshTable(s"${tablePrefix}_spans")
+      val index = TextDedup.loadSpanIndex(spark, tablePrefix, indexPath)
+      SnapshotTable.commitBatch(spark, destPath, batchId)(
+        SnapshotTable.append(spark, destPath, TextDedup.spanDedupIncremental(index, batch), _))
+      TextDedup.appendToSpanIndex(index, tablePrefix, batch)
+      FaultInjection.maybeHalt(batchId)
+    }
 
   /** Continuous DSIR selection — the streaming twin of
     * [[graft.ops.Corpus.dsirScore]]: documents land as files, each
@@ -153,30 +140,16 @@ object CorpusStream {
     val loaded = graft.ops.Corpus.loadDsirModel(spark, modelPath)
     val model = spark.createDataFrame(
       java.util.Arrays.asList(loaded.collect(): _*), loaded.schema)
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader).parquet(srcDir)
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotTable.commitBatch(spark, destPath, batchId)(
-          SnapshotTable.append(spark, destPath, graft.ops.Corpus.dsirScore(batch, model), _))
-        FaultInjection.maybeHalt(batchId)
-      }
-      .start()
-      .awaitTermination()
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      SnapshotTable.commitBatch(spark, destPath, batchId)(
+        SnapshotTable.append(spark, destPath, graft.ops.Corpus.dsirScore(batch, model), _))
+      FaultInjection.maybeHalt(batchId)
+    }
   }
 
-  /** Drain all staged document files through the ingest pipeline into
-    * the [[graft.sources.SnapshotTable]] at `destPath`.
-    * `Trigger.AvailableNow` processes the backlog and terminates —
-    * rerunning with the same checkpoint is a no-op; a live deployment
-    * swaps the trigger for a processing-time one and keeps the same
-    * DAG. If `statsPath` is set,
+  /** Drain all staged document files ([[drainFiles]]) through the
+    * ingest pipeline into the [[graft.sources.SnapshotTable]] at
+    * `destPath`. If `statsPath` is set,
     * each micro-batch also appends its one-row funnel report
     * ([[acceptBatchWithReport]]) to the table there, tagged with
     * `run_id` (the stream's query id: stable across restarts of one
@@ -204,44 +177,31 @@ object CorpusStream {
                  index: TextDedup.DedupIndex, destPath: String,
                  checkpointDir: String, threshold: Double = 0.5,
                  statsPath: String = "", maxFilesPerTrigger: Int = 0,
-                 timingSink: (Long, String, Double) => Unit = (_, _, _) => ()): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
-    (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader)
-      .parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dedupIncremental localCheckpoints two batch-sized frames per
-        // call (cross-branch reuse); in a CONTINUOUS stream those pins
-        // accumulate across micro-batches, so release every block this
-        // batch created once its write has consumed them — a snapshot
-        // diff so pre-existing pins (the index's own caches) survive
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
-        // the gate runs only when a commit below needs it (a replayed
-        // batch whose commits both landed skips it), timed apart from
-        // the commit that forces it
-        lazy val (accepted, report) = staged("gate")(acceptBatchWithReport(index, batch, threshold))
-        def commit(path: String, stage: String)(rows: => DataFrame): Unit =
-          SnapshotTable.commitBatch(spark, path, batchId) { txn =>
-            val df = rows
-            staged(stage)(SnapshotTable.append(spark, path, df, txn))
-          }
-        commit(destPath, "append")(accepted)
-        if (statsPath.nonEmpty) commit(statsPath, "report")(report
-          .withColumn("run_id", lit(SnapshotTable.streamWriter(spark)))
-          .withColumn("batch_id", lit(batchId)).coalesce(1))
-        sc.getPersistentRDDs.filterNot { case (id, _) => before.contains(id) }
-          .foreach { case (_, rdd) => rdd.unpersist(false) }
-        FaultInjection.maybeHalt(batchId)
-      }
-      .start()
-      .awaitTermination()
-  }
+                 timingSink: (Long, String, Double) => Unit = (_, _, _) => ()): Unit =
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      // dedupIncremental localCheckpoints two batch-sized frames per
+      // call (cross-branch reuse); in a CONTINUOUS stream those pins
+      // accumulate across micro-batches, so release every block this
+      // batch created once its write has consumed them — a snapshot
+      // diff so pre-existing pins (the index's own caches) survive
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
+      // the gate runs only when a commit below needs it (a replayed
+      // batch whose commits both landed skips it), timed apart from
+      // the commit that forces it
+      lazy val (accepted, report) = staged("gate")(acceptBatchWithReport(index, batch, threshold))
+      def commit(path: String, stage: String)(rows: => DataFrame): Unit =
+        SnapshotTable.commitBatch(spark, path, batchId) { txn =>
+          val df = rows
+          staged(stage)(SnapshotTable.append(spark, path, df, txn))
+        }
+      commit(destPath, "append")(accepted)
+      if (statsPath.nonEmpty) commit(statsPath, "report")(report
+        .withColumn("run_id", lit(SnapshotTable.streamWriter(spark)))
+        .withColumn("batch_id", lit(batchId)).coalesce(1))
+      sc.getPersistentRDDs.filterNot { case (id, _) => before.contains(id) }
+        .foreach { case (_, rdd) => rdd.unpersist(false) }
+      FaultInjection.maybeHalt(batchId)
+    }
 }

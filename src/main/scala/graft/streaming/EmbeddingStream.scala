@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import graft.ops.Similarity
 import graft.sources.SnapshotTable
 
@@ -32,11 +31,9 @@ import graft.sources.SnapshotTable
   */
 object EmbeddingStream {
 
-  /** Drain all staged embedding files into the persisted index at
-    * `indexPath` (a [[graft.ops.Similarity.writeIvfVersioned]] store).
-    * `Trigger.AvailableNow` processes the backlog and terminates; a
-    * live deployment swaps in a processing-time trigger on the same
-    * DAG and checkpoint.
+  /** Drain all staged embedding files ([[drainFiles]]) into the
+    * persisted index at `indexPath` (a
+    * [[graft.ops.Similarity.writeIvfVersioned]] store).
     *
     * `monotoneIds = true` is the pipeline contract (the upstream embed
     * stage assigns strictly increasing vec_ids), and what keeps the
@@ -70,35 +67,23 @@ object EmbeddingStream {
                  monotoneIds: Boolean = true,
                  autoCompactFilesPerCell: Int = 0,
                  timingSink: (Long, String, Double) => Unit = (_, _, _) => ()): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
     // the trigger denominator: cells are fixed model metadata (the
     // quantizer never refits in-stream), so count them once per drain
     lazy val nCells = Similarity.loadIvfVersioned(spark, indexPath).nCells
-    (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader)
-      .parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
-        staged("append") {
-          Similarity.appendToIvfPartitioned(indexPath, batch, monotoneIds)
-        }
-        if (autoCompactFilesPerCell > 0 &&
-            SnapshotTable.manifest(spark, indexPath).collect().length >
-              autoCompactFilesPerCell * nCells)
-          staged("auto_compact") {
-            SnapshotTable.compact(spark, indexPath, 1)
-            SnapshotTable.vacuum(spark, indexPath, keepVersions = 2)
-          }
-        ()
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
+      staged("append") {
+        Similarity.appendToIvfPartitioned(indexPath, batch, monotoneIds)
       }
-      .start()
-      .awaitTermination()
+      if (autoCompactFilesPerCell > 0 &&
+          SnapshotTable.manifest(spark, indexPath).collect().length >
+            autoCompactFilesPerCell * nCells)
+        staged("auto_compact") {
+          SnapshotTable.compact(spark, indexPath, 1)
+          SnapshotTable.vacuum(spark, indexPath, keepVersions = 2)
+        }
+      ()
+    }
   }
 
   /** Continuous ANN query serving — the other face of the persisted
@@ -130,67 +115,56 @@ object EmbeddingStream {
                 nProbe: Int = 4, maxFilesPerTrigger: Int = 0,
                 timingSink: (Long, String, Double) => Unit = (_, _, _) => (),
                 servedPairBound: Long = 1000000L): Int = {
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
-    val src = (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader).parquet(srcDir)
     // foreachBatch runs on the driver, sequentially per batch — plain
     // vars are safe and live for this query run only
     var servedVersion = Long.MinValue
     var served: Similarity.IvfIndex = null
     var loads = 0
-    src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-stage attribution, so a serving-latency slope has an owner
-        def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
-        val version = staged("stamp_poll")(SnapshotTable.latestVersion(spark, indexPath))
-        if (served == null || version != servedVersion) {
-          staged("index_load") {
-            served = Similarity.loadIvfVersioned(spark, indexPath, version)
-          }
-          servedVersion = version
-          loads += 1
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      // per-stage attribution, so a serving-latency slope has an owner
+      def staged[T](stage: String)(body: => T): T = timedStage(timingSink, batchId, stage)(body)
+      val version = staged("stamp_poll")(SnapshotTable.latestVersion(spark, indexPath))
+      if (served == null || version != servedVersion) {
+        staged("index_load") {
+          served = Similarity.loadIvfVersioned(spark, indexPath, version)
         }
-        val index = served
-        val queries = Similarity.prepared(batch)
-          .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
-            org.apache.spark.sql.functions.col("v").as("qv"),
-            org.apache.spark.sql.functions.col("norm2").as("qn2"))
-        // queryIvfServed, not queryIvf: a serving micro-batch is small
-        // by contract, and the served form's static cell predicate is
-        // what bounds per-batch index I/O at the probed union — the
-        // equi-join form re-scanned the ENTIRE index every micro-batch
-        // (the r14 16× serving slope, measured via scan metrics in r15).
-        // A BACKFILL driven through this path can deliver huge batches
-        // (maxFilesPerTrigger=0 drains everything at once): above the
-        // bound the probed union covers ~every cell (pruning cannot
-        // help a scan that needs all of them) and the served form pays
-        // its probe kernel twice, so fall back to the single-pass
-        // equi-join form. The count is one cheap batch-source job; at
-        // serving sizes it is noise next to the probed scan (measured:
-        // sf1 batch p50 878 ms with it vs 891 before it existed).
-        staged("probe_score_write") {
-          SnapshotTable.commitBatch(spark, destPath, batchId) { txn =>
-            val nQ = batch.count()
-            // `scored`, not `served`: the outer `var served` two scopes
-            // up is the cached IvfIndex — shadowing it here invites an
-            // edit that silently grabs the DataFrame instead.
-            // servedPairBound is a parameter so the fallback-equivalence
-            // spec can force each side of the boundary on one batch size
-            val scored =
-              if (nQ * nProbe <= servedPairBound) Similarity.queryIvfServed(index, queries, k, nProbe)
-              else Similarity.queryIvf(index, queries, k, nProbe)
-            SnapshotTable.append(spark, destPath, scored, txn)
-          }
-        }
-        FaultInjection.maybeHalt(batchId)
+        servedVersion = version
+        loads += 1
       }
-      .start()
-      .awaitTermination()
+      val index = served
+      val queries = Similarity.prepared(batch)
+        .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
+          org.apache.spark.sql.functions.col("v").as("qv"),
+          org.apache.spark.sql.functions.col("norm2").as("qn2"))
+      // queryIvfServed, not queryIvf: a serving micro-batch is small
+      // by contract, and the served form's static cell predicate is
+      // what bounds per-batch index I/O at the probed union — the
+      // equi-join form re-scanned the ENTIRE index every micro-batch
+      // (the r14 16× serving slope, measured via scan metrics in r15).
+      // A BACKFILL driven through this path can deliver huge batches
+      // (maxFilesPerTrigger=0 drains everything at once): above the
+      // bound the probed union covers ~every cell (pruning cannot
+      // help a scan that needs all of them) and the served form pays
+      // its probe kernel twice, so fall back to the single-pass
+      // equi-join form. The count is one cheap batch-source job; at
+      // serving sizes it is noise next to the probed scan (measured:
+      // sf1 batch p50 878 ms with it vs 891 before it existed).
+      staged("probe_score_write") {
+        SnapshotTable.commitBatch(spark, destPath, batchId) { txn =>
+          val nQ = batch.count()
+          // `scored`, not `served`: the outer `var served` two scopes
+          // up is the cached IvfIndex — shadowing it here invites an
+          // edit that silently grabs the DataFrame instead.
+          // servedPairBound is a parameter so the fallback-equivalence
+          // spec can force each side of the boundary on one batch size
+          val scored =
+            if (nQ * nProbe <= servedPairBound) Similarity.queryIvfServed(index, queries, k, nProbe)
+            else Similarity.queryIvf(index, queries, k, nProbe)
+          SnapshotTable.append(spark, destPath, scored, txn)
+        }
+      }
+      FaultInjection.maybeHalt(batchId)
+    }
     loads
   }
 }

@@ -549,42 +549,29 @@ object EventStream {
     */
   def hllIngestOnce(spark: SparkSession, srcDir: String, storePath: String,
                     checkpointDir: String, lgK: Int = 12,
-                    maxFilesPerTrigger: Int = 0): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema)
-    (if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    else reader)
-      .parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotTable.commitBatch(spark, storePath, batchId) { txn =>
-          if (!batch.isEmpty) {
-            val daily = batch
-              .filter(col("user_id").isNotNull && col("ts").isNotNull)
-              .groupBy(col("event_type"),
-                to_date(col("ts").cast("timestamp")).as("day"))
-              .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
-                count(lit(1)).as("n_events"))
-            // the four store columns: a store written with a lineage
-            // column still folds in
-            val merged = (if (SnapshotTable.versions(spark, storePath).isEmpty) daily
-              else SnapshotTable.read(spark, storePath)
-                .select("event_type", "day", "sketch", "n_events").unionByName(daily))
-              .groupBy(col("event_type"), col("day"))
-              .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
-                sum(col("n_events")).as("n_events"))
-            SnapshotTable.overwrite(spark, storePath, merged, properties = txn): Unit
-          }
+                    maxFilesPerTrigger: Int = 0): Unit =
+    drainFiles(spark, srcDir, checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      SnapshotTable.commitBatch(spark, storePath, batchId) { txn =>
+        if (!batch.isEmpty) {
+          val daily = batch
+            .filter(col("user_id").isNotNull && col("ts").isNotNull)
+            .groupBy(col("event_type"),
+              to_date(col("ts").cast("timestamp")).as("day"))
+            .agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sketch"),
+              count(lit(1)).as("n_events"))
+          // the four store columns: a store written with a lineage
+          // column still folds in
+          val merged = (if (SnapshotTable.versions(spark, storePath).isEmpty) daily
+            else SnapshotTable.read(spark, storePath)
+              .select("event_type", "day", "sketch", "n_events").unionByName(daily))
+            .groupBy(col("event_type"), col("day"))
+            .agg(expr("hll_union_agg(sketch, false)").as("sketch"),
+              sum(col("n_events")).as("n_events"))
+          SnapshotTable.overwrite(spark, storePath, merged, properties = txn): Unit
         }
-        FaultInjection.maybeHalt(batchId)
       }
-      .start()
-      .awaitTermination()
-  }
+      FaultInjection.maybeHalt(batchId)
+    }
 
   /** Serve the maintained store: per-key distinct estimate + volume —
     * what a dashboard reads; cost ∝ store rows, never events.

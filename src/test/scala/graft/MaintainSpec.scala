@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** The operational maintenance loop (r10 verdict item 5): one entry
   * point reclaims debris across every retention system — stale serving
-  * layouts + crashed stages, superseded IVF quantizer versions,
+  * homes + crashed layout builds, superseded IVF quantizer versions,
   * vacuumed snapshot versions, expired result-cache keys — while LIVE
   * stores survive untouched.
   */
@@ -15,21 +15,20 @@ class MaintainSpec extends SparkSpec {
   import spark.implicits._
 
   test("one sweep reclaims debris in all four systems; live stores survive") {
-    // ---- serving layouts: one stale, one hot, one crashed stage ----
+    // ---- serving layouts: one stale home, one hot home holding a
+    // crashed (never published) layout build ----
     val staleCorpus = Files.createTempDirectory("graft_mt_stale").toString
     val hotCorpus = Files.createTempDirectory("graft_mt_hot").toString
     val staleDir = ServingLayouts.dirFor("mt", staleCorpus)
     val hotDir = ServingLayouts.dirFor("mt", hotCorpus)
     Files.write(Paths.get(staleDir, "data"), "x".getBytes)
     Files.write(Paths.get(hotDir, "data"), "y".getBytes)
-    ServingLayouts.markComplete(staleDir)
-    ServingLayouts.markComplete(hotDir)
-    Files.setLastModifiedTime(Paths.get(staleDir, "_layout_complete"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10_000_000))
+    val crashedBuild = ServingLayouts.unpublishedLayout(hotDir)(d =>
+      Files.write(Paths.get(d, "data"), "z".getBytes))
+    val idleSince = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10_000_000)
+    Files.setLastModifiedTime(Paths.get(staleDir), idleSince)
+    Files.setLastModifiedTime(Paths.get(crashedBuild), idleSince)
     ServingLayouts.touch(hotDir)
-    val crashedStage = ServingLayouts.privateStage("mt", hotCorpus)
-    Files.setLastModifiedTime(Paths.get(crashedStage),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10_000_000))
 
     // ---- IVF store with superseded versions, inside the live ivf
     // layout home of a corpus ----
@@ -41,7 +40,6 @@ class MaintainSpec extends SparkSpec {
     Similarity.writeIvfVersioned(index, store)
     Similarity.writeIvfVersioned(index, store)
     Similarity.writeIvfVersioned(index, store)
-    ServingLayouts.markComplete(ivfHome)
     ServingLayouts.touch(ivfHome)
     assert(SnapshotTable.versions(spark, store).length === 3)
     val filesPerVersion = SnapshotTable.manifest(spark, store).collect().length
@@ -64,7 +62,7 @@ class MaintainSpec extends SparkSpec {
       Seq(2L).toDF("v"))
 
     // ---- the sweep ----
-    // retention chosen WAY above any live suite's marker age (suites
+    // retention chosen WAY above any live suite's home age (suites
     // share the layout root and run in parallel): only the two dirs
     // this test aged by 10_000_000 ms can cross the threshold
     val report = Maintain.run(spark, ivfCorpus,
@@ -77,9 +75,9 @@ class MaintainSpec extends SparkSpec {
       "the files of two superseded quantizer versions reclaimed")
     assert(SnapshotTable.versions(spark, store) === Seq(3L), "latest version survives")
     assert(Similarity.loadIvfVersioned(spark, store).assigned.count() === emb.count())
-    assert(report.layouts >= 2, "stale layout + crashed stage reclaimed")
+    assert(report.layouts >= 2, "stale home + crashed build reclaimed")
     assert(!Files.exists(Paths.get(staleDir)), "stale layout gone")
-    assert(!Files.exists(Paths.get(crashedStage)), "crashed stage gone")
+    assert(!Files.exists(Paths.get(crashedBuild)), "crashed build gone")
     assert(Files.exists(Paths.get(hotDir, "data")), "recently-served layout survives")
     assert(Files.exists(Paths.get(ivfHome)), "the live ivf home survives its version GC")
     assert(report.snapshots > 0, "snapshot vacuum reclaimed the orphaned a-partition file")
@@ -189,7 +187,8 @@ class MaintainSpec extends SparkSpec {
       ("ivfpq", Seq("codes", "codebooks", "centroids", "pq/v00000001/codes")))
     val written = flat.flatMap { case (kind, dirs) =>
       val home = ServingLayouts.dirFor(kind, corpus)
-      ServingLayouts.markComplete(home)
+      // the completion marker older homes carry is inert too
+      Files.write(Paths.get(home, "_layout_complete"), Array.emptyByteArray)
       dirs.flatMap { d =>
         (0 until 4).flatMap { c =>
           (0 until 12).map { f =>

@@ -3,18 +3,18 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gates.GateHarness
 
-/** Two-driver serving hammer (r11 verdict item 7): forks two
-  * independent driver JVMs against ONE shared layout root, each
-  * serving the ivf + pq families in a loop while publishing quantizer
-  * rebuilds into the shared versioned store and running the age-based
-  * maintenance vacuum on phase-offset cadences — cold-start acquire
-  * races, concurrent version publishes (losers see the documented
-  * retryable conflict), and maintenance landing mid-serve of the
-  * peer. Both must exit green: every serve either reads a complete
-  * layout or rebuilds (the documented cost), never a mixed layout and
-  * never a thrown serve. (The `vacuum(-1)` reset button is NOT run
-  * concurrently — it is documented to yank files from under in-flight
-  * readers, and a first cut of this hammer proved it does.)
+/** Two-driver serving hammer: forks two independent driver JVMs
+  * against ONE shared layout root, each serving the ivf, pq and dedup
+  * families in a loop while publishing quantizer rebuilds into the
+  * shared versioned store and running the age-based maintenance vacuum
+  * on phase-offset cadences — cold-start publish races on every home
+  * (the ANN stores' v1 and the dedup `layout`), concurrent version
+  * publishes (losers see the documented retryable conflict), and
+  * maintenance landing mid-serve of the peer. Both must exit green:
+  * every serve either reads a whole layout or rebuilds (the documented
+  * cost), never a mixed layout and never a thrown serve. (The
+  * `vacuum(-1)` reset button is NOT run concurrently — it is documented
+  * to yank files from under in-flight readers.)
   */
 class ServeHammerSpec extends AnyFunSuite {
 

@@ -1,20 +1,44 @@
 package graft
 
 import graft.sources.{ServingLayouts, Sources}
-import graft.ops.DedupServing
+import graft.ops.{DedupServing, TextDedup}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Lifecycle contract of the stable serving-layout homes (round 9's
-  * hygiene ask): deterministic per-(kind, corpus-version) paths,
-  * complete-marker discipline, age-based vacuum, cross-catalog
-  * re-registration of bucketed layouts, and the DedupServing
-  * session-validation fix (a new session reloads the stored layout
-  * instead of serving frames bound to the builder session).
+/** Lifecycle contract of the stable serving-layout homes:
+  * deterministic per-(kind, corpus-version) paths, one publish rule
+  * (the dedup layout appears by one atomicPublishDir inside its home),
+  * home-mtime liveness, a rename-aside vacuum, cross-catalog
+  * re-registration of bucketed layouts, and the DedupServing session
+  * validation (a new session reloads the stored layout instead of
+  * serving frames bound to the builder session).
   */
 class ServingLayoutsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Backdate `dir` far past any retention a test uses. */
+  private def age(dir: String): Unit =
+    Files.setLastModifiedTime(Paths.get(dir),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10000000))
+
+  private def names(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    finally s.close()
+  }
+
+  /** Trash siblings a vacuum of `home` may have left in the root. */
+  private def siblings(home: String): Seq[String] =
+    names(Paths.get(home).getParent.toString)
+      .filter(_.startsWith(Paths.get(home).getFileName.toString + ".trash-"))
+
+  /** A private copy of the documents table, so a test's home is its own. */
+  private def isolatedDocuments(prefix: String): String = {
+    val corpus = Files.createTempDirectory(prefix).toString
+    Tables.documents(spark, sfDir).write.parquet(s"$corpus/documents.parquet")
+    corpus
+  }
 
   test("dirFor is stable per (kind, corpus) and moves when the corpus dir's mtime changes") {
     val corpus = Files.createTempDirectory("graft_sl_corpus").toString
@@ -30,16 +54,6 @@ class ServingLayoutsSpec extends SparkSpec {
     assert(c != a, "a regenerated corpus must not reuse the old content's layout")
   }
 
-  test("complete-marker discipline: absent until marked, stripped by invalidate") {
-    val corpus = Files.createTempDirectory("graft_sl_corpus2").toString
-    val dir = ServingLayouts.dirFor("m", corpus)
-    assert(!ServingLayouts.isComplete(dir), "a fresh (or half-built) layout is not reusable")
-    ServingLayouts.markComplete(dir)
-    assert(ServingLayouts.isComplete(dir))
-    ServingLayouts.invalidate(dir)
-    assert(!ServingLayouts.isComplete(dir), "a rebuild-in-place must first strip the marker")
-  }
-
   test("vacuum reclaims only layouts idle past the retention window") {
     val corpusOld = Files.createTempDirectory("graft_sl_old").toString
     val corpusHot = Files.createTempDirectory("graft_sl_hot").toString
@@ -47,18 +61,16 @@ class ServingLayoutsSpec extends SparkSpec {
     val hotDir = ServingLayouts.dirFor("vac", corpusHot)
     Files.write(Paths.get(oldDir, "data"), "x".getBytes)
     Files.write(Paths.get(hotDir, "data"), "y".getBytes)
-    ServingLayouts.markComplete(oldDir)
-    ServingLayouts.markComplete(hotDir)
-    // age the idle layout's marker well past retention; touch the hot
-    // one. Retention sits far above any live suite's marker age (the
-    // layout root is shared by concurrently-running suites — only dirs
-    // this test aged can cross the threshold).
-    Files.setLastModifiedTime(Paths.get(oldDir, "_layout_complete"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10000000))
+    // age the idle home well past retention; touch the hot one.
+    // Retention sits far above any live suite's home age (the layout
+    // root is shared by concurrently-running suites — only dirs this
+    // test aged can cross the threshold).
+    age(oldDir)
     ServingLayouts.touch(hotDir)
     val n = ServingLayouts.vacuum(maxAgeMs = 5000000)
     assert(n >= 1)
     assert(!Files.exists(Paths.get(oldDir)), "idle layout reclaimed")
+    assert(siblings(oldDir).isEmpty, "the reclaimed home leaves no trash behind")
     assert(Files.exists(Paths.get(hotDir, "data")), "recently-served layout survives")
   }
 
@@ -107,123 +119,116 @@ class ServingLayoutsSpec extends SparkSpec {
     }
   }
 
-  test("acquire: racing builders publish exactly one complete layout; the loser serves the winner's") {
-    val corpus = Files.createTempDirectory("graft_sl_race").toString
+  test("DedupServing: two builders racing one home publish exactly one layout; both serve identical survivors, the loser's build is removed") {
+    val corpus = isolatedDocuments("graft_sl_race")
+    val home = ServingLayouts.dirFor("dedup", corpus)
+    val docs = Tables.documents(spark, corpus)
     val started = new java.util.concurrent.CountDownLatch(2)
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val threads = (1 to 2).map { i =>
-      new Thread(() => {
-        val dir = ServingLayouts.acquire("race", corpus) { stage =>
+    val sessions = Seq(spark, spark.newSession())
+    val published = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = sessions.zipWithIndex.map { case (s, i) =>
+      new Thread(() => try {
+        published.add(ServingLayouts.publishedLayout(home) { dir =>
           started.countDown()
-          started.await() // both builders in flight simultaneously
-          Files.write(Paths.get(stage, "data"), s"builder$i".getBytes)
-          Thread.sleep(50)
-          Files.write(Paths.get(stage, "owner"), s"builder$i".getBytes)
-        }
-        results.add(dir)
-      })
+          // both builders in flight simultaneously
+          started.await(120, java.util.concurrent.TimeUnit.SECONDS)
+          TextDedup.writeDedupIndex(TextDedup.buildDedupIndexAuto(
+            Tables.documents(s, corpus).filter(col("doc_id") % 5 =!= 4)),
+            s"graft_sl_race_$i", dir)
+          ()
+        })
+      } catch { case e: Throwable => errors.add(e) })
     }
-    threads.foreach(_.start()); threads.foreach(_.join(30000))
-    val dirs = results.toArray(Array.empty[String])
-    assert(dirs.length === 2)
-    dirs.foreach { d =>
-      assert(ServingLayouts.isComplete(d), s"served dir must be complete: $d")
-      // never a mixed build: data and owner must come from the SAME builder
-      val data = new String(Files.readAllBytes(Paths.get(d, "data")))
-      val owner = new String(Files.readAllBytes(Paths.get(d, "owner")))
-      assert(data === owner, s"mixed layout served: data=$data owner=$owner")
-    }
+    threads.foreach(_.start()); threads.foreach(_.join(300000))
+    assert(errors.isEmpty, s"a racing builder failed: ${errors.toArray.mkString("; ")}")
+    val layout = Paths.get(home, "layout").toString
+    assert(published.toArray.toSeq === Seq(layout, layout),
+      "both builders must return the one published layout")
+    val entries = names(home)
+    assert(entries.contains("layout"))
+    assert(!entries.exists(_.startsWith("layout-")),
+      s"the loser's build must be removed: $entries")
+    assert(!names(layout).exists(_.startsWith("layout-")),
+      "a losing publish must not leave its build nested in the winner's")
+    assert(Seq("meta", "digests", "buckets", "shingles").forall(d =>
+      Files.isDirectory(Paths.get(layout, d))), "the published layout is whole")
+    assert(ServingLayouts.publishedLayout(home)(_ =>
+      fail("a published layout must be reused, not rebuilt")) === layout)
+    // both sessions serve the published layout, identically to the inline index
+    val served = sessions.map(s =>
+      DedupServing.dedupIncremental(s, corpus).select("doc_id").as[Long].collect().toSet)
+    val inline = TextDedup.dedupIncremental(
+      TextDedup.buildDedupIndexAuto(docs.filter(col("doc_id") % 5 =!= 4)),
+      docs.filter(col("doc_id") % 5 === 4)).select("doc_id").as[Long].collect().toSet
+    assert(inline.nonEmpty)
+    assert(served.forall(_ === inline), "both sessions serve the inline survivors")
+    assert(names(home).count(_.startsWith("layout")) === 1, "serving built nothing more")
   }
 
-  test("acquire claims incomplete debris by rename-aside, never delete-in-place") {
-    // pre-protocol debris: a non-empty stable dir with NO complete marker
-    // (a crashed build-in-place from before the staged protocol). r10
-    // advisor: the old fallback DELETED the stable path after a
-    // completeness check, destroying any winner whose atomic publish
-    // landed in the check→delete window. The new path renames the slot
-    // aside (atomic claim), re-inspects what it claimed, and publishes.
-    val corpus = Files.createTempDirectory("graft_sl_debris").toString
-    val stable = ServingLayouts.dirFor("dbr", corpus)
-    Files.write(Paths.get(stable, "junk"), "half-built".getBytes)
-    val served = ServingLayouts.acquire("dbr", corpus) { stage =>
-      Files.write(Paths.get(stage, "data"), "fresh".getBytes)
-    }
-    assert(served === stable, "the claimed slot must hold the fresh publish")
-    assert(ServingLayouts.isComplete(served))
-    assert(Files.exists(Paths.get(served, "data")), "fresh layout served")
-    assert(!Files.exists(Paths.get(served, "junk")), "debris content must not leak into the layout")
-    // the claimed debris was recognized as junk and discarded
-    val leftovers = {
-      val s = Files.list(Paths.get(stable).getParent)
-      try s.toArray.toSeq.map(_.toString).filter(_.contains(".debris-"))
-      finally s.close()
-    }
-    assert(leftovers.isEmpty, s"claimed debris must be discarded: $leftovers")
+  test("a vacuum stopped after its rename-aside leaves the home absent, and the next vacuum reclaims the trash") {
+    val corpus = Files.createTempDirectory("graft_sl_trash").toString
+    val home = ServingLayouts.dirFor("trash", corpus)
+    Files.createDirectories(Paths.get(home, "layout", "digests"))
+    Files.write(Paths.get(home, "layout", "digests", "part-0"), "x".getBytes)
+    // the first step of a vacuum, then a stop before the delete
+    val aside = ServingLayouts.trash(Paths.get(home)).get
+    assert(!Files.exists(Paths.get(home)), "the home is absent, never partial")
+    assert(ServingLayouts.existingDirFor("trash", corpus).isEmpty)
+    assert(ServingLayouts.homesFor("trash", corpus).isEmpty, "trash is never a home")
+    assert(Files.exists(aside.resolve("layout/digests/part-0")), "the rename moved the home whole")
+    // trash is reclaimed at any age: even a retention no home can exceed
+    assert(ServingLayouts.vacuum(maxAgeMs = Long.MaxValue) >= 1)
+    assert(!Files.exists(aside), "the next vacuum reclaims the trash")
+    val fresh = ServingLayouts.dirFor("trash", corpus)
+    assert(fresh === home && !Files.exists(Paths.get(fresh, "layout")),
+      "the next resolve starts an empty home")
   }
 
-  test("acquire restores (not destroys) a complete layout it claimed from the stable slot") {
-    // simulate the advisor's race outcome: by the time this builder's
-    // fallback runs, the stable path holds a WINNER'S complete layout.
-    // acquire must serve it intact — the old delete-in-place destroyed it.
-    val corpus = Files.createTempDirectory("graft_sl_winner").toString
-    val stable = ServingLayouts.dirFor("win", corpus)
-    Files.write(Paths.get(stable, "data"), "winner".getBytes)
-    ServingLayouts.markComplete(stable)
-    val served = ServingLayouts.acquire("win", corpus) { _ =>
-      fail("a complete published layout must be reused, not rebuilt")
-    }
-    assert(served === stable)
-    assert(new String(Files.readAllBytes(Paths.get(served, "data"))) === "winner",
-      "the winner's published layout must survive intact")
-  }
-
-  test("acquire reuses a completed layout without re-running the build") {
-    val corpus = Files.createTempDirectory("graft_sl_reuse").toString
-    var builds = 0
-    val a = ServingLayouts.acquire("ru", corpus) { stage =>
-      builds += 1; Files.write(Paths.get(stage, "data"), "x".getBytes)
-    }
-    val b = ServingLayouts.acquire("ru", corpus) { _ =>
-      builds += 1; fail("a complete layout must be reused, not rebuilt")
-    }
-    assert(a === b)
-    assert(builds === 1)
+  test("an unpublished layout build idle past retention is reclaimed inside a live home; the published layout survives") {
+    val corpus = Files.createTempDirectory("graft_sl_builds").toString
+    val home = ServingLayouts.dirFor("builds", corpus)
+    val layout = ServingLayouts.publishedLayout(home)(d =>
+      Files.write(Paths.get(d, "data"), "live".getBytes))
+    val crashed = ServingLayouts.unpublishedLayout(home)(d =>
+      Files.write(Paths.get(d, "data"), "crashed".getBytes))
+    val young = ServingLayouts.unpublishedLayout(home)(d =>
+      Files.write(Paths.get(d, "data"), "young".getBytes))
+    age(crashed)
+    ServingLayouts.touch(home)
+    assert(ServingLayouts.vacuum(maxAgeMs = 5000000) >= 1)
+    assert(!Files.exists(Paths.get(crashed)), "the idle unpublished build is reclaimed")
+    assert(Files.exists(Paths.get(young, "data")), "a young build survives")
+    assert(new String(Files.readAllBytes(Paths.get(layout, "data"))) === "live",
+      "the published layout survives")
+    assert(!names(home).exists(_.contains(".trash-")), "no trash left inside the home")
   }
 
   test("DedupServing touches the marker on EVERY serve and rebuilds if the layout is vacuumed under it") {
+    // the liveness marker is the home directory's own mtime
     // ISOLATED corpus copy: the vacuum-under-server simulation must
-    // reclaim only THIS test's layout — suites run in parallel in one
+    // reclaim only THIS test's home — suites run in parallel in one
     // JVM and share the per-user layout root, so a global
-    // vacuum(maxAgeMs = -1) here can yank a layout another suite is
-    // mid-serve on (seen as a flaky build-count/FileNotFound failure
-    // in the r11 full-suite run)
-    val corpus = Files.createTempDirectory("graft_sl_vac_corpus").toString
-    Tables.documents(spark, sfDir).write.parquet(s"$corpus/documents.parquet")
+    // vacuum(maxAgeMs = -1) here could yank a layout another suite is
+    // mid-serve on
+    val corpus = isolatedDocuments("graft_sl_vac_corpus")
     val first = DedupServing.dedupIncremental(spark, corpus)
       .select("doc_id").as[Long].collect().toSet
     val dir = ServingLayouts.dirFor("dedup", corpus)
-    // simulate a long-idle marker, then a cache-hit serve: liveness must refresh
-    Files.setLastModifiedTime(Paths.get(dir, "_layout_complete"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10000000))
+    // simulate a long-idle home, then a cache-hit serve: liveness must refresh
+    age(dir)
     DedupServing.dedupIncremental(spark, corpus).count()
-    val age = System.currentTimeMillis() -
-      Files.getLastModifiedTime(Paths.get(dir, "_layout_complete")).toMillis
-    assert(age < 5000000, "a cache-hit serve must refresh the vacuum-liveness marker")
-    // simulate a vacuum racing the live server: exactly this layout's
-    // files and marker vanish (what vacuum would do to an aged dir)
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.toArray.toSeq.foreach(c => rmTree(c.asInstanceOf[java.nio.file.Path]))
-        finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rmTree(Paths.get(dir))
-    assert(!Files.exists(Paths.get(dir)), "vacuum reclaimed the layout")
+    val idle = System.currentTimeMillis() - Files.getLastModifiedTime(Paths.get(dir)).toMillis
+    assert(idle < 5000000, "a cache-hit serve must refresh the home's mtime")
+    // simulate a vacuum racing the live server: the home vanishes
+    val aside = ServingLayouts.trash(Paths.get(dir)).get
+    assert(!Files.exists(Paths.get(dir)), "vacuum reclaimed the home")
     val rebuilt = DedupServing.dedupIncremental(spark, corpus)
       .select("doc_id").as[Long].collect().toSet
-    assert(rebuilt === first, "a vacuumed layout must be rebuilt, not served from dead frames")
+    assert(rebuilt === first, "a vacuumed home must be rebuilt, not served from dead frames")
+    assert(Files.isDirectory(Paths.get(dir, "layout")), "the rebuild republished the layout")
+    ServingLayouts.vacuum(maxAgeMs = Long.MaxValue) // reclaims only trash
+    assert(!Files.exists(aside))
   }
 
   test("DedupServing: a NEW session reloads the stored layout and serves identical survivors") {

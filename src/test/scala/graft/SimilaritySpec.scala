@@ -709,12 +709,13 @@ class SimilaritySpec extends SparkSpec {
     val sq8Home = ServingLayouts.dirFor("sq8", flatDir)
     index.assigned.write.partitionBy("cell").parquet(s"$sq8Home/assigned")
     index.centroids.write.parquet(s"$sq8Home/centroids")
-    ServingLayouts.markComplete(sq8Home)
+    // with the completion marker older homes carry, equally inert
+    Files.write(Paths.get(sq8Home, "_layout_complete"), Array.emptyByteArray)
     val pqHome = ServingLayouts.dirFor("ivfpq", flatDir)
     Similarity.pqCodesOf(index, pq).write.partitionBy("cell").parquet(s"$pqHome/codes")
     pq.codebooks.write.parquet(s"$pqHome/codebooks")
     index.centroids.write.parquet(s"$pqHome/centroids")
-    ServingLayouts.markComplete(pqHome)
+    Files.write(Paths.get(pqHome, "_layout_complete"), Array.emptyByteArray)
     // and a pre-table `v<N>` store beside them, equally never read
     index.assigned.write.partitionBy("cell").parquet(s"$sq8Home/ivf/v00000001/assigned")
     index.centroids.write.parquet(s"$sq8Home/ivf/v00000001/centroids")
