@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
@@ -99,10 +100,20 @@ object Bench {
     // rep-major: sample r of every query before sample r+1 of any — each
     // query's reps land in distinct time windows (see scaladoc)
     val calibSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // classes Spark's codegen compiled inside each query's timed reps,
+    // summed over the reps: 0 while the codegen cache holds every class
+    // the warmup sweep compiled and the query inlines no per-run value
+    def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     val samples: Seq[Seq[Double]] =
       (1 to math.max(1, reps)).map { _ =>
         calibSamples += calibrate()
-        val sweep = queries.map { case (n, f) => timeOnce(n, f) }
+        val sweep = queries.map { case (n, f) =>
+          val c0 = compileCount
+          val t = timeOnce(n, f)
+          compiles(n) += compileCount - c0
+          t
+        }
         drainCleaner()
         sweep
       }
@@ -121,6 +132,8 @@ object Bench {
       .mkString("{", ",", "}")
     val ms = medians.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val cs = queries.map { case (k, _) => s"\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
     // A failed query (-1) must invalidate the headline, not deflate it:
     // total is -1 whenever any query failed, with the count made explicit.
     val failed = results.count(_._2 < 0)
@@ -132,16 +145,16 @@ object Bench {
     // Workload-semantics notes ride in the artifact itself so
     // cross-round diffs can't silently conflate pre/post numbers for a
     // query whose measured workload changed under an unchanged name.
-    val notes = """{"calibration":"min-of-reps of a pinned SF-independent group-agg job; divide query times by the calibration ratio to compare across rounds/hosts","dedup_incremental":"since r8 the corpus index builds once in the untimed warmup (DedupServing) and timed reps measure batch-serving cost only; pre-r8 numbers include the per-call index rebuild"}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calibration":$calib,"queries":$qs,"medians":$ms,"notes":$notes,"sf":"$sfDir"}"""
+    val notes = """{"calibration":"min-of-reps of a pinned SF-independent group-agg job; divide query times by the calibration ratio to compare across rounds/hosts","compiles":"classes Spark codegen compiled during each query's timed reps, summed over the reps; the session sizes the codegen cache (GraftSession.CodegenCacheEntries) to hold a whole sweep, so timed reps include no per-rep recompilation of classes the rest of the sweep evicted, and a nonzero count is a class the query generates anew on every run; artifacts without this field ran at Spark's default of 100 entries and recompiled classes on every rep","dedup_incremental":"since r8 the corpus index builds once in the untimed warmup (DedupServing) and timed reps measure batch-serving cost only; pre-r8 numbers include the per-call index rebuild"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calibration":$calib,"queries":$qs,"medians":$ms,"compiles":$cs,"notes":$notes,"sf":"$sfDir"}"""
     Files.write(Paths.get(outPath), (json + "\n").getBytes(StandardCharsets.UTF_8))
     // The STDOUT line carries the driver contract fields only (metric/
     // value/unit/failed/calibration/queries/sf): r15's stdout line —
     // with medians and notes, ~2× the size — was cut off by the
     // driver's bounded tail capture, which zeroed that round's
-    // round-over-round comparison (r16 verdict item 2b). Medians and
-    // notes still ship in the $outPath file above (same JSON contract,
-    // superset fields); nothing is removed or renamed in `queries`.
+    // round-over-round comparison. Medians, compiles and notes still
+    // ship in the $outPath file above (same JSON contract, superset
+    // fields); nothing is removed or renamed in `queries`.
     val stdoutJson = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"calibration":$calib,"queries":$qs,"sf":"$sfDir"}"""
     println(stdoutJson)
     spark.stop()

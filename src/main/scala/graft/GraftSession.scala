@@ -47,6 +47,41 @@ object GraftSession {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
 
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session.
+    *
+    * Spark keeps the classes it generates in one JVM-wide LRU cache. It
+    * is a static conf: its size is read once per JVM, when the first
+    * session compiles its first class, so it is set here, before any
+    * session starts, and tests set the same value (`SparkSpec`).
+    *
+    * Spark's default of 100 entries is smaller than one serving round's
+    * working set, so each round recompiled the classes the round before
+    * it had generated. On the perfbench workloads (4 cores), traced runs
+    * at 100 entries compiled 15.6-16 classes per `online` operation
+    * (about 130 ms, a quarter of an operation) and 13 per
+    * `corpus_curate` job; at 250 to 2000 entries `online` compiled 4.0
+    * per operation and, at 1000, curation 0.7 per job. The four left
+    * per `online` operation come from per-request literals Spark
+    * inlines into generated code (station ids, `ts`/`dt` bounds, the kNN
+    * `cell IN (…)` list), so no size removes them.
+    *
+    * `graft.Bench` needs more: its rep-major sweep of all 127 queries
+    * uses more than 1000 distinct classes (sf0.001), and an LRU cache
+    * smaller than a cyclic working set misses on most of them. Its two
+    * timed reps compiled 3,099 classes at 100 entries, 2,093 at
+    * 1000, 99 at 2000 and 85 at 4000. 2000 is the smallest size measured
+    * that reaches the floor on both perfbench workloads and on Bench.
+    *
+    * The cache retains up to that many generated classes with their
+    * bytecode. Perfbench retained 3.8 MB more heap on `online` (+5%) and
+    * 2.5 MB more on `corpus_curate` than at 100, the same at 1000 as at
+    * 2000: neither run fills 1000 entries. In a long-lived server the
+    * one-shot literal classes fill it, and the LRU evicts them first.
+    * Callers can still override the value with `.config` on the
+    * returned builder.
+    */
+  val CodegenCacheEntries: Int = 2000
+
   def master(defaultCpus: String): String = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
@@ -96,6 +131,7 @@ object GraftSession {
       // older corpora store events.ts as TIMESTAMP(NANOS), which Spark
       // reads only as a long under this flag (see Tables.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(d => b.config("spark.checkpoint.dir", d))
     if (m.startsWith("local-cluster")) {

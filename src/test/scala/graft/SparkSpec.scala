@@ -14,6 +14,9 @@ trait SparkSpec extends AnyFunSuite {
     // older corpora store events.ts as parquet TIMESTAMP(NANOS); the
     // mains set this in GraftSession.builderFor (see Tables.events)
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // static, read once per JVM by whichever session compiles first, so
+    // every suite of the shared test JVM must set the mains' value
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
