@@ -1,58 +1,73 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, IOException}
 import java.nio.charset.StandardCharsets
+import java.util.zip.{DeflaterOutputStream, InflaterInputStream}
 
-/** Materialized query-result cache with TTL — the batch-engine analog
-  * of the reference's Redis result cache (services/query/main.py:66-79:
-  * key = sha256(query + sorted-params), TTL 300 s, DB on miss). A Redis
-  * blob cache is the wrong shape for a distributed engine — results can
-  * exceed one node and the store should be the same parquet the engine
-  * already reads at full scan speed — so entries are parquet GENERATION
-  * directories published atomically (the [[SnapshotTable]] rename
-  * primitive) under sha256 keys:
+/** Query-result cache with TTL — the engine's form of the reference's
+  * Redis result cache (services/query/main.py:66-79: key =
+  * sha256(query + sorted-params), TTL 300 s, DB on miss). Like the Redis
+  * blob, an entry holds the result's ROWS: every caller ships the
+  * result through the driver anyway (the query service's response, the
+  * gate's hash), so the cache keeps what the driver already holds. A
+  * miss runs its query once, as the caller's `collect` would, and a hit
+  * serves the stored rows as a local relation: neither the call nor the
+  * caller's `collect` starts a Spark job. A result larger than
+  * `spark.driver.maxResultSize` fails the miss with Spark's own error,
+  * exactly as the caller's `collect` of it would.
+  *
+  * Entries are GENERATION directories published atomically (the
+  * [[SnapshotTable]] rename primitive) under sha256 keys:
   *
   * {{{
-  *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/data/part-*.parquet
+  *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/rows
   *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/_cached_at
   *   <cacheRoot>/<sha256-key>/e-<stamp13>-<uuid>/_schema
   * }}}
   *
   * `_cached_at` is the publish stamp (epoch ms); `_schema` is the
-  * result's schema (Spark's StructType JSON, every field nullable), so
-  * a hit reads its parquet without a schema-inference job. A generation
-  * without `_schema` (an older layout) serves as a miss and is replaced.
+  * result's schema (Spark's StructType JSON, every field nullable).
+  * `rows` is one Deflater-compressed stream: a header (the writing Spark
+  * version, the row count), then each row as its length and its
+  * UnsafeRow bytes under `_schema`. No Java serialization: the bytes are
+  * plain data, read back as UnsafeRows and never deserialized into
+  * objects. A generation whose `rows` is missing or unreadable, or
+  * whose header names another Spark version (the UnsafeRow layout is
+  * Spark's own), is a miss that recomputes and publishes a new
+  * generation; so is one without `_schema`. An older layout that stored
+  * a `data/` parquet directory instead of `rows` is served the same
+  * way, not migrated.
   *
   * Generations are IMMUTABLE once published: a refresh publishes a NEW
   * `e-*` directory and never touches the one a concurrent reader may
-  * hold — Redis expiry is atomic and this layout earns the same safety
-  * on a filesystem. The newest stamped generation serves; superseded
-  * generations are garbage-collected on the publish path once their
-  * age exceeds ttl + a grace window (see [[getOrCompute]]) — the
-  * previous latest is always retained. Result-sized data, so the
+  * be reading — Redis expiry is atomic and this layout earns the same
+  * safety on a filesystem. The newest stamped generation serves;
+  * superseded generations are garbage-collected on the publish path
+  * once their age exceeds ttl + a grace window (see [[getOrCompute]]) —
+  * the previous latest is always retained. Result-sized data, so the
   * bounded retention is cheap.
   *
   * Semantics, matching the reference where it matters:
-  *  - HIT (newest generation younger than `ttl`): read its parquet —
-  *    the compute thunk never runs, exactly like the Redis
-  *    short-circuit.
-  *  - MISS/EXPIRED: run the compute, stage, publish a new generation.
-  *    Concurrent racers each publish their own uniquely-named
-  *    generation; the newest stamp wins for later readers and nobody
-  *    fails (best-effort, like the reference's continue-if-Redis-fails
-  *    posture).
+  *  - HIT (newest generation younger than `ttl`): read its rows — the
+  *    compute thunk never runs, exactly like the Redis short-circuit.
+  *  - MISS/EXPIRED: run the compute, publish its rows as a new
+  *    generation, return them. Concurrent racers each publish their own
+  *    uniquely-named generation; the newest stamp wins for later
+  *    readers and nobody fails (best-effort, like the reference's
+  *    continue-if-Redis-fails posture).
   *  - [[invalidate]] is the explicit story the reference lacks: it
   *    deletes only the `_cached_at` stamps, making every generation
-  *    STALE without immediately removing data a lazy in-flight frame
-  *    still needs — the next read recomputes; in-flight reads survive
-  *    up to two subsequent publishes (see [[invalidate]]'s retention
-  *    note).
+  *    STALE without removing rows a concurrent hit may be reading —
+  *    the next read recomputes.
   *
   * The cache is a correctness NO-OP by construction: every path
-  * returns either the computed frame or a parquet round-trip of one.
+  * returns the computed rows, in the computed order.
   */
 object ResultCache {
 
@@ -111,9 +126,55 @@ object ResultCache {
       catch { case scala.util.control.NonFatal(_) => None }
     }
 
-  /** The generation's data, read under its stored schema (no job). */
-  private def readGeneration(spark: SparkSession, gen: Path, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(new Path(gen, "data").toString)
+  private val RowsFile = "rows"
+
+  /** Write `rows` as a generation's `rows` file (see the layout above). */
+  private def writeRows(fs: org.apache.hadoop.fs.FileSystem, entry: Path,
+                        rows: Array[UnsafeRow]): Unit = {
+    val out = new DataOutputStream(new BufferedOutputStream(
+      new DeflaterOutputStream(fs.create(new Path(entry, RowsFile))), 65536))
+    val buf = new Array[Byte](4096) // only used by rows not backed by a byte[]
+    try {
+      out.writeUTF(org.apache.spark.SPARK_VERSION)
+      out.writeInt(rows.length)
+      rows.foreach { r =>
+        out.writeInt(r.getSizeInBytes)
+        r.writeToStream(out, buf)
+      }
+    } finally out.close()
+  }
+
+  /** A generation's rows under its stored schema; None when the file is
+    * gone, torn or malformed, or was written by another Spark version.
+    */
+  private def readRows(spark: SparkSession, entry: Path,
+                       schema: StructType): Option[Array[UnsafeRow]] = {
+    val fs = fsOf(spark, entry.toString)
+    val fixed = UnsafeRow.calculateBitSetWidthInBytes(schema.length) + 8 * schema.length
+    try {
+      val in = new DataInputStream(new BufferedInputStream(
+        new InflaterInputStream(fs.open(new Path(entry, RowsFile))), 65536))
+      try {
+        if (in.readUTF() != org.apache.spark.SPARK_VERSION) None
+        else {
+          val n = in.readInt()
+          if (n < 0) throw new IOException(s"negative row count $n")
+          // grown row by row, so a corrupt count ends in EOF, not in a
+          // huge allocation
+          Some(Iterator.fill(n) {
+            val size = in.readInt()
+            if (size < fixed || size % 8 != 0)
+              throw new IOException(s"row of $size bytes under a ${schema.length}-field schema")
+            val bytes = new Array[Byte](size)
+            in.readFully(bytes)
+            val row = new UnsafeRow(schema.length)
+            row.pointTo(bytes, size)
+            row
+          }.toArray)
+        }
+      } finally in.close()
+    } catch { case _: IOException => None }
+  }
 
   /** Published generations of `key`, newest-name-first (the 13-digit
     * zero-padded publish stamp in the name sorts chronologically;
@@ -129,21 +190,25 @@ object ResultCache {
       .sortBy(_.getName)(Ordering[String].reverse)
 
   /** Serve `key` from the cache if its newest generation is younger
-    * than `ttlMs` and carries its schema, otherwise run `compute`,
-    * publish its result as a fresh generation, and return the cached
-    * read. Neither read starts a Spark job before the caller's action.
-    * `nowMs` is injectable for tests.
+    * than `ttlMs` and its schema and rows read back, otherwise run
+    * `compute`, collect its rows once, publish them as a fresh
+    * generation, and return them. Either way the result is a local
+    * relation over driver-held rows under the stored (all-nullable)
+    * schema, so collecting it starts no Spark job. `nowMs` is
+    * injectable for tests.
     *
     * `gcGraceMs` bounds the reader-safety window of generation GC: a
     * superseded generation is reclaimed only once its publish stamp is
     * older than `ttlMs + gcGraceMs`. Any reader necessarily passed its
-    * freshness check while the generation's age was < ttl, so it has
-    * at least `gcGraceMs` to finish collecting before the files can
-    * vanish — the multithreaded hammer spec drives 6 concurrent
-    * expired-refreshers through this window. (A generation whose stamp
-    * was stripped by [[invalidate]] has no age and is reclaimed
-    * immediately once superseded; frames read before an invalidate
-    * should be drained promptly, per the invalidate contract.)
+    * freshness check while the generation's age was < ttl, so it has at
+    * least `gcGraceMs` to read the rows before the file can vanish. A
+    * returned frame holds its rows and reads no file after the call, so
+    * the window now spares a concurrent hit a recompute (a rows file
+    * that vanishes mid-read is a miss); it no longer guards against a
+    * failed read. The multithreaded hammer spec drives 6 concurrent
+    * expired-refreshers through it. (A generation whose stamp was
+    * stripped by [[invalidate]] has no age and is reclaimed immediately
+    * once superseded.)
     */
   def getOrCompute(spark: SparkSession, cacheRoot: String, key: String,
                    ttlMs: Long, nowMs: () => Long = () => System.currentTimeMillis(),
@@ -152,50 +217,48 @@ object ResultCache {
     val fs = fsOf(spark, cacheRoot)
     val keyDir = new Path(cacheRoot, key)
     val gens = generationsOf(fs, keyDir)
-    val latestFresh = gens.headOption
+    val hit = gens.headOption
       .filter(g => stampOf(spark, g).exists(t => nowMs() - t < ttlMs))
-      .flatMap(g => schemaOf(spark, g).map(g -> _))
-    latestFresh match {
-      case Some((g, schema)) => readGeneration(spark, g, schema)
+      .flatMap(g => schemaOf(spark, g).flatMap(s => readRows(spark, g, s).map(s -> _)))
+    hit match {
+      case Some((schema, rows)) => Shims.localFrame(spark, schema, rows.toSeq)
       case None =>
         val df = compute
         val schema = Shims.asNullable(df.schema)
+        val rows = Shims.collectUnsafe(df)
         val now = nowMs()
         val gen = f"e-$now%013d-${java.util.UUID.randomUUID().toString.take(8)}"
         val tmp = new Path(keyDir,
           ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
-        df.write.parquet(new Path(tmp, "data").toString)
+        writeRows(fs, tmp, rows)
         writeSmall(fs, tmp, "_schema", schema.json)
         writeSmall(fs, tmp, "_cached_at", now.toString)
-        val target = new Path(keyDir, gen)
         // generation names are unique, so the publish cannot conflict;
         // the atomic rename still guards against a torn directory
-        SnapshotTable.atomicPublishDir(fs, tmp, target)
-        // age-graced GC: always retain the previous latest (readers
-        // may be draining it), and reclaim older superseded
-        // generations only once their stamp age exceeds ttl + grace —
-        // with N concurrent refreshers a reader can lag more than one
-        // generation behind, so a pure keep-2 window deletes files out
-        // from under a just-returned frame (caught by the hammer spec)
+        SnapshotTable.atomicPublishDir(fs, tmp, new Path(keyDir, gen))
+        // age-graced GC: always retain the previous latest (a hit may
+        // be reading it), and reclaim older superseded generations only
+        // once their stamp age exceeds ttl + grace — with N concurrent
+        // refreshers a reader can lag more than one generation behind
         val cutoff = now - ttlMs - gcGraceMs
         gens.drop(1)
           .filter(g => stampOf(spark, g).forall(_ < cutoff))
           .foreach(g => fs.delete(g, true))
-        readGeneration(spark, target, schema)
+        Shims.localFrame(spark, schema, rows.toSeq)
     }
   }
 
   /** Mark every generation of `key` stale (read-after-write writers
-    * call this on commit): only the `_cached_at` stamps are deleted,
-    * so the next [[getOrCompute]] recomputes without yanking data from
-    * under an in-flight lazy frame at that instant. Retention after an
-    * invalidate is BOUNDED, not indefinite: a stamp-stripped generation
-    * has no age, so once it is superseded at depth ≥ 2 the next publish
-    * reclaims it immediately (see [[getOrCompute]]'s GC note) — only
-    * the latest and previous-latest generations are retention-
-    * protected. Frames read before an invalidate must be drained
-    * promptly; they survive at most two subsequent publishes. Returns
-    * true if any live stamp was removed.
+    * call this on commit): only the `_cached_at` stamps are deleted, so
+    * the next [[getOrCompute]] recomputes while a concurrent hit that
+    * already passed its freshness check still reads its rows.
+    * Retention after an invalidate is BOUNDED, not indefinite: a
+    * stamp-stripped generation has no age, so once it is superseded at
+    * depth ≥ 2 the next publish reclaims it immediately (see
+    * [[getOrCompute]]'s GC note) — only the latest and previous-latest
+    * generations are retention-protected. Frames returned before an
+    * invalidate hold their rows and are unaffected. Returns true if any
+    * live stamp was removed.
     */
   def invalidate(spark: SparkSession, cacheRoot: String, key: String): Boolean = {
     val fs = fsOf(spark, cacheRoot)
@@ -232,9 +295,9 @@ object ResultCache {
     *  - torn `.tmp-*` stagings older than the grace window (a crashed
     *    publish's debris).
     *
-    * Returns the number of directories reclaimed. Same retention trade
-    * as every vacuum in the repo: don't run with readers draining
-    * frames older than ttl + grace.
+    * Returns the number of directories reclaimed. A hit that passed its
+    * freshness check longer than ttl + grace ago and is still reading
+    * the rows file recomputes, as it would after the publish-side GC.
     */
   def sweep(spark: SparkSession, cacheRoot: String, ttlMs: Long,
             gcGraceMs: Long = 30000L,
@@ -245,9 +308,9 @@ object ResultCache {
     var deleted = 0
     val cutoff = nowMs() - ttlMs - gcGraceMs
     // A staging is debris only when it CRASHED, and a live publish may
-    // legitimately write for minutes — so tmp reclamation waits at
-    // least an hour, not the reader-anchored grace (a live writer also
-    // keeps refreshing the dir's mtime as part files land).
+    // legitimately take a while to write its files on a slow store — so
+    // tmp reclamation waits at least an hour, not the reader-anchored
+    // grace.
     val tmpCutoff = nowMs() - math.max(gcGraceMs, 3600000L)
     fs.listStatus(root).filter(_.isDirectory).foreach { keyStatus =>
       val keyDir = keyStatus.getPath

@@ -331,12 +331,14 @@ object SnapshotTable {
     * ('a b' -> 'a%20b', null -> __HIVE_DEFAULT_PARTITION__). A raw
     * `c=value` concat misses every such partition: old files would be
     * kept AND merged rows written — silent duplicates. Escape with the
-    * writer's own rules.
+    * writer's own rules. Each task sends the driver its distinct
+    * partition values, and the driver merges them: one job with no
+    * shuffle, where `distinct()` is a shuffle plus a result job.
     */
   private def affectedParts(batch: DataFrame, partitionCols: Seq[String]): Set[String] =
     if (partitionCols.isEmpty) Set("")
     else batch.select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect().map { r =>
+      .rdd.mapPartitions(_.toSet.iterator).collect().iterator.map { r =>
         partitionCols.indices.map { i =>
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
             .getPartitionPathString(

@@ -55,6 +55,33 @@ object Shims {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** The frame's result rows as the driver receives them: the one job
+    * (or AQE job set) `collect` runs, under its own SQL execution, but
+    * without the conversion to external `Row`s. Every row is an
+    * UnsafeRow owned by the caller.
+    */
+  def collectUnsafe(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    val qe = org.apache.spark.sql.classic.ClassicConversions.castToImpl(df).queryExecution
+    val rows = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+    lazy val toUnsafe = UnsafeProjection.create(df.schema)
+    rows.map {
+      case u: UnsafeRow => u
+      case r => toUnsafe(r).copy()
+    }
+  }
+
+  /** A frame over rows the driver holds: a LocalRelation, so neither
+    * building nor collecting it starts a Spark job.
+    */
+  def localFrame(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+                 rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** `s` with every field nullable, nested ones included — the schema a
     * file-source read reports for data written at `s`.
     */

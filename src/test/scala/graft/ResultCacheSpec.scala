@@ -38,7 +38,7 @@ class ResultCacheSpec extends SparkSpec {
       }
     val first = cached().as[(Long, String)].collect().toSet
     assert(computes === 1 && first === Set((1L, "x"), (2L, "y")))
-    // second call inside the TTL: served from parquet, compute not run
+    // second call inside the TTL: served from the stored rows, compute not run
     clock += 200000L
     assert(cached().as[(Long, String)].collect().toSet === first)
     assert(computes === 1, "a fresh entry must short-circuit the compute")
@@ -284,9 +284,9 @@ class ResultCacheSpec extends SparkSpec {
     val (hit, n) = JobCount.of(spark.sparkContext)(cached())
     assert(n === 0, s"a hit started $n jobs before its action")
     assert(hit.as[(String, Long)].collect().toSet === Set(("x", 1L), ("y", 2L)))
-    // the stored schema is the one an inferring read of the generation reports
-    val gen = generations(dir, key).head
-    assert(hit.schema === spark.read.parquet(gen.resolve("data").toString).schema)
+    // the stored schema is the computed one with every field nullable
+    assert(hit.schema === org.apache.spark.sql.graft.Shims.asNullable(
+      Seq((1L, "x")).toDF("k", "v").groupBy("v").agg(sum("k").as("s")).schema))
   }
 
   test("a generation without _schema is a miss that recomputes") {
@@ -302,6 +302,70 @@ class ResultCacheSpec extends SparkSpec {
     assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
       "a fresh generation without _schema must recompute, not fail")
     assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
+      "the republished generation serves")
+  }
+
+  test("a miss runs only its compute's jobs; its frame, a hit and the hit's collect run none") {
+    val dir = root()
+    val key = ResultCache.keyOf("misscount", Nil)
+    def query() = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("m"))
+      .agg(count(lit(1)).as("n"))
+    val sc = spark.sparkContext
+    val (direct, computeJobs) = JobCount.of(sc)(query().collect())
+    assert(computeJobs > 0)
+    val (miss, missJobs) = JobCount.of(sc)(
+      ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L)(query()))
+    assert(missJobs === computeJobs,
+      s"a miss started $missJobs jobs; its compute alone starts $computeJobs")
+    val (missRows, missCollect) = JobCount.of(sc)(miss.collect())
+    assert(missCollect === 0, s"collecting a miss's frame started $missCollect jobs")
+    val (hit, hitJobs) = JobCount.of(sc)(
+      ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L)(sys.error("must not recompute")))
+    val (hitRows, hitCollect) = JobCount.of(sc)(hit.collect())
+    assert(hitJobs === 0 && hitCollect === 0,
+      s"a hit started $hitJobs jobs and its collect $hitCollect")
+    assert(missRows.toSet === direct.toSet && hitRows.toSet === direct.toSet)
+  }
+
+  test("a multi-partition frame ending in orderBy(desc) keeps its order on the miss and the hit") {
+    val dir = root()
+    val key = ResultCache.keyOf("ordered", Nil)
+    def query() = spark.range(0, 500, 1, 8)
+      .select(((col("id") * 7919) % 500).as("k"), (col("id") % 3).as("g"))
+      .orderBy(col("k").desc)
+    val expect = (0L until 500L).reverse
+    val miss = ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L)(query())
+    assert(miss.select("k").as[Long].collect().toSeq === expect)
+    val hit = ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L)(sys.error("must not recompute"))
+    assert(hit.select("k").as[Long].collect().toSeq === expect)
+  }
+
+  test("an older parquet generation and a rows header of another Spark version each recompute, then serve") {
+    val dir = root()
+    val key = ResultCache.keyOf("layouts", Nil)
+    var computes = 0
+    def cached() = ResultCache.getOrCompute(spark, dir, key, ttlMs = 60000L) {
+      computes += 1; Seq(computes.toLong).toDF("k")
+    }
+    assert(cached().as[Long].collect().toSeq === Seq(1L))
+    // the older layout: the rows stored as a data/ parquet directory
+    generations(dir, key).foreach { g =>
+      java.nio.file.Files.delete(g.resolve("rows"))
+      Seq(1L).toDF("k").write.parquet(g.resolve("data").toString)
+    }
+    assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
+      "a generation without a rows file must recompute")
+    assert(cached().as[Long].collect().toSeq === Seq(2L) && computes === 2,
+      "the republished generation serves")
+    // a rows file written by another Spark version: a whole, readable
+    // file whose UnsafeRow layout this version does not vouch for
+    val newest = generations(dir, key).maxBy(_.getFileName.toString)
+    val out = new java.io.DataOutputStream(new java.util.zip.DeflaterOutputStream(
+      java.nio.file.Files.newOutputStream(newest.resolve("rows"))))
+    try { out.writeUTF("0.0.1-other"); out.writeInt(0) } finally out.close()
+    assert(cached().as[Long].collect().toSeq === Seq(3L) && computes === 3,
+      "a rows header naming another Spark version must recompute")
+    assert(cached().as[Long].collect().toSeq === Seq(3L) && computes === 3,
       "the republished generation serves")
   }
 }

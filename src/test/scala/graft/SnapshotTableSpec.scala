@@ -556,6 +556,19 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t).count() === 6)
   }
 
+  test("a partitioned keep-last upsert resolves its affected partitions in one job") {
+    val t = tmpTable("graft_snap_jobs_upsert")
+    SnapshotTable.create(spark, t, seed, Seq("part_col"))
+    val batch = Seq((1L, "a", 2L), (6L, "d", 2L), (7L, "a", 2L)).toDF("k", "part_col", "ord")
+    // one job resolves the touched partitions, then the merge's shuffle
+    // map stage and its write: three in all
+    val (v, n) = JobCount.of(spark.sparkContext)(
+      SnapshotTable.upsertOrCreate(spark, t, batch, Seq("k"), "ord", Seq("part_col")))
+    assert(v === 2L && n === 3, s"upsert started $n jobs")
+    assert(rowsOf(t) === Set((1L, "a", 2L), (2L, "a", 1L), (3L, "b", 1L), (4L, "b", 1L),
+      (5L, "c", 1L), (6L, "d", 2L), (7L, "a", 2L)))
+  }
+
   test("a partitioned table created from an empty frame keeps its partitioning") {
     val t = tmpTable("graft_snap_empty")
     val batch = Seq((1L, "2024-01-01", 1L), (2L, "2024-01-02", 1L)).toDF("k", "dt", "ord")

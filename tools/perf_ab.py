@@ -26,9 +26,18 @@ it adds a verdict by these rules:
               tell a change within the bound from none
   within      none of the above
 
-A gain does not count when the head side failed more operations. The
-script only calls each checkout's perfbench/run.py; it changes nothing
-in either checkout besides what run.py itself writes.
+A gain does not count when the head side failed more operations. If
+either side's untimed run fails or answers wrongly, the script prints
+that checkout's path and the tail of its stderr and exits non-zero
+before any pair runs. The script only calls each checkout's
+perfbench/run.py; it changes nothing in either checkout besides what
+run.py itself writes.
+
+Make each checkout with `git worktree add <dir> <commit>` or
+`git archive <commit> | tar -x -C <dir>`, never by copying a built tree
+(`cp -r`): sbt's incremental-compile analysis keeps absolute paths, so
+a build in the copy can rewrite class files under the original's
+`target/` and break the other side mid-A/B.
 """
 import argparse
 import json
@@ -88,14 +97,20 @@ def verdict(base, head, lower_better, bound, base_failed=0, head_failed=0):
 
 
 def run(checkout, workload, seed, seconds, trace):
+    """One perfbench run: (result dict or None, stderr tail)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines or not lines[-1].startswith("{"):
-        sys.stderr.write(p.stderr[-2000:])
-        return None
-    return json.loads(lines[-1])
+        return None, p.stderr[-2000:]
+    return json.loads(lines[-1]), p.stderr[-2000:]
+
+
+def broken_sides(untimed):
+    """Sides whose untimed run failed or answered wrongly: {side: (checkout, stderr tail)}."""
+    return {side: (checkout, err) for side, (checkout, r, err) in untimed.items()
+            if not (r and r["correct"])}
 
 
 def report(runs, e2e):
@@ -177,6 +192,12 @@ def self_test():
     assert rows[0]["pairs"] == 10 and rows[0]["wins"] == 10 and rows[0]["verdict"] == "gain"
     assert failed == {"base": 0, "head": 0} and attempted == {"base": 100, "head": 100}
     assert rows[0]["base"][0] == statistics.median(base)
+    # a side whose untimed run failed or answered wrongly stops the A/B
+    untimed = {"base": ("/b", None, "NoClassDefFoundError"), "head": ("/h", res(500), "")}
+    assert broken_sides(untimed) == {"base": ("/b", "NoClassDefFoundError")}
+    untimed["head"] = ("/h", dict(res(500), correct=False), "")
+    assert set(broken_sides(untimed)) == {"base", "head"}
+    assert broken_sides({"base": ("/b", res(500), ""), "head": ("/h", res(440), "")}) == {}
     print("perf_ab self-test: ok")
 
 
@@ -202,15 +223,25 @@ def main():
     seconds = args.seconds if args.seconds is not None else cfg["run_seconds"]
     sides = {"base": os.path.abspath(args.base), "head": os.path.abspath(args.head)}
 
+    untimed = {}
     for side in ("base", "head"):
-        r = run(sides[side], args.workload, seeds_of(args.seeds)[0] + 1000, seconds, 0)
+        r, err = run(sides[side], args.workload, seeds_of(args.seeds)[0] + 1000, seconds, 0)
+        untimed[side] = (sides[side], r, err)
         print(f"untimed {side} run: {'ok' if r and r['correct'] else 'FAILED'}", flush=True)
+    broken = broken_sides(untimed)
+    for side, (checkout, err) in broken.items():
+        print(f"{side} checkout {checkout} is broken; its untimed run ended with:\n{err}",
+              file=sys.stderr)
+    if broken:
+        sys.exit(1)
 
     runs = []
     for i, seed in enumerate(seeds_of(args.seeds)):
         pair = {"seed": seed, "first": order(i)[0]}
         for side in order(i):
-            pair[side] = run(sides[side], args.workload, seed, seconds, args.trace)
+            pair[side], err = run(sides[side], args.workload, seed, seconds, args.trace)
+            if not pair[side]:
+                sys.stderr.write(err)
         runs.append(pair)
         cells = []
         for side in ("base", "head"):
